@@ -489,7 +489,13 @@ object FirDotExpr {
     dotChunked(taps.toDoubleArray(), coeffs, chunk)
 
   /** Plain-array form, shared with the streaming envelope operator. */
-  def dotChunked(xs: Array[Double], coeffs: Array[Double], chunk: Int): Double = {
+  def dotChunked(xs: Array[Double], coeffs: Array[Double], chunk: Int): Double =
+    dotChunkedAt(xs, 0, coeffs, chunk)
+
+  /** The same fold over the taps xs(from), …, xs(from + coeffs.length − 1)
+    * in place, so a sliding window needs no per-position array.
+    */
+  def dotChunkedAt(xs: Array[Double], from: Int, coeffs: Array[Double], chunk: Int): Double = {
     var total = 0.0
     var first = true
     var i = 0
@@ -497,7 +503,7 @@ object FirDotExpr {
       val end = math.min(i + chunk, coeffs.length)
       var acc = 0.0
       var j = i
-      while (j < end) { acc += xs(j) * coeffs(j); j += 1 }
+      while (j < end) { acc += xs(from + j) * coeffs(j); j += 1 }
       total = if (first) acc else total + acc
       first = false
       i = end

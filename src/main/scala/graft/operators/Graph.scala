@@ -575,17 +575,19 @@ object Graph {
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .cache()
     // RA contribution 1/deg(z) quantized ON THE MID TABLE (|V| casts,
-    // not |wedges| — guide §2.3) at DECIMAL(18,14): 1/deg ≤ 1 and the
-    // per-pair sum is ≤ n_common ≤ maxDeg·|V| « 10⁴ per group only via
-    // the SUM BUFFER (which widens to (28,14)); each summand ≤ 1 fits
-    // (18,14) exactly, rounding is precision-independent, and the
-    // compact-long Decimal path replaces BigDecimal adds (ProfileGraph:
-    // ~2× on the sum stage). Values bitwise-unchanged.
+    // not |wedges| — guide §2.3) at DECIMAL(18,14): each summand
+    // 1/deg ≤ 1 fits (18,14) exactly, rounding is precision-
+    // independent, and the compact-long Decimal path replaces
+    // BigDecimal adds (ProfileGraph: ~2× on the sum stage). Values
+    // bitwise-unchanged.
     // Round-18 (the q79 long-sum discipline): the wedge-row sum runs
     // on the contribution's UNSCALED LONG (ra × 10^14, still quantized
     // decimal(18,14) HALF_UP on the |V|-row mid table first — same
-    // values). Per-pair sums are ≤ n_common ≤ maxDeg contributions of
-    // ≤ 10^14 each — far from long overflow but possibly above 2^53,
+    // values). The cap bounds each contribution, not their number: a
+    // mid in a wedge has deg ≥ 2, so a per-pair sum is ≤ n_common ·
+    // 10^14/2, and n_common ≤ min(deg(a), deg(b)) is uncapped. The
+    // long holds it up to n_common ≈ 1.8·10^5 (past that, ANSI sum
+    // raises an overflow error); above 2^53 it is not double-exact,
     // so the final double goes through an EXACT decimal rescale
     // (× 1E-14, lossless) and ONE cast — the identical single rounding
     // the old decimal sum's cast performed.
@@ -602,7 +604,7 @@ object Graph {
       .join(mid, "z")
     wedges.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_common"),
-        // decimal(23,0): wide enough for the ≤ maxDeg·10^14 sum, and
+        // decimal(23,0): wide enough for any long sum, and
         // 23+14+1 = 38 keeps the × 1E-14 product inside precision 38 —
         // one more digit would trip Spark's precision-loss adjustment
         // and silently round the scale from 14 to 9
@@ -928,7 +930,9 @@ object Graph {
     // boxing. Bitwise-unchanged scores:
     //  - a per-key raw-mass sum Σ score_l is bounded by the scaled
     //    total mass ~10^14 (each c/p receives ≤ the whole normalized
-    //    mass 1), so the long sum can't overflow;
+    //    mass 1) — except the first hub half-step, whose auth mass is
+    //    the unnormalized 1 per part: deg(c) × 10^14, which overflows
+    //    the long only past ~92,000 parts (an ANSI error, not a wrap);
     //  - the raw mass converts back to an EXACT decimal on the
     //    |V|-row aggregate output (× the exact 1E-14 literal — a
     //    lossless rescale, no division), so the normalizing total and
@@ -939,10 +943,15 @@ object Graph {
     val Unscale = new java.math.BigDecimal("1E-14")
     // exact long ↔ decimal rescales (both multiplies are exact: the
     // product of an integer-valued decimal and 1E-14 has ≤ 14
-    // fractional digits; a (18,14) decimal × 10^14 is integral)
+    // fractional digits; a (18,14) decimal × 10^14 is integral). The
+    // first hub half-step sums the UNNORMALIZED initial mass, deg(c) ×
+    // 10^14, which passes 10^18 once a customer has 10^4 parts, so the
+    // raw sum widens to decimal(23,0) (any long fits), as in
+    // linkPrediction; Decimal.toDouble rounds the exact value, so the
+    // wider type changes no score.
     def toL(c: org.apache.spark.sql.Column) = (c * lit(Scale)).cast("long")
     def toDec(c: org.apache.spark.sql.Column) =
-      (c.cast("decimal(18,0)") * lit(Unscale))
+      (c.cast("decimal(23,0)") * lit(Unscale))
     var auth = eByP.select(col("p")).distinct()
       .withColumn("al", toL(lit(1).cast("decimal(18,14)")))
     var hub: DataFrame = null

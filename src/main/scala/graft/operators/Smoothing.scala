@@ -8,11 +8,12 @@ import graft.functions.SavitzkyGolay
 /** O3 — Savitzky-Golay smoothing with the reference's block-repeat edge
   * padding (`/root/reference/peak_detection.py:172-197`, SURVEY §2.3).
   *
-  * Spark-first design: the pad is three narrow projections unioned
-  * (positions never collide), the 51-tap FIR is one window expression
-  * over `(experiment_id, channel) ORDER BY pos` — every downstream
-  * operator shares that partitioning, so Catalyst plans a single
-  * Exchange+Sort for the whole signal pipeline. No UDF, no RDD.
+  * Spark-first design: the pad is one narrow explode (positions never
+  * collide), the 51-tap FIR is one window expression over
+  * `(experiment_id, channel) ORDER BY pos`. The per-channel count and
+  * the FIR window share one channel-hash Exchange, and Envelopes groups
+  * by the same key columns, so smooth + envelopes plan exactly one
+  * Exchange (pinned in EnvelopesEdgeSpec). No UDF, no RDD.
   */
 object Smoothing {
 
@@ -58,27 +59,6 @@ object Smoothing {
       when(i >= n - pad, array((i + 2 * pad).cast("bigint"))).otherwise(none)
     )
     df.withColumn("_pos", explode(positions))
-  }
-
-  /** `mode='nearest'` edge handling for the SG convolution: extend the
-    * padded series with `k` replicas of its first/last value so every
-    * evaluated position has a full window (scipy pads the input with the
-    * edge value; clamping tap indices ≡ replicating edge rows). Series is
-    * at `_pos` in [0, len); `lenCol` gives per-channel length. Same
-    * explode-not-union construction as [[blockRepeatPad]].
-    */
-  def nearestExtend(padded: DataFrame, lenCol: String, k: Int): DataFrame = {
-    val p = col("_pos")
-    val len = col(lenCol)
-    val none = array().cast("array<bigint>")
-    val positions = concat(
-      when(p === 0, sequence(lit(-k).cast("bigint"), lit(-1).cast("bigint")))
-        .otherwise(none),
-      array(p.cast("bigint")),
-      when(p === len - 1, sequence(len.cast("bigint"), (len + k - 1).cast("bigint")))
-        .otherwise(none)
-    )
-    padded.withColumn("_pos", explode(positions))
   }
 
   /** Adds `y_smooth` (SG window/polyorder over block-repeat-padded `y`,

@@ -255,6 +255,39 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("hits: a customer with 10^4 + 1 parts does not overflow the first half-step") {
+    // The first hub mass is unnormalized: c1's raw mass is 10001 parts
+    // × 10^14 scaled units, past decimal(18,0)'s 10^18 − 1.
+    val dir = java.nio.file.Files.createTempDirectory("hits-hub").toString
+    val parts = 10001
+    try {
+      Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      ((1 to parts).map(p => (10L, p.toLong)) :+ ((20L, 1L)))
+        .toDF("l_orderkey", "l_partkey")
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      // serial model: h = norm(A·a), a = norm(Aᵀ·h), a0 = 1, two rounds
+      val edges = (1 to parts).map(p => (1L, p.toLong)) :+ ((2L, 1L))
+      def norm(m: Map[Long, Double]) = { val t = m.values.sum; m.map { case (k, v) => k -> v / t } }
+      var auth = (1 to parts).map(_.toLong -> 1.0).toMap
+      var hub = Map.empty[Long, Double]
+      for (_ <- 1 to 2) {
+        hub = norm(edges.groupBy(_._1).map { case (c, es) => c -> es.map(e => auth(e._2)).sum })
+        auth = norm(edges.groupBy(_._2).map { case (p, es) => p -> es.map(e => hub(e._1)).sum })
+      }
+      val out = Graph.hits(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(out.size === 2 + parts)
+      hub.foreach { case (c, v) => assert(math.abs(out(("hub", c)) - v) < 1e-9) }
+      auth.foreach { case (p, v) => assert(math.abs(out(("auth", p)) - v) < 1e-9) }
+      val smj = Graph.hits(spark, dir, broadcastScores = Some(false)).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(smj === out)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("modularity: two disjoint triangles score 0.25 each (total 0.5)") {
     val dir = java.nio.file.Files.createTempDirectory("modul").toString
     try {
