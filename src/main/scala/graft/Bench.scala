@@ -63,33 +63,7 @@ object Bench {
     }
 
   private def newSession(cpus: String, sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // MEASUREMENT FIX, stated loudly (round 18; guide §1.2 step 3,
-      // after the algorithm work): the interleaved two-pass design
-      // exists so the steady pass excludes one-time codegen/JIT
-      // inflation (scaladoc above) — but Spark's generated-class cache
-      // holds only 100 entries (spark.sql.codegen.cache.maxEntries
-      // default) and a 40-query chunk generates far more stages
-      // between a query's two passes, so every heavy query's steady
-      // pass silently re-generated, re-loaded and re-JIT-compiled all
-      // of its stages: measured q79 29.0 s task CPU after a 12-query
-      // churn vs 9.7 s immediately re-run (OPTIMIZATION_r18.md,
-      // diagnosis of the round-17 verdict's #2). A multi-query session
-      // is exactly the workload a bigger codegen cache exists for;
-      // 4096 entries hold the whole chunk's stages so "steady"
-      // measures steady-state code. Parameterised; the A/B against
-      // the 100-entry default is in OPTIMIZATION_r18.md.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Warm up with the shapes real queries use — parquet scan,
     // shuffle exchange, hash agg, broadcast join, window — not just a
     // range().sum(). Round 4 showed each chunk's FIRST queries paying

@@ -18,15 +18,6 @@ object SparkEntry {
 
   private def sig(s: SparkSession): DataFrame = SignalFixture.signal(s)
 
-  /** Release the checkpoint blocks behind an evicted spine memo entry
-    * (the Graph.releaseLabels discipline). */
-  private def releaseSpine(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Throwable => () }
-
   /** Process-level memo of the signal spine (round-17 optimization,
     * the Graph.lpMemo / edgeMemo discipline): enriched + detected are
     * pure functions of the committed fixture bits, every signal/beat
@@ -43,7 +34,7 @@ object SparkEntry {
     */
   private val spineMemo =
     new graft.operators.GraftMemo[(String, String, Long), DataFrame](
-      cap = 4, release = releaseSpine,
+      cap = 4, release = graft.operators.CheckpointBlocks.release,
       dead = df => df.sparkSession.sparkContext.isStopped)
 
   /** Test hook: drop memoized spine tables, releasing their blocks. */

@@ -251,8 +251,8 @@ object Graph {
     * total (o, then (a,b)) and no join. Pair multiset is identical:
     * per order, the sorted distinct part list's a<b pairs are the
     * self-join's (x.p < y.p) matches over distinct (o,p).
-    * ProfileGraph at sf0.1: join form 3.6 s task CPU steady / 6.2
-    * cold, this form 2.9 / 3.0.
+    * Recorded at sf0.1 (OPTIMIZATION_r17.md C3): join form 3.6 s task
+    * CPU steady / 6.2 cold, this form 2.9 / 3.0.
     */
   private def copurchaseEdgesRaw(s: SparkSession, dir: String,
                                  minSupport: Int): DataFrame =
@@ -289,7 +289,7 @@ object Graph {
     */
   private val edgeMemo =
     new GraftMemo[(String, String, Int, Long), DataFrame](
-      cap = 8, release = releaseLabels,
+      cap = 8, release = CheckpointBlocks.release,
       dead = df => df.sparkSession.sparkContext.isStopped)
 
   /** Test hook: drop memoized co-purchase edge tables, releasing
@@ -355,22 +355,8 @@ object Graph {
     // ADVICE) — a SparkSession reference in the key pinned stopped
     // sessions from GC.
     new GraftMemo[(String, String, Int, Int, Long), DataFrame](
-      cap = 8, release = releaseLabels,
+      cap = 8, release = CheckpointBlocks.release,
       dead = df => df.sparkSession.sparkContext.isStopped)
-
-  /** Release the block-manager residue behind a memoized label table:
-    * a localCheckpoint'd Dataset is a LogicalRDD over a persisted RDD,
-    * and dropping the DataFrame reference alone leaves the checkpoint
-    * blocks to eventual GC + ContextCleaner (round-10 ADVICE). Best
-    * effort: a release failure degrades to the old GC path, never to
-    * an error on the query path.
-    */
-  private def releaseLabels(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Throwable => () }
 
   /** Fingerprint of the lineitem parquet under `dir` from filesystem
     * METADATA only (file names, lengths, mtimes — no scan): part of the
@@ -430,7 +416,7 @@ object Graph {
     * instead of re-deriving the co-purchase graph). Returns an EAGER
     * localCheckpoint'd label table with its internal edge cache
     * already released; the caller owns the checkpoint blocks (see
-    * releaseLabels).
+    * CheckpointBlocks).
     */
   private def lpFrom(e: DataFrame, iters: Int,
                      prePartition: Boolean): DataFrame = {
@@ -578,8 +564,8 @@ object Graph {
     // not |wedges| — guide §2.3) at DECIMAL(18,14): each summand
     // 1/deg ≤ 1 fits (18,14) exactly, rounding is precision-
     // independent, and the compact-long Decimal path replaces
-    // BigDecimal adds (ProfileGraph: ~2× on the sum stage). Values
-    // bitwise-unchanged.
+    // BigDecimal adds (~2× on the sum stage, recorded in
+    // OPTIMIZATION_r17.md C5). Values bitwise-unchanged.
     // Round-18 (the q79 long-sum discipline): the wedge-row sum runs
     // on the contribution's UNSCALED LONG (ra × 10^14, still quantized
     // decimal(18,14) HALF_UP on the |V|-row mid table first — same
@@ -814,9 +800,9 @@ object Graph {
       //    per-dst partial sum are bounded by the total rank mass 1,
       //    so 4 integer digits can never overflow, rounding at scale
       //    14 is precision-independent, and precision ≤ 18 keeps
-      //    Spark's Decimal on the compact-long fast path — ProfileGraph
-      //    measured one iteration's sum at 9.7 s task CPU under
-      //    (28,14) vs 5.0 s under (18,14) at sf0.1.
+      //    Spark's Decimal on the compact-long fast path — one
+      //    iteration's sum measured 9.7 s task CPU under (28,14) vs
+      //    5.0 s under (18,14) at sf0.1 (OPTIMIZATION_r17.md C5).
       // Round-18 (guide §1.2 per-task work / §2.3 narrower types): the
       // |E|-row fan-out and per-dst sum now run on the contribution's
       // UNSCALED LONG (c × 10^14) instead of Decimal — a primitive
@@ -921,8 +907,8 @@ object Graph {
     // precision-independent, so every iteration's state is
     // bitwise-identical to the old (28,14) form — but precision ≤ 18
     // keeps Decimal compact (long-backed), turning the per-half-step
-    // mass sums from BigDecimal adds into long adds (ProfileGraph
-    // measured ~2× on the q79-shaped decimal sum stage).
+    // mass sums from BigDecimal adds into long adds (~2× on the
+    // q79-shaped decimal sum stage, recorded in OPTIMIZATION_r17.md C5).
     // Round-18 (guide §1.2/§2.3 — the q79 long-sum discipline): the
     // score state CROSSING the |E|-row half-step join/sum is now the
     // UNSCALED LONG of that decimal (score × 10^14) — primitive long
@@ -971,7 +957,7 @@ object Graph {
         val hraw = (if (bcast) eByC.join(broadcast(auth), "p")
           else eByP.join(auth, "p")).groupBy(col("c"))
           .agg(sum(col("al")).as("hrl")).localCheckpoint()
-        if (lastH != null) releaseLabels(lastH)
+        if (lastH != null) CheckpointBlocks.release(lastH)
         lastH = hraw
         val hrd = hraw.select(col("c"), toDec(col("hrl")).as("hr"))
         hub = hrd.crossJoin(broadcast(hrd.agg(sum(col("hr")).as("sh"))))
@@ -981,7 +967,7 @@ object Graph {
         val araw = (if (bcast) eByP.join(broadcast(hub), "c")
           else eByC.join(hub, "c")).groupBy(col("p"))
           .agg(sum(col("hl")).as("arl")).localCheckpoint()
-        if (lastA != null) releaseLabels(lastA)
+        if (lastA != null) CheckpointBlocks.release(lastA)
         lastA = araw
         val ard = araw.select(col("p"), toDec(col("arl")).as("ar"))
         auth = ard.crossJoin(broadcast(ard.agg(sum(col("ar")).as("sa"))))
@@ -1004,8 +990,8 @@ object Graph {
       eByC.unpersist(blocking = false)
       eByP.unpersist(blocking = false)
       if (!ok) {
-        if (lastH != null) releaseLabels(lastH)
-        if (lastA != null) releaseLabels(lastA)
+        if (lastH != null) CheckpointBlocks.release(lastH)
+        if (lastA != null) CheckpointBlocks.release(lastA)
       }
     }
     // the LAST hraw/araw checkpoints are ownerless once the returned

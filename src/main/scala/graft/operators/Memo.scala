@@ -87,6 +87,23 @@ private[graft] final class GraftMemo[K, V](cap: Int,
   }
 }
 
+/** Releases the block-manager residue behind a localCheckpoint'd
+  * DataFrame: it is a LogicalRDD over a persisted RDD, and dropping the
+  * DataFrame reference alone leaves the checkpoint blocks to eventual
+  * GC + ContextCleaner (round-10 ADVICE). The memos pass it as their
+  * eviction `release`; the BPE and HITS loops call it on each
+  * superseded round. Best effort: a release failure degrades to the
+  * old GC path, never to an error on the query path.
+  */
+private[graft] object CheckpointBlocks {
+  def release(df: DataFrame): Unit =
+    try df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    } catch { case _: Throwable => () }
+}
+
 /** Release-after-first-materialization for FINGERPRINT-BYPASS results
   * (round-12 ADVICE): when a corpus fingerprint is unavailable, the
   * memos compute without caching — but the computed result is a

@@ -816,17 +816,6 @@ object TextAnalysis {
       col("n_pair").desc, col("pair"))
   }
 
-  /** Release a localCheckpoint'd round table's storage (same shim-free
-    * technique as Graph.releaseLabels): best effort — a failure
-    * degrades to the ContextCleaner path, never to a query error.
-    */
-  private def releaseRound(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Throwable => () }
-
   /** Q277 — the FULL BPE trainer (Sennrich et al., ACL 2016 §3.2):
     * `merges` rounds of (pair-count aggregate → argmax merge →
     * greedy re-segmentation), where Q122 computed merge-iteration 1
@@ -886,7 +875,7 @@ object TextAnalysis {
     // entries (shards "all"/"existing"/"incoming"), and the bound must
     // hold a full dir's working set plus one spec temp-dir without
     // thrashing the bench's hot entries
-    cap = 6, release = v => releaseRound(v._1),
+    cap = 6, release = v => CheckpointBlocks.release(v._1),
     dead = v => v._1.sparkSession.sparkContext.isStopped)
 
   /** documents.parquet fingerprint from filesystem METADATA only —
@@ -956,7 +945,7 @@ object TextAnalysis {
       : Seq[(Int, String, String, String, Long)] = {
     def compute = {
       val (seg, rows) = trainSeg(existing, merges)
-      releaseRound(seg) // only the merge LIST is frozen and shipped
+      CheckpointBlocks.release(seg) // only the merge LIST is frozen and shipped
       rows
     }
     fingerprint match {
@@ -1015,7 +1004,7 @@ object TextAnalysis {
   /** The shared training loop behind Q277/Q279/Q283: runs `merges`
     * rounds over the given documents slice and returns BOTH the final
     * localCheckpoint'd segmentation (the caller owns its blocks — see
-    * releaseRound) and the learned merge rows (round, left, right,
+    * CheckpointBlocks) and the learned merge rows (round, left, right,
     * merged, count).
     */
   private def trainSeg(src: DataFrame, merges: Int)
@@ -1040,7 +1029,7 @@ object TextAnalysis {
         out += ((r, bl, br, bl + br, best(0).getLong(2)))
         val prev = seg
         seg = mergePass(seg, bl, br).localCheckpoint()
-        releaseRound(prev)
+        CheckpointBlocks.release(prev)
         r += 1
       }
     }
@@ -1111,7 +1100,7 @@ object TextAnalysis {
     merges.foreach { case (bl, br) =>
       val prev = seg
       seg = mergePass(seg, bl, br).localCheckpoint()
-      releaseRound(prev)
+      CheckpointBlocks.release(prev)
     }
     seg
   }
@@ -1124,7 +1113,7 @@ object TextAnalysis {
     val (trainedSegDf, learned) = trainSeg(existing, merges)
     // only the merge LIST is frozen and shipped; the training
     // segmentation is not needed downstream — release it now
-    releaseRound(trainedSegDf)
+    CheckpointBlocks.release(trainedSegDf)
     fertilityOf(incoming, replaySeg(incoming, learned.map(m => (m._2, m._3))))
   }
 

@@ -87,12 +87,7 @@ object SignalFixture {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-fixture-gen")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("4")
     ensure(spark)
     println(s"fixtures at $fixtureDir")
     spark.stop()

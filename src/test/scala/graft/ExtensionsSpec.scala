@@ -114,4 +114,14 @@ class ExtensionsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === want, "q154 must return exactly q70's pairs")
   }
+
+  test("the shared test session comes from GraftSession: extensions and codegen cache") {
+    assert(spark.sessionState.planner.strategies
+      .contains(graft.plans.AsofJoinStrategy))
+    assert(spark.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(EditDistancePrefilter))
+    // Spark's default is 100 entries; Bench's steady pass needs 4096
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+  }
 }

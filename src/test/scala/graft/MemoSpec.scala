@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CheckpointOrphans, GraftMemo}
+import graft.operators.{CheckpointOrphans, GraftMemo, Graph}
 
 /** Unit pins for the round-13 memo rework (round-12 ADVICE):
   * compute-outside-lock, LRU release discipline, and the
@@ -119,5 +119,34 @@ class MemoSpec extends SparkSpec {
       assert(memo.get("slow") { computed.incrementAndGet(); 99 } === 1)
       assert(computed.get() === 0)
     } finally pool.shutdownNow()
+  }
+
+  test("clearSpineMemo, clearEdgeMemo and clearLpMemo release every block they hold") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    SparkEntry.clearSpineMemo(); Graph.clearEdgeMemo(); Graph.clearLpMemo()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def added: Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    // q7b memoizes the enriched and the detected spine tables
+    SparkEntry.queries("q7b_peaks")(spark, "").collect()
+    assert(added.size === 2, "the spine memo must hold both tables")
+    SparkEntry.clearSpineMemo()
+    assert(added.isEmpty, "clearSpineMemo must release every spine block")
+    val dir = java.nio.file.Files.createTempDirectory("memoclear").toString
+    try {
+      // parts 1 and 2 share two orders: one edge at the support floor
+      Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L)).toDF("l_orderkey", "l_partkey")
+        .write.parquet(s"$dir/lineitem.parquet")
+      // LP memoizes its labels and the edge table it was derived from
+      Graph.lpCommunities(spark, dir).collect()
+      assert(added.size === 2, "the edge and LP memos must hold one table each")
+      Graph.clearEdgeMemo()
+      assert(added.size === 1, "clearEdgeMemo must release the edge table")
+      Graph.clearLpMemo()
+      assert(added.isEmpty, "clearLpMemo must release the label table")
+    } finally {
+      Graph.clearEdgeMemo(); Graph.clearLpMemo()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }
