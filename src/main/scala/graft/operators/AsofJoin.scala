@@ -92,10 +92,7 @@ object AsofJoin {
     */
   private def clickSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsn =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else expr("unix_micros(ts)")
+    val tsn = Relational.tsMicros(ev)
     val base = ev.select(col("event_id"), col("user_id"), tsn.as("tsn"),
       col("event_type"), col("value"))
     val l = base.filter(col("event_type") =!= "click")

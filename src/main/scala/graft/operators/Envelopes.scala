@@ -112,11 +112,7 @@ object Envelopes {
     def sign(i: Int): Int =
       if (i == 0 || i == n - 1 || byIdx(i - 1).isNullAt(vi) || byIdx(i).isNullAt(vi) ||
           byIdx(i + 1).isNullAt(vi)) 0
-      else {
-        val a = compareDoubles(v(i), v(i - 1))
-        val z = compareDoubles(v(i), v(i + 1))
-        if (a < 0 && z < 0) -1 else if (a > 0 && z > 0) 1 else 0
-      }
+      else mark(v, i)
     val marks = Array.tabulate(n)(sign)
     val plen = m + 2 * pad
     // padded[j] = floor[src(j)] (block repeat); taps clamp to [0, plen)
@@ -140,12 +136,21 @@ object Envelopes {
     }
   }
 
+  /** The mark of v(i), 0 < i < v.length − 1: −1 when it is below both
+    * neighbours, +1 when it is above both, else 0.
+    */
+  private[graft] def mark(v: Array[Double], i: Int): Int = {
+    val a = compareDoubles(v(i), v(i - 1))
+    val z = compareDoubles(v(i), v(i + 1))
+    if (a < 0 && z < 0) -1 else if (a > 0 && z > 0) 1 else 0
+  }
+
   /** out[i], i ∈ [0, m): the extremum of v over the positions j ∈
     * [i+1, i+w] whose mark equals `want` (−1 minima / +1 maxima), NaN
     * when there is none. A monotonic deque of candidate positions keeps
     * it O(n); strict popping keeps the earliest of equal values.
     */
-  private def frameExtrema(v: Array[Double], marks: Array[Int], want: Int,
+  private[graft] def frameExtrema(v: Array[Double], marks: Array[Int], want: Int,
       m: Int, w: Int): Array[Double] = {
     val out = new Array[Double](m)
     val dq = new Array[Int](v.length)

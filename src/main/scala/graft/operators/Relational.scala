@@ -194,7 +194,7 @@ object Relational {
     * `nanosAsLong`) or as a genuine TIMESTAMP (micros) — both paths are
     * integer-exact, matching DuckDB's `epoch_us(ts)`.
     */
-  private def tsMicros(ev: DataFrame): Column =
+  private[graft] def tsMicros(ev: DataFrame): Column =
     if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       expr("ts div 1000")
     else unix_micros(col("ts"))

@@ -86,29 +86,6 @@ object Smoothing {
       .drop("_taps", "_pos", "_n")
   }
 
-  /** Q171 — rolling-median despeckle: per channel, the median of `y`
-    * over the `±half` sample frame (shrinking at the channel edges —
-    * the first sample's frame is `[0, half]`, the standard
-    * streaming-safe edge rule). The ORDER-STATISTIC counterpart of the
-    * SG smoother: a linear FIR spreads an impulse spike across the
-    * whole window, the median REMOVES it while leaving monotone ramps
-    * bit-identical — which is why despeckle-then-smooth is the classic
-    * front of a peak-detection chain on raw sensor feeds.
-    *
-    * Exactness: the sorted-frame midpoint is picked by index; an
-    * even frame (edge-only here) averages the two middles as ONE
-    * `(a + b) / 2.0` — the oracle computes the identical expression
-    * on DuckDB's `list_sort`, so no quantile-interpolation formula
-    * divergence can enter.
-    *
-    * Scale shape: one channel-keyed exchange (shared with every other
-    * per-channel window in the chain), a BOUNDED ±half frame per row
-    * (O(w) state — never a per-channel sort of the full extent beyond
-    * the one the window ordering already requires), and a narrow
-    * projection out. At 100 TB the frame state is 5 doubles per row in
-    * flight — the despeckle is shuffle-free when the data is already
-    * channel-partitioned.
-    */
   /** Q181 — half-life EWMA: exponentially-weighted moving average with
     * decay λ = 1/2, truncated at `lags` taps and renormalized by the
     * AVAILABLE weight mass (pandas `ewm(adjust=True)` semantics, so the
@@ -138,6 +115,29 @@ object Smoothing {
       (num / den).as("ewma"))
   }
 
+  /** Q171 — rolling-median despeckle: per channel, the median of `y`
+    * over the `±half` sample frame (shrinking at the channel edges —
+    * the first sample's frame is `[0, half]`, the standard
+    * streaming-safe edge rule). The ORDER-STATISTIC counterpart of the
+    * SG smoother: a linear FIR spreads an impulse spike across the
+    * whole window, the median REMOVES it while leaving monotone ramps
+    * bit-identical — which is why despeckle-then-smooth is the classic
+    * front of a peak-detection chain on raw sensor feeds.
+    *
+    * Exactness: the sorted-frame midpoint is picked by index; an
+    * even frame (edge-only here) averages the two middles as ONE
+    * `(a + b) / 2.0` — the oracle computes the identical expression
+    * on DuckDB's `list_sort`, so no quantile-interpolation formula
+    * divergence can enter.
+    *
+    * Scale shape: one channel-keyed exchange (shared with every other
+    * per-channel window in the chain), a BOUNDED ±half frame per row
+    * (O(w) state — never a per-channel sort of the full extent beyond
+    * the one the window ordering already requires), and a narrow
+    * projection out. At 100 TB the frame state is 5 doubles per row in
+    * flight — the despeckle is shuffle-free when the data is already
+    * channel-partitioned.
+    */
   def rollingMedian(sig: DataFrame, half: Int = 2): DataFrame = {
     require(half >= 1, s"rolling median needs a frame (half >= 1), got $half")
     val wfr = Window.partitionBy(keys: _*)

@@ -1,26 +1,40 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.SignalRow
-import graft.functions.SavitzkyGolay
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import graft.{PeakConfig, SignalRow}
+import graft.functions.{FirDotExpr, SavitzkyGolay}
+import graft.operators.Envelopes
+import graft.operators.Relational.tsMicros
+import graft.operators.Smoothing.dotChunk
 
-/** M6 — Structured Streaming variants of the signal pipeline (SURVEY
-  * §2.8: the reference is batch-only, so this surface defines its own
-  * contract and tests it against the batch operators).
+/** M6 — Structured Streaming variants of the pipeline (SURVEY §2.8: the
+  * reference is batch-only, so this surface defines its own contract
+  * and tests it against the batch operators).
   *
-  * Contract for the incremental smoother: samples arrive per channel
-  * in index order and dense (device streams are; out-of-order rows
-  * *within* a micro-batch are sorted, later gaps are skipped rather
-  * than filled). A centered 51-tap FIR needs 25 future samples, so
-  * emission trails arrival by exactly 25 samples and edge positions
-  * (the batch pad region) are never emitted — interior values equal
-  * the batch operator bitwise, which is what StreamingSpec asserts.
+  * The incremental signal spine — smoothing, rule-1 candidates and
+  * envelopes — is one [[spine]] step per channel and micro-batch over a
+  * [[ChannelTail]] state: the channel's first 25 raw values (the
+  * block-repeat pad) and its last `keep` raw values. The step
+  * re-smooths that window with the batch FIR
+  * ([[FirDotExpr.dotChunkedAt]]), and the envelope operator runs the
+  * batch kernel's own `Envelopes.mark` and `Envelopes.frameExtrema`
+  * over it, so the spine math exists once and every emitted value
+  * equals the batch operator bitwise (StreamingSpec asserts it).
+  * Emission trails arrival by the operator's dependency cone; positions
+  * whose batch value depends on the channel's tail pad, which an
+  * unbounded stream cannot know, are never emitted.
   *
-  * At scale: state is one 51-double ring per channel — O(channels)
-  * state total, the shuffle key is the channel (same partitioning as
-  * the batch pipeline), and each micro-batch does O(new samples) work.
+  * Gap contract: per channel, samples arrive dense and in index order
+  * across micro-batches (rows within one micro-batch may come in any
+  * order). A sample already consumed — an at-least-once replay — is
+  * dropped; a sample beyond the next owed index fails the query with
+  * an error naming the channel and both indices.
+  *
+  * At scale: state is `keep + 25` doubles per channel, the shuffle key
+  * is the channel (the batch pipeline's partitioning), and a
+  * micro-batch costs O(keep + new samples) per channel.
   */
 object StreamingOps {
 
@@ -28,17 +42,6 @@ object StreamingOps {
   case class SmoothOut(experiment_id: String, channel: Int,
                        sample_idx: Long, y_smooth: Double)
 
-  /** Per-channel FIR state: index of the first buffered sample and up
-    * to `window` buffered values.
-    */
-  case class BufState(firstIdx: Long, buf: Seq[Double])
-
-  private lazy val coeffs51 = SavitzkyGolay.coeffs(51, 7)
-
-  /** The per-group incremental FIR step — shared by every micro-batch.
-    * Emits one smoothed value per sample once the sample has 25
-    * successors buffered.
-    */
   /** Feeds `data` to a MemoryStream as `nBatches` micro-batches, each
     * split across `blocks` addData calls. Batch BOUNDARIES (and so
     * results) are identical to a single addData per batch — only the
@@ -68,46 +71,72 @@ object StreamingOps {
     }
   }
 
-  private def step(window: Int)(
-      key: (String, Int), rows: Iterator[SignalRow],
-      state: GroupState[BufState]): Iterator[SmoothOut] = {
-    val half = window / 2
-    val c = coeffs51
-    val sorted = rows.toArray.sortBy(_.sample_idx)
-    var (firstIdx, buf) = state.getOption
-      .map(s => (s.firstIdx, s.buf.toVector))
-      .getOrElse {
-        val start = if (sorted.nonEmpty) sorted.head.sample_idx else 0L
-        (start, Vector.empty[Double])
-      }
-    val out = Vector.newBuilder[SmoothOut]
-    sorted.foreach { r =>
-      // dense in-order contract: drop stale/duplicate rows, skip gaps
-      if (r.sample_idx == firstIdx + buf.size) {
-        buf = buf :+ r.y
-        if (buf.size == window) {
-          var acc = 0.0
-          var j = 0
-          while (j < window) { acc += c(j) * buf(j); j += 1 }
-          out += SmoothOut(key._1, key._2, firstIdx + half, acc)
-          buf = buf.tail
-          firstIdx += 1
-        }
-      }
-    }
-    state.update(BufState(firstIdx, buf))
-    out.result().iterator
-  }
-
-  /** Incremental Savitzky-Golay smoothing of a (possibly streaming)
-    * Dataset[SignalRow], keyed by channel.
+  /** Per-channel state of the incremental spine operators: the
+    * channel's first index `start`, its first 25 raw values `head` (the
+    * block-repeat pad), its last `keep` raw values `tail`, and the
+    * `next` index owed. At most `keep + 25` doubles.
     */
-  def incrementalSmooth(rows: Dataset[SignalRow], window: Int = 51): Dataset[SmoothOut] = {
+  case class ChannelTail(start: Long, head: Seq[Double], tail: Seq[Double], next: Long)
+
+  private val cfg = PeakConfig()
+  private val half = cfg.smoothWindow / 2 // 25: the pad and the FIR reach
+  private lazy val coeffs51 = SavitzkyGolay.coeffs(cfg.smoothWindow, cfg.smoothPolyorder)
+
+  /** `rows` keyed by channel, one step per channel and micro-batch.
+    * The step appends the dense in-order rows, re-smooths the retained
+    * raw window (prefixed by `head`, the block-repeat pad, while it
+    * still starts at `start`) and keeps its last `keep` values.
+    * `emit(key, sm, at, ps)` gets the smoothed window `sm`, whose first
+    * value is at index `at`, and the positions `ps` = [max(start + lo,
+    * previous next − lag), next − lag) now owed; `keep` covers what
+    * `emit` reads behind the first of them.
+    */
+  private def spine[O: Encoder](rows: Dataset[SignalRow], lo: Int, lag: Int, keep: Int)(
+      emit: ((String, Int), Array[Double], Long, Iterator[Long]) => Iterator[O]): Dataset[O] = {
     import rows.sparkSession.implicits._
     rows
       .groupByKey(r => (r.experiment_id, r.channel))
-      .flatMapGroupsWithState[BufState, SmoothOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(step(window))
+      .flatMapGroupsWithState[ChannelTail, O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) { (key, it, state) =>
+        val sorted = it.toArray.sortBy(_.sample_idx)
+        val st = state.getOption.getOrElse {
+          val start = if (sorted.nonEmpty) sorted.head.sample_idx else 0L
+          ChannelTail(start, Vector.empty, Vector.empty, start)
+        }
+        val fresh = Array.newBuilder[Double]
+        var next = st.next
+        sorted.foreach { r =>
+          if (r.sample_idx > next)
+            throw new IllegalArgumentException(
+              s"stream gap in channel (experiment_id=${key._1}, channel=${key._2}): " +
+                s"expected sample_idx $next, got ${r.sample_idx}")
+          if (r.sample_idx == next) { fresh += r.y; next += 1 } // else a replay: dropped
+        }
+        val raw = st.tail.toArray ++ fresh.result()
+        val atStart = next - raw.length == st.start
+        val head = if (atStart) raw.take(half).toVector else st.head
+        state.update(ChannelTail(st.start, head, raw.takeRight(keep).toVector, next))
+        val from = math.max(st.start + lo, st.next - lag)
+        if (from >= next - lag) Iterator.empty
+        else {
+          val win = if (atStart) head.toArray ++ raw else raw
+          val sm = Array.tabulate(win.length - 2 * half)(
+            FirDotExpr.dotChunkedAt(win, _, coeffs51, dotChunk))
+          emit(key, sm, next - half - sm.length, (from until next - lag).iterator)
+        }
+      }
+  }
+
+  /** Incremental Savitzky-Golay smoothing of a (possibly streaming)
+    * Dataset[SignalRow], keyed by channel: the batch `y_smooth` of every
+    * position from `start + 25` on, emitted once its 25 successors have
+    * arrived. State: 75 doubles per channel (`keep` 50 + 25).
+    */
+  def incrementalSmooth(rows: Dataset[SignalRow]): Dataset[SmoothOut] = {
+    import rows.sparkSession.implicits._
+    spine(rows, lo = half, lag = half, keep = 2 * half) { (key, sm, at, ps) =>
+      ps.map(p => SmoothOut(key._1, key._2, p, sm((p - at).toInt)))
+    }
   }
 
   /** Tumbling-window event rollup with a watermark — works unchanged
@@ -156,10 +185,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(String, Long)].collect() // fixture feed only
     val sentinel = ("__sentinel__",
@@ -186,212 +212,68 @@ object StreamingOps {
                     baseline: Option[Double], ceiling: Option[Double],
                     diastolic: Option[Double])
 
-  /** Full per-channel envelope state. Doubles use NaN as the internal
-    * null sentinel (converted to Option at emission).
-    *
-    *  - `prefix`   first 25 raw samples (the block-repeat pad source)
-    *  - `fir`      51-tap ring over the PADDED series
-    *  - `rawSeen`  raw samples consumed (dense contract)
-    *  - `sm`       smooth ring (valley/peak marking + 350-frames)
-    *  - `smFirst`  original index of sm.head
-    *  - `vv`/`pv`  valley/peak value rings (NaN where not an extremum),
-    *               aligned: vv(i) marks smooth position vvFirst + i
-    *  - `fl`/`cl`  floor/ceiling raw-envelope rings (≤ 301)
-    *  - `flFirst`  frame-start index of fl.head
-    */
-  case class EnvState(prefix: Seq[Double], fir: Seq[Double], rawSeen: Long,
-                      sm: Seq[Double], smFirst: Long,
-                      vv: Seq[Double], pv: Seq[Double], vvFirst: Long,
-                      fl: Seq[Double], cl: Seq[Double], flFirst: Long)
-
-  private lazy val coeffs301 = SavitzkyGolay.coeffs(301, 3)
-
   /** Streaming O4/O5/O6: incremental baseline/ceiling/diastolic with
-    * exact batch parity on the interior.
+    * exact batch parity on the interior, at the `PeakConfig()` defaults.
     *
-    * The batch recipe (SURVEY §2.3) is: block-repeat pad the raw
-    * series by 25 → 51-tap SG → per-position forward 350-frames of
-    * interior extrema → 175-prepend recentering → 301-tap SG. The
-    * prefix pad duplicates the FIRST 25 samples, so a stream can
-    * reproduce the batch values exactly for every position whose
-    * dependency cone avoids the channel TAIL: emission at position p
-    * requires raw samples through p+349 (env taps reach floor p-25,
-    * whose 350-frame reaches smooth p+324, whose FIR reaches raw
-    * p+349), and positions in [325, n-350] of a finite channel match
-    * the batch operator bitwise (beyond n-350 the batch values depend
-    * on the tail pad, which an unbounded stream cannot know) — proven
-    * in StreamingSpec.
+    * Each micro-batch runs the batch kernel's marks and frame extrema
+    * over the smoothed window and one SG-301 fold per owed position.
+    * The baseline at p folds the floors [p − 325, p − 25] (pad 175 ±
+    * k 150), a floor at i reads the smooth values [i, i + 349], and a
+    * smooth value reads the raw samples 25 either side: so p is emitted
+    * once raw p + 349 has arrived, from `start + 325` on, and the
+    * window keeps the 699 raw values behind the first owed position.
+    * Positions in [325, n − 350] of a finite channel match the batch
+    * operator bitwise (beyond n − 350 the batch values depend on the
+    * tail pad). State: 724 doubles per channel.
     */
   def incrementalEnvelopes(rows: Dataset[SignalRow]): Dataset[EnvOut] = {
     import rows.sparkSession.implicits._
-    val c51 = coeffs51
-    val c301 = coeffs301
-    val chunk = graft.operators.Smoothing.dotChunk
-
-    rows
-      .groupByKey(r => (r.experiment_id, r.channel))
-      .flatMapGroupsWithState[EnvState, EnvOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key, it, state) =>
-          var st = state.getOption.getOrElse(
-            EnvState(Vector.empty, Vector.empty, 0L,
-              Vector.empty, 0L, Vector.empty, Vector.empty, 0L,
-              Vector.empty, Vector.empty, 0L))
-          var prefix = st.prefix.toVector
-          var fir = st.fir.toVector
-          var rawSeen = st.rawSeen
-          var sm = st.sm.toVector
-          var smFirst = st.smFirst
-          var vv = st.vv.toVector
-          var pv = st.pv.toVector
-          var vvFirst = st.vvFirst
-          var fl = st.fl.toVector
-          var cl = st.cl.toVector
-          var flFirst = st.flFirst
-          val out = Vector.newBuilder[EnvOut]
-
-          def emitEnvelope(): Unit = {
-            // newest floor index j = flFirst + fl.size - 1; env position
-            // p = j + 25 valid once 301 floors are buffered (p >= 325)
-            if (fl.size == 301) {
-              val p = flFirst + 300 + 25
-              val b =
-                if (fl.exists(_.isNaN)) Double.NaN
-                else graft.functions.FirDotExpr.dotChunked(fl.toArray, c301, chunk)
-              val cv =
-                if (cl.exists(_.isNaN)) Double.NaN
-                else graft.functions.FirDotExpr.dotChunked(cl.toArray, c301, chunk)
-              val d = b + 0.1 * (cv - b)
-              def opt(x: Double) = if (x.isNaN) None else Some(x)
-              out += EnvOut(key._1, key._2, p, opt(b), opt(cv),
-                if (b.isNaN || cv.isNaN) None else opt(d))
-              fl = fl.tail; cl = cl.tail; flFirst += 1
-            }
-          }
-
-          def onMark(): Unit = {
-            // marks now cover positions vvFirst .. vvFirst+vv.size-1;
-            // floor[i] needs the 348 marks i+1 .. i+348 (frame interior)
-            while (vv.size >= 348) {
-              val i = vvFirst - 1 // frame start: marks i+1.. start at vv.head
-              val window = vv.take(348)
-              val valid = window.filterNot(_.isNaN)
-              val f = if (valid.isEmpty) Double.NaN else valid.min
-              val windowC = pv.take(348)
-              val validC = windowC.filterNot(_.isNaN)
-              val cMax = if (validC.isEmpty) Double.NaN else validC.max
-              fl = fl :+ f; cl = cl :+ cMax
-              if (fl.size == 1 && flFirst == 0L) flFirst = i
-              emitEnvelope()
-              vv = vv.tail; pv = pv.tail; vvFirst += 1
-            }
-          }
-
-          def onSmooth(s: Double): Unit = {
-            sm = sm :+ s
-            // mark decidable for the second-to-last smooth position
-            if (sm.size >= 3) {
-              val a = sm(sm.size - 3); val m = sm(sm.size - 2); val z = s
-              val q = smFirst + sm.size - 2
-              val isValley = m < a && m < z
-              val isPeak = m > a && m > z
-              if (vv.isEmpty && fl.isEmpty) vvFirst = q
-              vv = vv :+ (if (isValley) m else Double.NaN)
-              pv = pv :+ (if (isPeak) m else Double.NaN)
-              onMark()
-              // bound sm: marks only need the last 3
-              if (sm.size > 3) { sm = sm.tail; smFirst += 1 }
-            }
-          }
-
-          def pushPadded(v: Double): Unit = {
-            fir = fir :+ v
-            if (fir.size == 51) {
-              onSmooth(graft.functions.FirDotExpr.dotChunked(fir.toArray, c51, chunk))
-              fir = fir.tail
-            }
-          }
-
-          it.toArray.sortBy(_.sample_idx).foreach { r =>
-            if (r.sample_idx == rawSeen) { // dense in-order contract
-              rawSeen += 1
-              if (prefix.size < 25) {
-                prefix = prefix :+ r.y
-                if (prefix.size == 25) {
-                  prefix.foreach(pushPadded) // the block-repeat pad
-                  prefix.foreach(pushPadded) // raw samples 0..24
-                }
-              } else pushPadded(r.y)
-            }
-          }
-          state.update(EnvState(prefix, fir, rawSeen, sm, smFirst,
-            vv, pv, vvFirst, fl, cl, flFirst))
-          out.result().iterator
+    val w = cfg.auxWindowSize
+    val k = cfg.auxSmoothingWindow / 2
+    val pad = math.max(w, cfg.auxSmoothingWindow) / 2
+    val c = SavitzkyGolay.coeffs(cfg.auxSmoothingWindow, cfg.auxPolyorder)
+    val rel = cfg.relativeToBaseline
+    // p folds the floors [p − lo, p − (pad − k)]; the last reads raw p + lag
+    val lo = pad + k
+    val lag = (w - 1) + half - (pad - k)
+    spine(rows, lo, lag, keep = lag + lo + half) { (key, sm, at, ps) =>
+      val n = sm.length
+      val marks = Array.tabulate(n)(i => if (i == 0 || i == n - 1) 0 else Envelopes.mark(sm, i))
+      val fb = Envelopes.frameExtrema(sm, marks, -1, n - (w - 1), w - 2)
+      val fc = Envelopes.frameExtrema(sm, marks, 1, n - (w - 1), w - 2)
+      def opt(x: Double) = if (x.isNaN) None else Some(x)
+      ps.map { p =>
+        val s = (p - lo - at).toInt
+        val b = FirDotExpr.dotChunkedAt(fb, s, c, dotChunk)
+        val ce = FirDotExpr.dotChunkedAt(fc, s, c, dotChunk)
+        EnvOut(key._1, key._2, p, opt(b), opt(ce),
+          if (b.isNaN || ce.isNaN) None else Some(b + rel * (ce - b)))
       }
+    }
   }
 
   /** A rule-1 candidate peak of the smoothed stream. */
   case class CandOut(experiment_id: String, channel: Int,
                      sample_idx: Long, y_smooth: Double)
 
-  /** Smoother + candidate state: the FIR ring plus the last two
-    * emitted smooth values (for the strict-local-maximum check).
-    */
-  case class CandState(firstIdx: Long, buf: Seq[Double],
-                       m2: Double, m1: Double, emitted: Long)
-
   /** Incremental smoothing + rule-1 candidate detection in ONE
-    * stateful operator (Spark rejects chained flatMapGroupsWithState
-    * in a single query, so the candidate ring rides on the smoother's
-    * state). Emits `sample_idx` where the smoothed series is strictly
-    * greater than both neighbors — the streaming counterpart of the
-    * batch Q5 — with a 26-sample arrival delay (25 for the FIR, 1 for
-    * the right neighbor).
+    * stateful operator (Spark rejects chained flatMapGroupsWithState in
+    * a single query). Emits `sample_idx` where the smoothed series is
+    * strictly greater than both neighbours (`Envelopes.mark` = +1) — the
+    * streaming counterpart of the batch Q5 — from `start + 26` on, with
+    * a 26-sample arrival delay (25 for the FIR, 1 for the right
+    * neighbour). State: 77 doubles per channel (`keep` 52 + 25).
     */
-  def incrementalCandidates(rows: Dataset[SignalRow],
-                            window: Int = 51): Dataset[CandOut] = {
+  def incrementalCandidates(rows: Dataset[SignalRow]): Dataset[CandOut] = {
     import rows.sparkSession.implicits._
-    val half = window / 2
-    val c = coeffs51
-    rows
-      .groupByKey(r => (r.experiment_id, r.channel))
-      .flatMapGroupsWithState[CandState, CandOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key, it, state) =>
-          val sorted = it.toArray.sortBy(_.sample_idx)
-          var st = state.getOption.getOrElse {
-            val start = if (sorted.nonEmpty) sorted.head.sample_idx else 0L
-            CandState(start, Vector.empty, 0.0, 0.0, 0L)
-          }
-          val out = Vector.newBuilder[CandOut]
-          sorted.foreach { r =>
-            if (r.sample_idx == st.firstIdx + st.buf.size) {
-              var buf = st.buf :+ r.y
-              var firstIdx = st.firstIdx
-              if (buf.size == window) {
-                var acc = 0.0
-                var j = 0
-                while (j < window) { acc += c(j) * buf(j); j += 1 }
-                val smoothIdx = firstIdx + half
-                // strict maximum check on the previous smooth value
-                if (st.emitted >= 2 && st.m1 > st.m2 && st.m1 > acc)
-                  out += CandOut(key._1, key._2, smoothIdx - 1, st.m1)
-                st = CandState(firstIdx + 1, buf.tail, st.m1, acc, st.emitted + 1)
-              } else st = st.copy(buf = buf)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    spine(rows, lo = half + 1, lag = half + 1, keep = 2 * half + 2) { (key, sm, at, ps) =>
+      ps.map(p => (p - at).toInt).filter(Envelopes.mark(sm, _) == 1)
+        .map(i => CandOut(key._1, key._2, at + i, sm(i)))
+    }
   }
 
-  /** Streaming exact dedup — the streaming counterpart of the batch
-    * exact-dedup operator (Q15): `dropDuplicates` keeps per-key state
-    * across micro-batches; the watermark bounds that state (keys older
-    * than the horizon are forgotten — the standard stream-dedup trade:
-    * exact within the watermark, approximate beyond it).
-    */
-  /** Runs `f` with `spark.sql.shuffle.partitions` temporarily lowered.
+  /** Runs `f` with `spark.sql.shuffle.partitions` temporarily lowered
+    * to 4.
     *
     * Stateful streaming operators commit one state-store delta PER
     * PARTITION PER MICRO-BATCH (stream-stream joins commit FOUR
@@ -400,22 +282,23 @@ object StreamingOps {
     * partitions is ~200 near-empty store commits of pure overhead
     * (measured 25 s → ~5 s on the interval-join fixture at sf0.1
     * going 32 → 8, and 4.2 → 3.0 s steady going 8 → 4 with no
-    * fixture regressing). A production deployment sizes this by
-    * sustained throughput instead; the conf is restored afterwards
-    * either way.
+    * fixture regressing). Results do not depend on the partition
+    * count. A production deployment sizes this by sustained
+    * throughput instead; the conf is restored afterwards either way.
     */
-  private def withFewStatePartitions[T](s: SparkSession, n: Int = 4)(f: => T): T = {
+  private def withFewStatePartitions[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    // env override is a dev-only A/B knob for the fixture floor
-    // (SURVEY §6.1); results are partition-count-invariant, only the
-    // per-partition state-store commit overhead moves
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
+    s.conf.set(key, "4")
     try f finally s.conf.set(key, prev)
   }
 
+  /** Streaming exact dedup — the streaming counterpart of the batch
+    * exact-dedup operator (Q15): `dropDuplicates` keeps per-key state
+    * across micro-batches; the watermark bounds that state (keys older
+    * than the horizon are forgotten — the standard stream-dedup trade:
+    * exact within the watermark, approximate beyond it).
+    */
   def dedupStream(docs: DataFrame, idCol: String = "doc_id",
                   tsCol: String = "ts"): DataFrame =
     docs.withWatermark(tsCol, "1 hour")
@@ -457,10 +340,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     // ONE scan+collect for both sides (split driver-side) — the second
     // full parquet decode was pure fixture overhead
     val both = ev.filter(col("event_type").isin("click", "view"))
@@ -578,10 +458,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     // ONE scan+collect for both sides (split driver-side), as in q58
     val both = ev.filter(col("event_type").isin("click", "view"))
       .select(col("event_id"), col("user_id"), tsu.as("us"), col("event_type"))
@@ -654,10 +531,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("event_id"), col("event_type"),
         tsu.as("us"), col("value"))
       .as[(Long, String, Long, Double)].collect().sortBy(_._3)
@@ -732,10 +606,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), tsu.as("us"), col("value"))
       .as[(Long, Long, Double)].collect().sortBy(_._2)
     val sentinel = (-1L,
@@ -814,10 +685,7 @@ object StreamingOps {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val dayUs = 86400000000L
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), col("event_type"), tsu.as("us"))
       .as[(Long, String, Long)].collect().sortBy(_._3)
     val stream =
@@ -914,10 +782,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), col("event_type"), tsu.as("us"),
         col("event_id"), col("value"))
       .as[(Long, String, Long, Long, Double)].collect().sortBy(_._3)
@@ -1066,10 +931,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     // distinct first: the KMV fold is idempotent over repeated hashes
     val data = ev.select(col("event_type"), tsu.as("t_us"),
         graft.functions.TextHash.polyHash(col("user_id").cast("string")).as("h"))
@@ -1140,10 +1002,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("t_us"),
         col("user_id").cast("string").as("u"))
       .select(col("event_type"),
@@ -1433,10 +1292,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), tsu.as("us"))
@@ -1512,10 +1368,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(String, Long)].collect() // fixture feed only
     val sentinel = ("__sentinel__",
@@ -1568,10 +1421,7 @@ object StreamingOps {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu =
-      if (ev.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else unix_micros(col("ts"))
+    val tsu = tsMicros(ev)
     val data = ev.select(col("event_id"), col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(Long, String, Long)].collect()
     val stream =

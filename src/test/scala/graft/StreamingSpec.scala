@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.abs
 import org.apache.spark.sql.streaming.OutputMode
@@ -112,6 +113,61 @@ class StreamingSpec extends SparkSpec {
       .filter { case (k, _) => k >= 325 && k <= n - 350 }
     assert(got.keySet === batch.keySet)
     got.foreach { case (k, v) => assert(v === batch(k), s"at $k") } // bitwise
+  }
+
+  test("a stream gap fails naming the channel; a replayed sample is dropped") {
+    val rows = (0 until 200).map(i =>
+      SignalRow("e", 3, i.toLong, i / 100.0, math.sin(i / 5.0)))
+    def run(name: String)(feed: (MemoryStream[SignalRow], () => Unit) => Unit): Unit = {
+      val stream = MemoryStream[SignalRow]
+      val q = StreamingOps.incrementalSmooth(stream.toDS())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try feed(stream, () => q.processAllAvailable()) finally q.stop()
+    }
+    // at-least-once replay: samples 30..39 arrive again with the next batch
+    run("smooth_replay") { (s, go) =>
+      s.addData(rows.take(40)); go()
+      s.addData(rows.slice(30, 200)); go()
+    }
+    val got = spark.table("smooth_replay").collect().map(_.getAs[Long]("sample_idx"))
+    assert(got.sorted.toSeq === (25L until 175L))
+    // sample 60 never arrives
+    val e = intercept[Exception] {
+      run("smooth_gap") { (s, go) => s.addData(rows.filter(_.sample_idx != 60)); go() }
+    }
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msg.contains("experiment_id=e, channel=3"), msg)
+    assert(msg.contains("expected sample_idx 60, got 61"), msg)
+  }
+
+  test("spine state holds keep + 25 doubles per channel after a long uneven stream") {
+    val rng = new java.util.Random(5)
+    val rows = (0 until 10000).map(i =>
+      SignalRow("e", 0, i.toLong, i / 100.0, rng.nextGaussian()))
+    val cuts = Seq(0, 7, 31, 700, 2000, 6543, 10000)
+    val ops = Seq[(String, Int, Dataset[SignalRow] => Dataset[_])](
+      ("smooth", 50, StreamingOps.incrementalSmooth(_)),
+      ("cand", 52, StreamingOps.incrementalCandidates(_)),
+      ("env", 699, StreamingOps.incrementalEnvelopes(_)))
+    ops.foreach { case (name, keep, op) =>
+      val ckpt = java.nio.file.Files.createTempDirectory(s"spine_$name").toString
+      val stream = MemoryStream[SignalRow]
+      val q = op(stream.toDS()).writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      try cuts.sliding(2).foreach { case Seq(a, b) =>
+        stream.addData(rows.slice(a, b)); q.processAllAvailable()
+      } finally q.stop()
+      val st = spark.read.format("statestore").load(ckpt)
+        .select("value.groupState.*").select("start", "next", "head", "tail").collect()
+      assert(st.length === 1, name)
+      assert(st(0).getLong(0) === 0L && st(0).getLong(1) === 10000L, name)
+      assert(st(0).getSeq[Double](2) === rows.take(25).map(_.y), name)
+      assert(st(0).getSeq[Double](3) === rows.takeRight(keep).map(_.y), name)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    }
   }
 
   test("dedupStream drops cross-micro-batch duplicates via keyed state") {
