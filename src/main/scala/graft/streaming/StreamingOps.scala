@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode}
 import graft.{PeakConfig, SignalRow}
 import graft.functions.{FirDotExpr, SavitzkyGolay}
 import graft.operators.Envelopes
@@ -26,15 +27,32 @@ import graft.operators.Smoothing.dotChunk
   * whose batch value depends on the channel's tail pad, which an
   * unbounded stream cannot know, are never emitted.
   *
-  * Gap contract: per channel, samples arrive dense and in index order
-  * across micro-batches (rows within one micro-batch may come in any
-  * order). A sample already consumed — an at-least-once replay — is
-  * dropped; a sample beyond the next owed index fails the query with
-  * an error naming the channel and both indices.
+  * Gap contract: per channel, samples arrive dense from index 0 and in
+  * index order across micro-batches (rows within one micro-batch may
+  * come in any order) — the batch Envelopes rule. A sample already
+  * consumed — an at-least-once replay — is dropped; a sample beyond the
+  * next owed index, a channel whose first index is not 0 among them,
+  * fails the query with an error naming the channel and both indices.
   *
   * At scale: state is `keep + 25` doubles per channel, the shuffle key
   * is the channel (the batch pipeline's partitioning), and a
   * micro-batch costs O(keep + new samples) per channel.
+  *
+  * The `...Fixture` functions replay a table through these operators
+  * for the oracle contract, all through one driver, [[drive]]:
+  *
+  *  - the fixture hands over its micro-batches as data, one `Seq` of
+  *    rows per batch ([[inBatches]], [[byDoc]]). Batch boundaries
+  *    decide results (watermarks, state versions, q295's generations,
+  *    the q339/q341 fold cadence), so each fixture fixes its own;
+  *  - each batch is added as 32 blocks, which changes only the scan
+  *    parallelism: MemoryStream plans one input partition per block;
+  *  - a memory-sink query runs with 4 shuffle (= state) partitions,
+  *    scoped by [[withConfs]]; a `foreachBatch` writer keeps the
+  *    session's partitions;
+  *  - the query is always stopped, and the memory sink's temp view is
+  *    dropped once the result frame is resolved, so the session holds
+  *    no result the caller has let go of.
   */
 object StreamingOps {
 
@@ -42,37 +60,101 @@ object StreamingOps {
   case class SmoothOut(experiment_id: String, channel: Int,
                        sample_idx: Long, y_smooth: Double)
 
-  /** Feeds `data` to a MemoryStream as `nBatches` micro-batches, each
-    * split across `blocks` addData calls. Batch BOUNDARIES (and so
-    * results) are identical to a single addData per batch — only the
-    * scan parallelism changes: MemoryStream plans one input partition
-    * per added block, so a 333k-row micro-batch fed as one block is a
-    * single-threaded scan (measured: the dominant cost of the sf0.1
-    * streaming fixtures), while 32 blocks scan on all cores.
+  /** Where a fixture's stream lands: the memory sink, named
+    * `prefix_<nanoTime>`, in `mode`; or `write` run on every
+    * micro-batch (`foreachBatch`, Update mode).
     */
-  private def feedBatches[A](
-      stream: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A],
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      data: Array[A], nBatches: Int = 2, blocks: Int = 32,
-      tail: Seq[A] = Nil): Unit = {
-    // `tail` (sentinel rows) rides WITH the final data batch instead of
-    // costing its own trigger cycle: each processAllAvailable runs a
-    // data trigger PLUS a watermark-flush trigger (~0.3 s of fixed
-    // overhead each, measured via lastProgress.durationMs), so folding
-    // the sentinel in cuts a full cycle. The watermark still advances
-    // after the batch containing the sentinel; the flush trigger then
-    // emits every closed window — same rows as a separate cycle.
-    val chunks = data.grouped(math.max(1, data.length / nBatches + 1)).toVector
-    chunks.zipWithIndex.foreach { case (ch, i) =>
-      ch.grouped(math.max(1, ch.length / blocks + 1))
-        .foreach(b => stream.addData(b.toIndexedSeq))
-      if (i == chunks.length - 1 && tail.nonEmpty) stream.addData(tail)
-      q.processAllAvailable()
+  private sealed trait Sink
+  private final case class Memory(prefix: String, mode: OutputMode) extends Sink
+  private final case class EachBatch(write: (DataFrame, Long) => Unit) extends Sink
+
+  /** Runs `plan` over one MemoryStream per feed into `sink`: micro-batch
+    * i adds batch i of every feed that has one, each as 32 addData
+    * blocks, then runs `processAllAvailable` once. The query is stopped
+    * whatever happens. A batch fed as one block would be one input
+    * partition, a single-threaded scan (measured: the dominant cost of
+    * the sf0.1 streaming fixtures); 32 blocks scan on all cores.
+    *
+    * A memory sink runs with `spark.sql.shuffle.partitions` = 4:
+    * stateful operators commit one state-store delta per partition per
+    * micro-batch (stream-stream joins four stores per side), and these
+    * fixtures push a few thousand rows through 2-4 micro-batches, so 32
+    * state partitions are ~200 near-empty commits of pure overhead
+    * (measured 25 s → ~5 s on the interval-join fixture at sf0.1 going
+    * 32 → 8, and 4.2 → 3.0 s steady going 8 → 4 with no fixture
+    * regressing). Results do not depend on the partition count; a
+    * production deployment sizes it by sustained throughput. It
+    * returns the sink's rows, resolved before the sink's temp view is
+    * dropped. A `foreachBatch` writer runs with the session's
+    * partitions and returns an empty frame: its results are the
+    * artifacts it wrote.
+    */
+  private def drive[A: Encoder](s: SparkSession, sink: Sink, feeds: Seq[Seq[A]]*)(
+      plan: Seq[Dataset[A]] => Dataset[_]): DataFrame = {
+    implicit val ctx: SQLContext = s.sqlContext
+    val streams = feeds.map(_ => MemoryStream[A])
+    val out = plan(streams.map(_.toDS())).toDF().writeStream
+    def run(writer: DataStreamWriter[Row]): Unit = {
+      val q = writer.start()
+      try (0 until feeds.map(_.length).max).foreach { i =>
+        for ((st, f) <- streams.zip(feeds); b <- f.lift(i))
+          b.grouped(b.length / 32 + 1).foreach(st.addData(_))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    sink match {
+      case Memory(prefix, mode) =>
+        val name = s"${prefix}_${System.nanoTime()}"
+        try {
+          withConfs(s, "spark.sql.shuffle.partitions" -> "4")(
+            run(out.format("memory").queryName(name).outputMode(mode)))
+          s.table(name)
+        } finally s.catalog.dropTempView(name)
+      case EachBatch(write) =>
+        run(out.foreachBatch(write).outputMode(OutputMode.Update()))
+        s.emptyDataFrame
+    }
+  }
+
+  /** `data` as `n` micro-batches of `data.length / n + 1` rows (fewer
+    * batches when the data runs out), with `tail` (sentinel rows)
+    * riding in the last one. Each processAllAvailable runs a data
+    * trigger plus a watermark-flush trigger (~0.3 s of fixed overhead
+    * each), so a sentinel in the final data batch saves a whole cycle:
+    * the watermark advances after that batch and the flush trigger
+    * emits every closed window, the same rows as a cycle of its own.
+    */
+  private def inBatches[A](data: Array[A], n: Int, tail: Seq[A] = Nil): Seq[Seq[A]] = {
+    val bs = data.grouped(data.length / n + 1).map(_.toSeq).toVector
+    if (bs.isEmpty) bs else bs.init :+ (bs.last ++ tail)
+  }
+
+  /** `occ` as `n` micro-batches that never split a document: the
+    * distinct `doc` ids cut into `n` chunks, each batch the rows of one
+    * chunk in `occ`'s order.
+    */
+  private def byDoc[A](occ: Array[A], n: Int)(doc: A => Long): Seq[Seq[A]] = {
+    val ids = occ.map(doc).distinct
+    ids.grouped(ids.length / n + 1).map { chunk =>
+      val set = chunk.toSet
+      occ.filter(o => set(doc(o))).toSeq
+    }.toVector
+  }
+
+  /** Runs `f` with the session confs `kv` set, then restores each one's
+    * prior value (or unsets it).
+    */
+  private def withConfs[T](s: SparkSession, kv: (String, String)*)(f: => T): T = {
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
   /** Per-channel state of the incremental spine operators: the
-    * channel's first index `start`, its first 25 raw values `head` (the
+    * channel's first index `start` (0), its first 25 raw values `head` (the
     * block-repeat pad), its last `keep` raw values `tail`, and the
     * `next` index owed. At most `keep + 25` doubles.
     */
@@ -99,14 +181,12 @@ object StreamingOps {
       .flatMapGroupsWithState[ChannelTail, O](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) { (key, it, state) =>
         val sorted = it.toArray.sortBy(_.sample_idx)
-        val st = state.getOption.getOrElse {
-          val start = if (sorted.nonEmpty) sorted.head.sample_idx else 0L
-          ChannelTail(start, Vector.empty, Vector.empty, start)
-        }
+        // a new channel owes index 0: any other first index is a gap
+        val st = state.getOption.getOrElse(ChannelTail(0L, Vector.empty, Vector.empty, 0L))
         val fresh = Array.newBuilder[Double]
         var next = st.next
         sorted.foreach { r =>
-          if (r.sample_idx > next)
+          if (r.sample_idx > next || r.sample_idx < 0)
             throw new IllegalArgumentException(
               s"stream gap in channel (experiment_id=${key._1}, channel=${key._2}): " +
                 s"expected sample_idx $next, got ${r.sample_idx}")
@@ -129,7 +209,7 @@ object StreamingOps {
 
   /** Incremental Savitzky-Golay smoothing of a (possibly streaming)
     * Dataset[SignalRow], keyed by channel: the batch `y_smooth` of every
-    * position from `start + 25` on, emitted once its 25 successors have
+    * position from 25 on, emitted once its 25 successors have
     * arrived. State: 75 doubles per channel (`keep` 50 + 25).
     */
   def incrementalSmooth(rows: Dataset[SignalRow]): Dataset[SmoothOut] = {
@@ -183,26 +263,17 @@ object StreamingOps {
   def streamSlidingFixture(s: SparkSession, dir: String,
                            watermarkMin: Int = 30): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(String, Long)].collect() // fixture feed only
     val sentinel = ("__sentinel__",
       data.map(_._2).max + (watermarkMin + 20) * 60000000L)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val name = s"q50_stream_sliding_${System.nanoTime()}"
-    val in = stream.toDS().toDF("event_type", "us")
-      .withColumn("tsm", expr("timestamp_micros(us)"))
-    withFewStatePartitions(s) {
-      val q = slidingCounts(in, watermarkMin = watermarkMin)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try feedBatches(stream, q, data, tail = Seq(sentinel))
-      finally q.stop()
-    }
-    s.table(name).filter(col("event_type") =!= "__sentinel__")
+    drive(s, Memory("q50_stream_sliding", OutputMode.Append()),
+        inBatches(data, 2, Seq(sentinel))) { in =>
+      slidingCounts(in.head.toDF("event_type", "us")
+        .withColumn("tsm", expr("timestamp_micros(us)")), watermarkMin = watermarkMin)
+    }.filter(col("event_type") =!= "__sentinel__")
   }
 
   /** One enriched interior sample from the streaming envelope
@@ -220,7 +291,7 @@ object StreamingOps {
     * The baseline at p folds the floors [p − 325, p − 25] (pad 175 ±
     * k 150), a floor at i reads the smooth values [i, i + 349], and a
     * smooth value reads the raw samples 25 either side: so p is emitted
-    * once raw p + 349 has arrived, from `start + 325` on, and the
+    * once raw p + 349 has arrived, from 325 on, and the
     * window keeps the 699 raw values behind the first owed position.
     * Positions in [325, n − 350] of a finite channel match the batch
     * operator bitwise (beyond n − 350 the batch values depend on the
@@ -260,7 +331,7 @@ object StreamingOps {
     * stateful operator (Spark rejects chained flatMapGroupsWithState in
     * a single query). Emits `sample_idx` where the smoothed series is
     * strictly greater than both neighbours (`Envelopes.mark` = +1) — the
-    * streaming counterpart of the batch Q5 — from `start + 26` on, with
+    * streaming counterpart of the batch Q5 — from 26 on, with
     * a 26-sample arrival delay (25 for the FIR, 1 for the right
     * neighbour). State: 77 doubles per channel (`keep` 52 + 25).
     */
@@ -270,27 +341,6 @@ object StreamingOps {
       ps.map(p => (p - at).toInt).filter(Envelopes.mark(sm, _) == 1)
         .map(i => CandOut(key._1, key._2, at + i, sm(i)))
     }
-  }
-
-  /** Runs `f` with `spark.sql.shuffle.partitions` temporarily lowered
-    * to 4.
-    *
-    * Stateful streaming operators commit one state-store delta PER
-    * PARTITION PER MICRO-BATCH (stream-stream joins commit FOUR
-    * stores per side per partition); the MemoryStream fixtures here
-    * push a few thousand rows through 2-4 micro-batches, so 32 state
-    * partitions is ~200 near-empty store commits of pure overhead
-    * (measured 25 s → ~5 s on the interval-join fixture at sf0.1
-    * going 32 → 8, and 4.2 → 3.0 s steady going 8 → 4 with no
-    * fixture regressing). Results do not depend on the partition
-    * count. A production deployment sizes this by sustained
-    * throughput instead; the conf is restored afterwards either way.
-    */
-  private def withFewStatePartitions[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "4")
-    try f finally s.conf.set(key, prev)
   }
 
   /** Streaming exact dedup — the streaming counterpart of the batch
@@ -338,59 +388,40 @@ object StreamingOps {
   def streamIntervalFixture(s: SparkSession, dir: String,
                             lookbackMin: Int = 30): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu = tsMicros(ev)
-    // ONE scan+collect for both sides (split driver-side) — the second
-    // full parquet decode was pure fixture overhead
-    val both = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("event_id"), col("user_id"), tsu.as("us"), col("event_type"))
-      .as[(Long, Long, Long, String)].collect().sortBy(_._3)
-    def feed(typ: String): Array[(Long, Long, Long)] =
-      both.filter(_._4 == typ).map(r => (r._1, r._2, r._3))
-    val (lData, rData) = (feed("click"), feed("view"))
+    val (lData, rData) = clicksAndViews(s, dir)
     val spanMin = {
       val all = lData ++ rData
       (all.map(_._3).max - all.map(_._3).min) / 60000000L + lookbackMin + 1
     }
-    val lStream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val rStream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def side(st: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)],
-             idName: String): DataFrame =
-      st.toDS().toDF(idName, "user_id", "us")
-        .select(col(idName), col("user_id"),
-          expr("timestamp_micros(us)").as("ts"))
-    val name = s"q58_stream_interval_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = intervalJoin(
-          side(lStream, "l_event"), side(rStream, "r_event"),
+    drive(s, Memory("q58_stream_interval", OutputMode.Append()),
+        inBatches(lData, 2), inBatches(rData, 2)) { in =>
+      intervalJoin(joinSide(in(0), "l_event"), joinSide(in(1), "r_event"),
           lookback = s"$lookbackMin minutes", watermark = s"$spanMin minutes")
         .select(col("l_event"), col("r_event"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        def chunks(a: Array[(Long, Long, Long)]) =
-          a.grouped(math.max(1, a.length / 2 + 1)).toIndexedSeq
-        // block-split each side's chunk (feedBatches shape): one
-        // addData = one scan partition, so the synchronized batches
-        // stay parallel on both inputs
-        def add(st: org.apache.spark.sql.execution.streaming.runtime
-                .MemoryStream[(Long, Long, Long)],
-                ch: Array[(Long, Long, Long)]): Unit =
-          ch.grouped(math.max(1, ch.length / 32 + 1))
-            .foreach(b => st.addData(b.toIndexedSeq))
-        val (lc, rc) = (chunks(lData), chunks(rData))
-        (0 until math.max(lc.length, rc.length)).foreach { i =>
-          if (i < lc.length) add(lStream, lc(i))
-          if (i < rc.length) add(rStream, rc(i))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
     }
-    s.table(name)
   }
+
+  /** The events table's clicks and views as time-ordered
+    * `(event_id, user_id, ts micros)` feeds: ONE scan+collect for both
+    * sides, split driver-side (a second full parquet decode was pure
+    * fixture overhead). The collect feeds the MemoryStream harness only.
+    */
+  private def clicksAndViews(s: SparkSession, dir: String)
+      : (Array[(Long, Long, Long)], Array[(Long, Long, Long)]) = {
+    import s.implicits._
+    val ev = s.read.parquet(s"$dir/events.parquet")
+    val both = ev.filter(col("event_type").isin("click", "view"))
+      .select(col("event_id"), col("user_id"), tsMicros(ev).as("us"), col("event_type"))
+      .as[(Long, Long, Long, String)].collect().sortBy(_._3)
+    def feed(typ: String): Array[(Long, Long, Long)] =
+      both.filter(_._4 == typ).map(r => (r._1, r._2, r._3))
+    (feed("click"), feed("view"))
+  }
+
+  /** One interval-join input over a [[clicksAndViews]] feed. */
+  private def joinSide(in: Dataset[(Long, Long, Long)], idName: String): DataFrame =
+    in.toDF(idName, "user_id", "us")
+      .select(col(idName), col("user_id"), expr("timestamp_micros(us)").as("ts"))
 
   /** Q123 (operator/fixture) — stream-stream LEFT OUTER interval
     * join: q58's click⋈view join, but clicks with NO view in the
@@ -456,64 +487,22 @@ object StreamingOps {
                                      wmMin: Int,
                                      joinType: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ev = s.read.parquet(s"$dir/events.parquet")
-    val tsu = tsMicros(ev)
-    // ONE scan+collect for both sides (split driver-side), as in q58
-    val both = ev.filter(col("event_type").isin("click", "view"))
-      .select(col("event_id"), col("user_id"), tsu.as("us"), col("event_type"))
-      .as[(Long, Long, Long, String)].collect().sortBy(_._3)
-    def feed(typ: String): Array[(Long, Long, Long)] =
-      both.filter(_._4 == typ).map(r => (r._1, r._2, r._3))
-    val (lData, rData) = (feed("click"), feed("view"))
+    val (lData, rData) = clicksAndViews(s, dir)
     val maxUs = (lData ++ rData).map(_._3).max
-    def sentinel(round: Int): (Long, Long, Long) =
-      (-1L, -1L, maxUs + (wmMin + lookbackMin + 60 * round) * 60000000L)
-    val lStream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val rStream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def side(st: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)],
-             idName: String): DataFrame =
-      st.toDS().toDF(idName, "user_id", "us")
-        .select(col(idName), col("user_id"),
-          expr("timestamp_micros(us)").as("ts"))
-    val name = s"stream_ij_${joinType}_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = intervalJoin(
-          side(lStream, "l_event"), side(rStream, "r_event"),
+    // the sentinel pair RIDES the final data batch (the q50/q72
+    // trigger-cycle cut): the watermark advances off this batch's max
+    // event time, and the follow-up flush trigger emits every remaining
+    // outer row — same emissions as dedicated sentinel rounds, two whole
+    // data+flush cycles cheaper
+    val sentinel = Seq((-1L, -1L, maxUs + (wmMin + lookbackMin + 60) * 60000000L))
+    // sentinel filtering is the caller's, per join mode
+    drive(s, Memory(s"stream_ij_$joinType", OutputMode.Append()),
+        inBatches(lData, 2, sentinel), inBatches(rData, 2, sentinel)) { in =>
+      intervalJoin(joinSide(in(0), "l_event"), joinSide(in(1), "r_event"),
           lookback = s"$lookbackMin minutes", watermark = s"$wmMin minutes",
           joinType = joinType)
         .select(col("l_event"), col("r_event"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        def chunks(a: Array[(Long, Long, Long)]) =
-          a.grouped(math.max(1, a.length / 2 + 1)).toIndexedSeq
-        def add(st: org.apache.spark.sql.execution.streaming.runtime
-                .MemoryStream[(Long, Long, Long)],
-                ch: Array[(Long, Long, Long)]): Unit =
-          ch.grouped(math.max(1, ch.length / 32 + 1))
-            .foreach(b => st.addData(b.toIndexedSeq))
-        val (lc, rc) = (chunks(lData), chunks(rData))
-        val last = math.max(lc.length, rc.length) - 1
-        (0 to last).foreach { i =>
-          if (i < lc.length) add(lStream, lc(i))
-          if (i < rc.length) add(rStream, rc(i))
-          // the sentinel RIDES the final data batch (the q50/q72
-          // trigger-cycle cut): the watermark advances off this batch's
-          // max event time, and the follow-up flush trigger emits every
-          // remaining outer row — same emissions as dedicated sentinel
-          // rounds, two whole data+flush cycles cheaper
-          if (i == last) {
-            lStream.addData(sentinel(1)); rStream.addData(sentinel(1))
-          }
-          q.processAllAvailable()
-        }
-      } finally q.stop()
     }
-    // sentinel filtering is the caller's, per join mode
-    s.table(name)
   }
 
   /** q62 — [[dedupStream]] surfaced on the oracle contract: the events
@@ -529,43 +518,27 @@ object StreamingOps {
     */
   def streamDedupFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("event_id"), col("event_type"),
         tsu.as("us"), col("value"))
       .as[(Long, String, Long, Double)].collect().sortBy(_._3)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long, Double)]
-    val in = stream.toDS().toDF("event_id", "event_type", "us", "value")
-      .select(col("event_id"), col("event_type"),
-        expr("timestamp_micros(us)").as("ts"), col("value"))
-    val name = s"q62_stream_dedup_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = dedupStream(in, idCol = "event_id", tsCol = "ts")
+    // each chunk arrives twice — first copy, then a replay one
+    // micro-batch LATER (rides with the next chunk's first copy, so
+    // cross-batch dedup is still exercised in 3 batches, not 6:
+    // per-batch fixed cost is the fixture's floor). Replayed rows are
+    // either state-deduped or watermark-dropped — both paths keep them
+    // out of the output.
+    val chunks = inBatches(data, 2)
+    val replayed = (chunks :+ Nil).zip(Nil +: chunks).map { case (c, prev) => c ++ prev }
+    val kept = drive(s, Memory("q62_stream_dedup", OutputMode.Append()), replayed) { in =>
+      dedupStream(in.head.toDF("event_id", "event_type", "us", "value")
+          .select(col("event_id"), col("event_type"),
+            expr("timestamp_micros(us)").as("ts"), col("value")),
+          idCol = "event_id", tsCol = "ts")
         .select(col("event_type"), col("value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        // each chunk arrives twice — first copy, then a replay one
-        // micro-batch LATER (rides with the next chunk's first copy,
-        // so cross-batch dedup is still exercised in 3 batches, not
-        // 6: per-batch fixed cost is the fixture's floor). Replayed
-        // rows are either state-deduped or watermark-dropped — both
-        // paths keep them out of the output, exactly as before.
-        val chunks = data.grouped(math.max(1, data.length / 2 + 1)).toSeq
-        def add(ch: Seq[(Long, String, Long, Double)]): Unit =
-          ch.grouped(math.max(1, ch.length / 16 + 1))
-            .foreach(b => stream.addData(b.toIndexedSeq))
-        for (i <- 0 to chunks.length) {
-          if (i < chunks.length) add(chunks(i)) // first copy
-          if (i > 0) add(chunks(i - 1))         // replay, one batch late
-          q.processAllAvailable()
-        }
-      } finally q.stop()
     }
-    s.table(name)
-      .groupBy(col("event_type"))
+    kept.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(20,4)")).cast("double").as("sum_value"))
   }
@@ -604,27 +577,18 @@ object StreamingOps {
                            gapMinutes: Int = 30,
                            watermarkMin: Int = 30): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), tsu.as("us"), col("value"))
       .as[(Long, Long, Double)].collect().sortBy(_._2)
     val sentinel = (-1L,
       data.map(_._2).max + (gapMinutes + watermarkMin + 10) * 60000000L, 0.0)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val in = stream.toDS().toDF("user_id", "us", "value")
-      .select(col("user_id"), expr("timestamp_micros(us)").as("tsm"),
-        col("value"))
-    val name = s"q72_stream_sessions_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = sessionAgg(in, gapMinutes, watermarkMin)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try feedBatches(stream, q, data, tail = Seq(sentinel))
-      finally q.stop()
-    }
-    s.table(name).filter(col("user_id") >= 0)
+    drive(s, Memory("q72_stream_sessions", OutputMode.Append()),
+        inBatches(data, 2, Seq(sentinel))) { in =>
+      sessionAgg(in.head.toDF("user_id", "us", "value")
+        .select(col("user_id"), expr("timestamp_micros(us)").as("tsm"),
+          col("value")), gapMinutes, watermarkMin)
+    }.filter(col("user_id") >= 0)
   }
 
   /** KMV sketch state carried across micro-batches: the bounded
@@ -682,26 +646,16 @@ object StreamingOps {
     */
   def streamFunnelFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val dayUs = 86400000000L
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), col("event_type"), tsu.as("us"))
       .as[(Long, String, Long)].collect().sortBy(_._3)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
-    val name = s"q88_stream_funnel_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamFunnel(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q88_stream_funnel", OutputMode.Update()),
+      inBatches(data, 2))(in => streamFunnel(in.head))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("version").desc)
-    s.table(name)
+    updates
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
       .filter(col("t1") >= 0L)
       .groupBy(expr(s"t1 div ${dayUs}L").as("cohort_day"))
@@ -730,22 +684,11 @@ object StreamingOps {
     */
   def streamHistogramFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = s.read.parquet(s"$dir/events.parquet")
       .select(col("event_type"), col("value"))
       .as[(String, Double)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Double)]
-    val name = s"q101_stream_hist_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamHistogram(stream.toDS().toDF("event_type", "value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q101_stream_hist", OutputMode.Update()), inBatches(data, 2))(
+      in => streamHistogram(in.head.toDF("event_type", "value")))
       .groupBy(col("event_type"), col("bucket"))
       .agg(max(col("n")).as("n"))
   }
@@ -780,26 +723,13 @@ object StreamingOps {
     */
   def streamLatestFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("user_id"), col("event_type"), tsu.as("us"),
         col("event_id"), col("value"))
       .as[(Long, String, Long, Long, Double)].collect().sortBy(_._3)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long, Long, Double)]
-    val in = stream.toDS()
-      .toDF("user_id", "event_type", "t_us", "event_id", "value")
-    val name = s"q102_stream_latest_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamLatest(in)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q102_stream_latest", OutputMode.Complete()), inBatches(data, 2))(
+      in => streamLatest(in.head.toDF("user_id", "event_type", "t_us", "event_id", "value")))
       .select("user_id", "event_type", "last_us", "last_event_id",
         "last_value")
   }
@@ -860,27 +790,17 @@ object StreamingOps {
     */
   def streamMomentsFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = s.read.parquet(s"$dir/events.parquet")
       .select(col("event_type"),
         col("value").cast("decimal(18,4)").as("x"),
         get_json_object(col("props"), "$.k").cast("long")
           .cast("decimal(18,4)").as("y"))
       .as[(String, BigDecimal, Option[BigDecimal])].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, BigDecimal, Option[BigDecimal])]
-    val name = s"q89_stream_moments_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamMoments(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q89_stream_moments", OutputMode.Update()),
+      inBatches(data, 2))(in => streamMoments(in.head))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("version").desc)
-    s.table(name)
+    updates
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
       .select("event_type", "n", "mean_value", "var_value", "corr_vk")
   }
@@ -929,7 +849,6 @@ object StreamingOps {
     */
   def streamWindowedKmvFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     // distinct first: the KMV fold is idempotent over repeated hashes
@@ -939,21 +858,12 @@ object StreamingOps {
         expr("(t_us div 3600000000) * 3600000000").as("hour_us"), col("h"))
       .distinct()
       .as[(String, Long, Long)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long)]
-    val name = s"q128_stream_wkmv_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamWindowedKmv(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q128_stream_wkmv", OutputMode.Update()),
+      inBatches(data, 2))(in => streamWindowedKmv(in.head))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"), col("hour_us"))
       .orderBy(col("version").desc)
-    s.table(name)
+    updates
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1)
       .select("event_type", "hour_us", "n_kept", "kth_min", "est_distinct")
@@ -1000,7 +910,6 @@ object StreamingOps {
     */
   def streamWindowedHeavyFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("t_us"),
@@ -1008,20 +917,11 @@ object StreamingOps {
       .select(col("event_type"),
         expr("(t_us div 3600000000) * 3600000000").as("hour_us"), col("u"))
       .as[(String, Long, String)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String)]
-    val name = s"q133_stream_wheavy_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamWindowedHeavy(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q133_stream_wheavy", OutputMode.Update()),
+      inBatches(data, 2))(in => streamWindowedHeavy(in.head))
     val byWin = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"), col("hour_us"))
-    s.table(name)
+    updates
       .withColumn("maxv", max(col("version")).over(byWin))
       .filter(col("version") === col("maxv"))
       .select("event_type", "hour_us", "user", "cnt", "rnk")
@@ -1062,7 +962,6 @@ object StreamingOps {
     */
   def streamKmvFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // distinct BEFORE the collect: the KMV fold is idempotent over
     // repeated hashes, so the sketch is unchanged and the driver-side
     // MemoryStream feed (test harness only) shrinks by the token
@@ -1073,20 +972,11 @@ object StreamingOps {
       .select(col("source"), graft.functions.TextHash.polyHash(col("token")).as("h"))
       .distinct()
       .as[(String, Long)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val name = s"q33_stream_kmv_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamKmv(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q33_stream_kmv", OutputMode.Update()),
+      inBatches(data, 2))(in => streamKmv(in.head))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("version").desc)
-    s.table(name)
+    updates
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1)
       .select("source", "n_kept", "kth_min", "est_distinct")
@@ -1135,25 +1025,15 @@ object StreamingOps {
     */
   def streamHeavyFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = s.read.parquet(s"$dir/documents.parquet")
       .select(col("source"),
         explode(graft.functions.TextHash.tokens(col("text"))).as("token"))
       .as[(String, String)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val name = s"q112_stream_heavy_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamHeavyHitters(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
+    val updates = drive(s, Memory("q112_stream_heavy", OutputMode.Update()),
+      inBatches(data, 2))(in => streamHeavyHitters(in.head))
     val bySource = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
-    s.table(name)
+    updates
       .withColumn("maxv", max(col("version")).over(bySource))
       .filter(col("version") === col("maxv"))
       .select("source", "token", "cnt", "rnk")
@@ -1167,21 +1047,10 @@ object StreamingOps {
     */
   def streamSmoothFixture(s: SparkSession): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = graft.sources.SignalFixture.signal(s)
       .as[SignalRow].collect().sortBy(r => (r.experiment_id, r.channel, r.sample_idx))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignalRow]
-    val name = s"q22_stream_smooth_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = incrementalSmooth(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q22_stream_smooth", OutputMode.Append()), inBatches(data, 2))(
+      in => incrementalSmooth(in.head))
   }
 
   /** Q116 (operator) — stream-static enrichment: the event stream
@@ -1209,7 +1078,6 @@ object StreamingOps {
     */
   def streamEnrichFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = s.read.parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("value"))
       .as[(Long, Double)].collect()
@@ -1217,18 +1085,8 @@ object StreamingOps {
       .join(broadcast(s.read.parquet(s"$dir/nation.parquet")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double)]
-    val name = s"q116_stream_enrich_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = enrichStatic(stream.toDS().toDF("user_id", "value"), dim)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q116_stream_enrich", OutputMode.Complete()), inBatches(data, 2))(
+      in => enrichStatic(in.head.toDF("user_id", "value"), dim))
       .select(col("n_name"), col("n_events"),
         col("sv").cast("double").as("sum_value"))
   }
@@ -1290,7 +1148,6 @@ object StreamingOps {
     */
   def streamAsofFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev
@@ -1298,19 +1155,8 @@ object StreamingOps {
         col("value"), tsu.as("us"))
       .as[(Long, Long, String, Double, Long)].collect()
       .sortBy(r => (r._5, r._3 != "click", r._1))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double, Long)]
-    val name = s"q149_stream_asof_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = streamAsof(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q149_stream_asof", OutputMode.Append()), inBatches(data, 2))(
+      in => streamAsof(in.head))
   }
 
   /** q25 — the full streaming envelope pipeline over the fixture via
@@ -1319,21 +1165,10 @@ object StreamingOps {
     */
   def streamEnvelopesFixture(s: SparkSession): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = graft.sources.SignalFixture.signal(s)
       .as[SignalRow].collect().sortBy(r => (r.experiment_id, r.channel, r.sample_idx))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignalRow]
-    val name = s"q25_stream_env_${System.nanoTime()}"
-    withFewStatePartitions(s) {
-      val q = incrementalEnvelopes(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        feedBatches(stream, q, data)
-      } finally q.stop()
-    }
-    s.table(name)
+    drive(s, Memory("q25_stream_env", OutputMode.Append()), inBatches(data, 2))(
+      in => incrementalEnvelopes(in.head))
   }
 
   /** Q198 (operator) — CHAINED stateful streaming aggregations: 10-min
@@ -1366,26 +1201,17 @@ object StreamingOps {
   def chainedWindowsFixture(s: SparkSession, dir: String,
                             watermarkMin: Int = 30): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(String, Long)].collect() // fixture feed only
     val sentinel = ("__sentinel__",
       data.map(_._2).max + (watermarkMin + 80) * 60000000L)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val name = s"q198_chained_${System.nanoTime()}"
-    val in = stream.toDS().toDF("event_type", "us")
-      .withColumn("tsm", expr("timestamp_micros(us)"))
-    withFewStatePartitions(s) {
-      val q = chainedWindows(in, watermarkMin = watermarkMin)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try feedBatches(stream, q, data, tail = Seq(sentinel))
-      finally q.stop()
-    }
-    s.table(name).filter(col("event_type") =!= "__sentinel__")
+    drive(s, Memory("q198_chained", OutputMode.Append()),
+        inBatches(data, 2, Seq(sentinel))) { in =>
+      chainedWindows(in.head.toDF("event_type", "us")
+        .withColumn("tsm", expr("timestamp_micros(us)")), watermarkMin = watermarkMin)
+    }.filter(col("event_type") =!= "__sentinel__")
   }
 
   /** Q199 (operator) — watermark-scoped streaming deduplication:
@@ -1419,27 +1245,17 @@ object StreamingOps {
     */
   def dedupWithinWatermarkFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = s.read.parquet(s"$dir/events.parquet")
     val tsu = tsMicros(ev)
     val data = ev.select(col("event_id"), col("event_type"), tsu.as("us"))
       .orderBy(col("us")).as[(Long, String, Long)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
-    val name = s"q199_dedup_wm_${System.nanoTime()}"
-    val in = stream.toDS().toDF("event_id", "event_type", "us")
-      .withColumn("tsm", expr("timestamp_micros(us)"))
-    withFewStatePartitions(s) {
-      val q = dedupWithinWatermark(in, watermarkMin = 45 * 24 * 60)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      // 3 chunks of (data ++ data): chunk 2 carries the start of the
-      // second copy — duplicates of chunk 1's ids arriving a batch
-      // later, deduped by state, not by arrival-time luck
-      try feedBatches(stream, q, data ++ data, nBatches = 3)
-      finally q.stop()
-    }
-    s.table(name).select(col("event_id"), col("event_type"))
+    // 3 chunks of (data ++ data): chunk 2 carries the start of the
+    // second copy — duplicates of chunk 1's ids arriving a batch
+    // later, deduped by state, not by arrival-time luck
+    drive(s, Memory("q199_dedup_wm", OutputMode.Append()), inBatches(data ++ data, 3)) { in =>
+      dedupWithinWatermark(in.head.toDF("event_id", "event_type", "us")
+        .withColumn("tsm", expr("timestamp_micros(us)")), watermarkMin = 45 * 24 * 60)
+    }.select(col("event_id"), col("event_type"))
   }
 
   /** Q291 (operator) — STREAMING span scrub against a persisted span
@@ -1527,43 +1343,22 @@ object StreamingOps {
   def streamSpanScrubFixture(s: SparkSession, dir: String, w: Int = 8,
                              modN: Int = 5, nShards: Int = 8): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (incoming, base) =
       graft.operators.Dedup.streamScrubParts(s, dir, w, modN, nShards)
     val occ = graft.operators.Dedup.spanOccurrencesOf(incoming, w)
       .select(col("doc_id"), col("pos"), col("h"))
       .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val name = s"q291_stream_span_scrub_${System.nanoTime()}"
-    val in = stream.toDS().toDF("doc_id", "pos", "h")
-      // event time: one second per document — ascending with the feed
-      .withColumn("ts", expr("timestamp_micros(doc_id * 1000000)"))
     // horizon: past the whole feed (fixture-only; production uses the
     // ingest-lag horizon and lets idle hash state expire)
     val horizon = occ.lastOption.map(o =>
       (o._1 + 2) * 1000L).getOrElse(1000L)
-    withFewStatePartitions(s) {
-      val q = streamSpanScrub(in,
-          graft.operators.Dedup.readSpanIndex(s, base),
-          horizonMs = horizon)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        val docIds = occ.map(_._1).distinct
-        val chunks = docIds.grouped(math.max(1, docIds.length / 3 + 1)).toSeq
-        chunks.foreach { ids =>
-          val set = ids.toSet
-          val chunk = occ.filter(o => set(o._1))
-          if (chunk.nonEmpty) {
-            chunk.grouped(math.max(1, chunk.length / 32 + 1))
-              .foreach(b => stream.addData(b.toIndexedSeq))
-            q.processAllAvailable()
-          }
-        }
-      } finally q.stop()
-    }
-    val removals = s.table(name).select(col("doc_id"), col("pos"))
+    val removals = drive(s, Memory("q291_stream_span_scrub", OutputMode.Append()),
+        byDoc(occ, 3)(_._1)) { in =>
+      streamSpanScrub(in.head.toDF("doc_id", "pos", "h")
+          // event time: one second per document — ascending with the feed
+          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000)")),
+        graft.operators.Dedup.readSpanIndex(s, base), horizonMs = horizon)
+    }.select(col("doc_id"), col("pos"))
     graft.operators.Dedup.scrubWithRemovals(incoming, removals, w)
   }
 
@@ -1595,7 +1390,6 @@ object StreamingOps {
                                     w: Int = 8, modN: Int = 5,
                                     nShards: Int = 8): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (incoming, base) = graft.operators.Dedup.streamScrubParts(
       s, dir, w, modN, nShards, family = "span_index_streamref_base")
     // pre-refresh audit of the base generation (nShards rows)
@@ -1604,51 +1398,28 @@ object StreamingOps {
     val occ = graft.operators.Dedup.spanOccurrencesOf(incoming, w)
       .select(col("doc_id"), col("h"))
       .as[(Long, Long)].collect().sortBy(identity)
-    val deltaRoot = ArtifactRootForStream(dir, w, modN, nShards)
+    val deltaRoot = graft.operators.ArtifactStore.invocationDir(
+      "span_index_streamref", dir, w.toString, modN.toString,
+      nShards.toString)
     val deltas = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = stream.toDS().toDF("doc_id", "h")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        import scala.jdk.CollectionConverters._
-        val sofar = base +: deltas.asScala.toSeq
-        val novel = batch.select(col("h")).distinct()
-          .join(graft.operators.Dedup.readSpanIndexDirs(batch.sparkSession,
-            sofar), Seq("h"), "left_anti")
-        val gen = s"$deltaRoot/b$id"
-        graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
-        deltas.add(gen): Unit
-      }
-      .outputMode(OutputMode.Update()).start()
-    try {
-      // three doc-aligned micro-batches: cross-batch novelty must be
-      // resolved by READING the earlier generations, not by state
-      val docIds = occ.map(_._1).distinct
-      val chunks = docIds.grouped(math.max(1, docIds.length / 3 + 1)).toSeq
-      chunks.foreach { ids =>
-        val set = ids.toSet
-        val chunk = occ.filter(o => set(o._1))
-        if (chunk.nonEmpty) {
-          chunk.grouped(math.max(1, chunk.length / 32 + 1))
-            .foreach(b => stream.addData(b.toIndexedSeq))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    // three doc-aligned micro-batches: cross-batch novelty must be
+    // resolved by READING the earlier generations, not by state
+    drive(s, EachBatch { (batch, id) =>
+      import scala.jdk.CollectionConverters._
+      val sofar = base +: deltas.asScala.toSeq
+      val novel = batch.select(col("h")).distinct()
+        .join(graft.operators.Dedup.readSpanIndexDirs(batch.sparkSession,
+          sofar), Seq("h"), "left_anti")
+      val gen = s"$deltaRoot/b$id"
+      graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
+      deltas.add(gen): Unit
+    }, byDoc(occ, 3)(_._1))(_.head.toDF("doc_id", "h"))
     import scala.jdk.CollectionConverters._
     graft.operators.Dedup.refreshAuditOf(s, pre,
       graft.operators.Dedup.shardCounts(s, base +: deltas.asScala.toSeq,
         "n_refreshed"),
       "shard", "n_refreshed")
   }
-
-  /** One scratch root per (corpus, params) invocation for the q295
-    * delta generations (ArtifactStore generation discipline). */
-  private def ArtifactRootForStream(dir: String, w: Int, modN: Int,
-                                    nShards: Int): String =
-    graft.operators.ArtifactStore.invocationDir("span_index_streamref",
-      dir, w.toString, modN.toString, nShards.toString)
 
   /** Q311 — STREAMING span-index refresh through the MANIFEST: q295's
     * write path where the cross-batch memory is the COMMITTED MANIFEST
@@ -1673,7 +1444,6 @@ object StreamingOps {
                                    w: Int = 8, modN: Int = 5,
                                    nShards: Int = 8): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (incoming, base) = graft.operators.Dedup.streamScrubParts(
       s, dir, w, modN, nShards, family = "span_index_streammf_base")
     val pre = graft.operators.Dedup.shardCounts(s, Seq(base), "n_existing")
@@ -1688,44 +1458,26 @@ object StreamingOps {
       "span_manifest_stream", dir, w.toString, modN.toString,
       nShards.toString)
     graft.operators.IndexManifest.commit(s, mroot, Seq(base), graft.operators.IndexManifest.SpanIndexFormat)
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = stream.toDS().toDF("doc_id", "h")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        val resolved =
-          graft.operators.IndexManifest.resolve(ss, mroot, graft.operators.IndexManifest.SpanIndexFormat)
-        // retry-idempotence: if this batch's generation is already
-        // COMMITTED, the whole step is done — rewriting it in place
-        // would delete files a live manifest names (the reader race
-        // the manifest exists to prevent). If the crash fell between
-        // delta write and commit, gen is uncommitted (invisible) and
-        // the rewrite below is safe.
-        if (!resolved.contains(gen)) {
-          val novel = batch.select(col("h")).distinct()
-            .join(graft.operators.Dedup.readSpanIndexDirs(ss, resolved),
-              Seq("h"), "left_anti")
-          graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            resolved :+ gen, graft.operators.IndexManifest.SpanIndexFormat)
-        }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      val resolved =
+        graft.operators.IndexManifest.resolve(ss, mroot, graft.operators.IndexManifest.SpanIndexFormat)
+      // retry-idempotence: if this batch's generation is already
+      // COMMITTED, the whole step is done — rewriting it in place
+      // would delete files a live manifest names (the reader race
+      // the manifest exists to prevent). If the crash fell between
+      // delta write and commit, gen is uncommitted (invisible) and
+      // the rewrite below is safe.
+      if (!resolved.contains(gen)) {
+        val novel = batch.select(col("h")).distinct()
+          .join(graft.operators.Dedup.readSpanIndexDirs(ss, resolved),
+            Seq("h"), "left_anti")
+        graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          resolved :+ gen, graft.operators.IndexManifest.SpanIndexFormat)
       }
-      .outputMode(OutputMode.Update()).start()
-    try {
-      val docIds = occ.map(_._1).distinct
-      val chunks = docIds.grouped(math.max(1, docIds.length / 3 + 1)).toSeq
-      chunks.foreach { ids =>
-        val set = ids.toSet
-        val chunk = occ.filter(o => set(o._1))
-        if (chunk.nonEmpty) {
-          chunk.grouped(math.max(1, chunk.length / 32 + 1))
-            .foreach(b => stream.addData(b.toIndexedSeq))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    }, byDoc(occ, 3)(_._1))(_.head.toDF("doc_id", "h"))
     graft.operators.Dedup.refreshAuditOf(s, pre,
       graft.operators.Dedup.shardCounts(s,
         graft.operators.IndexManifest.resolve(s, mroot, graft.operators.IndexManifest.SpanIndexFormat),
@@ -1775,7 +1527,6 @@ object StreamingOps {
                                         nShards: Int = 8)
       : (Seq[String], DataFrame) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (incoming, base) = graft.operators.Dedup.streamRetentionParts(
       s, dir, w, modN, nShards)
     val pre = graft.operators.Dedup.shardCounts(s, Seq(base), "n_existing")
@@ -1792,61 +1543,43 @@ object StreamingOps {
     graft.operators.IndexManifest.commit(s, mroot, Seq(base), graft.operators.IndexManifest.SpanIndexFormat)
     val deleted =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = stream.toDS().toDF("doc_id", "h")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        val resolved =
-          graft.operators.IndexManifest.resolve(ss, mroot, graft.operators.IndexManifest.SpanIndexFormat)
-        // the retry guard must check EVERY committed manifest, not the
-        // latest resolve: this committer's compact commit REPLACES gen
-        // in the live set, so after a crash between compact-commit and
-        // retire a redelivered batch would pass a resolve-only check
-        // and overwrite gen in place while the kept previous manifest
-        // still names it (round-14 review) — mutating a committed
-        // snapshot. A gen committed ANYWHERE is immutable; its
-        // content is already absorbed (the grow commit landed), so
-        // skipping the whole step is content-neutral and the next
-        // batch's compaction folds it.
-        if (!graft.operators.IndexManifest.committedGens(ss, mroot)
-            .contains(gen)) {
-          val novel = batch.select(col("h")).distinct()
-            .join(graft.operators.Dedup.readSpanIndexDirs(ss, resolved),
-              Seq("h"), "left_anti")
-          graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            resolved :+ gen, graft.operators.IndexManifest.SpanIndexFormat)
-          // OPTIMIZE + switch: fold the live set to one generation
-          val compacted = graft.operators.ArtifactStore.invocationDir(
-            "span_index_streamretc", dir, w.toString, modN.toString,
-            nShards.toString)
-          graft.operators.Dedup.writeSpanIndex(
-            graft.operators.Dedup.readSpanIndexDirs(ss, resolved :+ gen),
-            compacted, nShards)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            Seq(compacted), graft.operators.IndexManifest.SpanIndexFormat)
-          // VACUUM between micro-batches: the GC under test
-          graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
-            .foreach(deleted.add(_): Unit)
-        }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      val resolved =
+        graft.operators.IndexManifest.resolve(ss, mroot, graft.operators.IndexManifest.SpanIndexFormat)
+      // the retry guard must check EVERY committed manifest, not the
+      // latest resolve: this committer's compact commit REPLACES gen
+      // in the live set, so after a crash between compact-commit and
+      // retire a redelivered batch would pass a resolve-only check
+      // and overwrite gen in place while the kept previous manifest
+      // still names it (round-14 review) — mutating a committed
+      // snapshot. A gen committed ANYWHERE is immutable; its
+      // content is already absorbed (the grow commit landed), so
+      // skipping the whole step is content-neutral and the next
+      // batch's compaction folds it.
+      if (!graft.operators.IndexManifest.committedGens(ss, mroot)
+          .contains(gen)) {
+        val novel = batch.select(col("h")).distinct()
+          .join(graft.operators.Dedup.readSpanIndexDirs(ss, resolved),
+            Seq("h"), "left_anti")
+        graft.operators.Dedup.writeSpanDelta(novel, gen, nShards)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          resolved :+ gen, graft.operators.IndexManifest.SpanIndexFormat)
+        // OPTIMIZE + switch: fold the live set to one generation
+        val compacted = graft.operators.ArtifactStore.invocationDir(
+          "span_index_streamretc", dir, w.toString, modN.toString,
+          nShards.toString)
+        graft.operators.Dedup.writeSpanIndex(
+          graft.operators.Dedup.readSpanIndexDirs(ss, resolved :+ gen),
+          compacted, nShards)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          Seq(compacted), graft.operators.IndexManifest.SpanIndexFormat)
+        // VACUUM between micro-batches: the GC under test
+        graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
+          .foreach(deleted.add(_): Unit)
       }
-      .outputMode(OutputMode.Update()).start()
-    try {
-      val docIds = occ.map(_._1).distinct
-      val chunks = docIds.grouped(math.max(1, docIds.length / 3 + 1)).toSeq
-      chunks.foreach { ids =>
-        val set = ids.toSet
-        val chunk = occ.filter(o => set(o._1))
-        if (chunk.nonEmpty) {
-          chunk.grouped(math.max(1, chunk.length / 32 + 1))
-            .foreach(b => stream.addData(b.toIndexedSeq))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    }, byDoc(occ, 3)(_._1))(_.head.toDF("doc_id", "h"))
     import scala.jdk.CollectionConverters._
     (deleted.asScala.toSeq,
       graft.operators.Dedup.refreshAuditOf(s, pre,
@@ -1885,7 +1618,6 @@ object StreamingOps {
                               modN: Int = 5,
                               nShards: Int = 8): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (incoming, base) =
       graft.operators.Dedup.streamSigParts(s, dir, modN, nShards)
     val feed = incoming.select(col("doc_id"), col("text"))
@@ -1893,20 +1625,13 @@ object StreamingOps {
     val deltaRoot = graft.operators.ArtifactStore.invocationDir(
       "lsh_sig_stream", dir, modN.toString, nShards.toString)
     val gens = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = stream.toDS().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val gen = s"$deltaRoot/b$id"
-        graft.operators.Dedup.writeLshSigIndex(
-          graft.operators.Dedup.minhashSignatures(batch.sparkSession, batch),
-          gen, nShards)
-        gens.put(id, gen): Unit
-      }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    drive(s, EachBatch { (batch, id) =>
+      val gen = s"$deltaRoot/b$id"
+      graft.operators.Dedup.writeLshSigIndex(
+        graft.operators.Dedup.minhashSignatures(batch.sparkSession, batch),
+        gen, nShards)
+      gens.put(id, gen): Unit
+    }, inBatches(feed, 3))(_.head.toDF("doc_id", "text"))
     import scala.jdk.CollectionConverters._
     graft.operators.Dedup.sigRefreshAudit(s, base, gens.values.asScala.toSeq)
   }
@@ -1948,7 +1673,6 @@ object StreamingOps {
                                            nShards: Int = 8)
       : (Seq[String], DataFrame) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val F = graft.operators.IndexManifest.LshSigFormat
     val (incoming, base) = graft.operators.Dedup
       .streamSigRetentionParts(s, dir, modN, nShards)
@@ -1968,44 +1692,37 @@ object StreamingOps {
     graft.operators.IndexManifest.commit(s, mroot, Seq(base), F)
     val deleted =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = stream.toDS().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
-        // the q319 retry guard: a gen committed ANYWHERE is immutable
-        // (this committer's compact commit replaces it in the live
-        // set, so a resolve-only check would let a redelivered batch
-        // overwrite a generation a kept manifest still names); its
-        // content is already absorbed, so skipping is content-neutral
-        if (!graft.operators.IndexManifest.committedGens(ss, mroot)
-            .contains(gen)) {
-          // signature rows are per-doc and the feed's strata disjoint
-          // — no anti-join, the q322 shape
-          graft.operators.Dedup.writeLshSigIndex(
-            graft.operators.Dedup.minhashSignatures(ss, batch),
-            gen, nShards)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            resolved :+ gen, F)
-          // OPTIMIZE + switch: fold the live set to one generation
-          val compacted = graft.operators.ArtifactStore.invocationDir(
-            "lsh_sig_streamretc", dir, modN.toString, nShards.toString)
-          graft.operators.Dedup.writeLshSigIndex(
-            graft.operators.Dedup.readLshSigIndexDirs(ss, resolved :+ gen),
-            compacted, nShards)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            Seq(compacted), F)
-          // VACUUM between micro-batches: the GC under test
-          graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
-            .foreach(deleted.add(_): Unit)
-        }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
+      // the q319 retry guard: a gen committed ANYWHERE is immutable
+      // (this committer's compact commit replaces it in the live
+      // set, so a resolve-only check would let a redelivered batch
+      // overwrite a generation a kept manifest still names); its
+      // content is already absorbed, so skipping is content-neutral
+      if (!graft.operators.IndexManifest.committedGens(ss, mroot)
+          .contains(gen)) {
+        // signature rows are per-doc and the feed's strata disjoint
+        // — no anti-join, the q322 shape
+        graft.operators.Dedup.writeLshSigIndex(
+          graft.operators.Dedup.minhashSignatures(ss, batch),
+          gen, nShards)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          resolved :+ gen, F)
+        // OPTIMIZE + switch: fold the live set to one generation
+        val compacted = graft.operators.ArtifactStore.invocationDir(
+          "lsh_sig_streamretc", dir, modN.toString, nShards.toString)
+        graft.operators.Dedup.writeLshSigIndex(
+          graft.operators.Dedup.readLshSigIndexDirs(ss, resolved :+ gen),
+          compacted, nShards)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          Seq(compacted), F)
+        // VACUUM between micro-batches: the GC under test
+        graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
+          .foreach(deleted.add(_): Unit)
       }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    }, inBatches(feed, 3))(_.head.toDF("doc_id", "text"))
     import scala.jdk.CollectionConverters._
     (deleted.asScala.toSeq,
       graft.operators.Dedup.refreshAuditOf(s, pre,
@@ -2044,7 +1761,6 @@ object StreamingOps {
                          nCentroids: Int = 8,
                          modN: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (cent, existingStats, incoming) = graft.operators.Similarity
       .streamDriftParts(s, dir, nCentroids, modN)
     val feed = incoming.select(col("vec_id"), col("de"))
@@ -2052,21 +1768,14 @@ object StreamingOps {
     val root = graft.operators.ArtifactStore.invocationDir(
       "ivf_drift_stream", dir, nCentroids.toString, modN.toString)
     val gens = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val gen = s"$root/b$id"
-        graft.operators.Similarity.driftPartials(batch,
-            graft.operators.Similarity.readIvfCentroids(
-              batch.sparkSession, cent), "n_new", "new_sum")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(gen)
-        gens.put(id, gen): Unit
-      }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    drive(s, EachBatch { (batch, id) =>
+      val gen = s"$root/b$id"
+      graft.operators.Similarity.driftPartials(batch,
+          graft.operators.Similarity.readIvfCentroids(
+            batch.sparkSession, cent), "n_new", "new_sum")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(gen)
+      gens.put(id, gen): Unit
+    }, inBatches(feed, 3))(_.head.toDF("vec_id", "de"))
     import scala.jdk.CollectionConverters._
     val schema = "list_id BIGINT, n_new BIGINT, new_sum DECIMAL(38,10)"
     val partials =
@@ -2104,7 +1813,6 @@ object StreamingOps {
                              nCentroids: Int = 8,
                              modN: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val (cent, base, incoming) = graft.operators.Similarity
       .streamIngestParts(s, dir, nCentroids, modN)
     val feed = incoming.select(col("vec_id"), col("de"))
@@ -2118,36 +1826,20 @@ object StreamingOps {
     // batch against itself and land an empty delta)
     val deltas =
       new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        import scala.jdk.CollectionConverters._
-        val prior = base +: deltas.asScala.toSeq
-          .collect { case (i, d) if i != id => d }
-        val gen = s"$deltaRoot/b$id"
-        graft.operators.Similarity.ingestBatch(batch.sparkSession, cent,
-          prior, batch, gen)
-        deltas.put(id, gen): Unit
-      }
-      .outputMode(OutputMode.Update()).start()
-    try {
-      // three vec_id-aligned micro-batches; a batch-2 re-send of a
-      // batch-1 vector must be dropped by READING batch 1's delta
-      val chunks = feed.grouped(math.max(1, feed.length / 3 + 1)).toSeq
-      chunks.zipWithIndex.foreach { case (chunk, i) =>
-        if (chunk.nonEmpty) {
-          // re-deliver the previous chunk's tail with this batch: the
-          // anti-join against prior generations must drop it
-          val redeliver =
-            if (i > 0) chunks(i - 1).takeRight(2)
-            else Array.empty[(Long, Array[Double])]
-          stream.addData((redeliver ++ chunk).toIndexedSeq)
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    // vec_id-aligned micro-batches, each re-delivering the previous
+    // chunk's last two vectors: the anti-join against prior generations
+    // must drop them
+    val chunks = inBatches(feed, 3)
+    val redelivered = chunks.zip(Nil +: chunks).map { case (c, prev) => prev.takeRight(2) ++ c }
+    drive(s, EachBatch { (batch, id) =>
+      import scala.jdk.CollectionConverters._
+      val prior = base +: deltas.asScala.toSeq
+        .collect { case (i, d) if i != id => d }
+      val gen = s"$deltaRoot/b$id"
+      graft.operators.Similarity.ingestBatch(batch.sparkSession, cent,
+        prior, batch, gen)
+      deltas.put(id, gen): Unit
+    }, redelivered)(_.head.toDF("vec_id", "de"))
     import scala.jdk.CollectionConverters._
     graft.operators.Similarity.postingsAudit(s, base,
       deltas.asScala.values.toSeq)
@@ -2177,7 +1869,6 @@ object StreamingOps {
                                subDim: Int = 8, codebookK: Int = 16,
                                modN: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val F = graft.operators.IndexManifest
     val (cent, cb, base, incoming) = graft.operators.Similarity
       .streamCodedParts(s, dir, nCentroids, nSub, subDim, codebookK, modN)
@@ -2189,51 +1880,37 @@ object StreamingOps {
       "ivfpq_manifest_stream", dir, nCentroids.toString, modN.toString)
     F.commitTagged(s, mroot, Seq(cb -> F.PqCodebookFormat,
       base -> F.IvfPqPostingsFormat))
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        // the q319 retry guard: a generation committed ANYWHERE is
-        // immutable, so a foreachBatch RETRY of batch i skips the
-        // whole step instead of overwriting the committed b$i in
-        // place (round-16 ADVICE: unlike q301, every batch here
-        // COMMITS its delta, so an overwrite would mutate a
-        // generation kept manifests still name). Content-neutral:
-        // the batch's rows were already absorbed by the commit.
-        if (!F.committedGens(ss, mroot).contains(gen)) {
-          // prior generations come from the RESOLVED head (base plus
-          // every earlier batch's committed delta, in commit order) —
-          // the anti-join side the re-delivery idempotence needs
-          val prior = F.resolveParts(ss, mroot,
-            Set(F.PqCodebookFormat, F.IvfPqPostingsFormat))(
-            F.IvfPqPostingsFormat)
-          graft.operators.Similarity.codedIngestBatch(ss, cent, cb,
-            prior, batch, nSub, subDim, gen)
-          // the composite switch: codebook re-named beside the grown
-          // postings set in ONE commit — mid-stream readers always
-          // resolve a consistent pair
-          F.commitTagged(ss, mroot, (cb -> F.PqCodebookFormat) +:
-            (prior :+ gen).map(_ -> F.IvfPqPostingsFormat))
-        }
+    // vec_id-aligned micro-batches, each re-delivering the previous
+    // chunk's last two vectors: the anti-join against prior generations
+    // must drop them
+    val chunks = inBatches(feed, 3)
+    val redelivered = chunks.zip(Nil +: chunks).map { case (c, prev) => prev.takeRight(2) ++ c }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      // the q319 retry guard: a generation committed ANYWHERE is
+      // immutable, so a foreachBatch RETRY of batch i skips the
+      // whole step instead of overwriting the committed b$i in
+      // place (round-16 ADVICE: unlike q301, every batch here
+      // COMMITS its delta, so an overwrite would mutate a
+      // generation kept manifests still name). Content-neutral:
+      // the batch's rows were already absorbed by the commit.
+      if (!F.committedGens(ss, mroot).contains(gen)) {
+        // prior generations come from the RESOLVED head (base plus
+        // every earlier batch's committed delta, in commit order) —
+        // the anti-join side the re-delivery idempotence needs
+        val prior = F.resolveParts(ss, mroot,
+          Set(F.PqCodebookFormat, F.IvfPqPostingsFormat))(
+          F.IvfPqPostingsFormat)
+        graft.operators.Similarity.codedIngestBatch(ss, cent, cb,
+          prior, batch, nSub, subDim, gen)
+        // the composite switch: codebook re-named beside the grown
+        // postings set in ONE commit — mid-stream readers always
+        // resolve a consistent pair
+        F.commitTagged(ss, mroot, (cb -> F.PqCodebookFormat) +:
+          (prior :+ gen).map(_ -> F.IvfPqPostingsFormat))
       }
-      .outputMode(OutputMode.Update()).start()
-    try {
-      val chunks = feed.grouped(math.max(1, feed.length / 3 + 1)).toSeq
-      chunks.zipWithIndex.foreach { case (chunk, i) =>
-        if (chunk.nonEmpty) {
-          // re-deliver the previous chunk's tail: the anti-join
-          // against prior coded generations must drop it
-          val redeliver =
-            if (i > 0) chunks(i - 1).takeRight(2)
-            else Array.empty[(Long, Array[Double])]
-          stream.addData((redeliver ++ chunk).toIndexedSeq)
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    }, redelivered)(_.head.toDF("vec_id", "de"))
     val parts = F.resolveParts(s, mroot,
       Set(F.PqCodebookFormat, F.IvfPqPostingsFormat))
     val posts = parts(F.IvfPqPostingsFormat)
@@ -2278,7 +1955,6 @@ object StreamingOps {
                                            k: Int = 5)
       : (Seq[String], DataFrame) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val F = graft.operators.IndexManifest.IvfPostingsFormat
     val (cent, base, incoming) = graft.operators.Similarity
       .streamAnnRetentionParts(s, dir, nCentroids, modN)
@@ -2291,42 +1967,35 @@ object StreamingOps {
     graft.operators.IndexManifest.commit(s, mroot, Seq(base), F)
     val deleted =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
-        // the q319 retry guard: a gen committed ANYWHERE is immutable
-        // (this committer's own compact commit replaces it in the live
-        // set); its content is already absorbed, so skipping the whole
-        // step on redelivery is content-neutral
-        if (!graft.operators.IndexManifest.committedGens(ss, mroot)
-            .contains(gen)) {
-          // frozen-quantizer assignment; batches are vec-disjoint so
-          // no anti-join (the q318/q322 delta shape)
-          graft.operators.Similarity.assignBatch(ss, cent, batch, gen)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            resolved :+ gen, F)
-          // OPTIMIZE + switch: fold the live set to one generation
-          val compacted = graft.operators.ArtifactStore.invocationDir(
-            "ivf_postings_streamretc", dir, nCentroids.toString,
-            modN.toString)
-          graft.operators.Similarity.writeIvfPostings(
-            graft.operators.Similarity.readIvfPostingsDirs(
-              ss, resolved :+ gen), compacted)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            Seq(compacted), F)
-          // VACUUM between micro-batches: the GC under test
-          graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
-            .foreach(deleted.add(_): Unit)
-        }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
+      // the q319 retry guard: a gen committed ANYWHERE is immutable
+      // (this committer's own compact commit replaces it in the live
+      // set); its content is already absorbed, so skipping the whole
+      // step on redelivery is content-neutral
+      if (!graft.operators.IndexManifest.committedGens(ss, mroot)
+          .contains(gen)) {
+        // frozen-quantizer assignment; batches are vec-disjoint so
+        // no anti-join (the q318/q322 delta shape)
+        graft.operators.Similarity.assignBatch(ss, cent, batch, gen)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          resolved :+ gen, F)
+        // OPTIMIZE + switch: fold the live set to one generation
+        val compacted = graft.operators.ArtifactStore.invocationDir(
+          "ivf_postings_streamretc", dir, nCentroids.toString,
+          modN.toString)
+        graft.operators.Similarity.writeIvfPostings(
+          graft.operators.Similarity.readIvfPostingsDirs(
+            ss, resolved :+ gen), compacted)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          Seq(compacted), F)
+        // VACUUM between micro-batches: the GC under test
+        graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
+          .foreach(deleted.add(_): Unit)
       }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    }, inBatches(feed, 3))(_.head.toDF("vec_id", "de"))
     import scala.jdk.CollectionConverters._
     (deleted.asScala.toSeq,
       graft.operators.Similarity.searchPostingsDirs(s, dir, cent,
@@ -2366,7 +2035,6 @@ object StreamingOps {
                                          k: Int = 5)
       : (Seq[Boolean], Seq[String], DataFrame) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val F = graft.operators.IndexManifest.IvfPostingsFormat
     val (cent, base, incoming) = graft.operators.Similarity
       .streamAnnRetentionParts(s, dir, nCentroids, modN, fam = "strig")
@@ -2380,41 +2048,34 @@ object StreamingOps {
     val ran = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
     val deleted =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
-        // the q319 retry guard: a gen committed ANYWHERE is immutable
-        if (!graft.operators.IndexManifest.committedGens(ss, mroot)
-            .contains(gen)) {
-          graft.operators.Similarity.assignBatch(ss, cent, batch, gen)
-          graft.operators.IndexManifest.commit(ss, mroot,
-            resolved :+ gen, F)
-          // OPTIMIZE only when the live set exceeds the trigger —
-          // the q331 cadence inside the stream
-          val (_, folded) = graft.operators.IndexManifest
-            .compactIfNeeded(ss, mroot, F, maxGens = 2) { live =>
-              val compacted = graft.operators.ArtifactStore
-                .invocationDir("ivf_postings_strigc", dir,
-                  nCentroids.toString, modN.toString)
-              graft.operators.Similarity.writeIvfPostings(
-                graft.operators.Similarity.readIvfPostingsDirs(ss, live),
-                compacted)
-              compacted
-            }
-          ran.add(folded)
-          // VACUUM between micro-batches: the GC under test
-          graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
-            .foreach(deleted.add(_): Unit)
-        }
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      val resolved = graft.operators.IndexManifest.resolve(ss, mroot, F)
+      // the q319 retry guard: a gen committed ANYWHERE is immutable
+      if (!graft.operators.IndexManifest.committedGens(ss, mroot)
+          .contains(gen)) {
+        graft.operators.Similarity.assignBatch(ss, cent, batch, gen)
+        graft.operators.IndexManifest.commit(ss, mroot,
+          resolved :+ gen, F)
+        // OPTIMIZE only when the live set exceeds the trigger —
+        // the q331 cadence inside the stream
+        val (_, folded) = graft.operators.IndexManifest
+          .compactIfNeeded(ss, mroot, F, maxGens = 2) { live =>
+            val compacted = graft.operators.ArtifactStore
+              .invocationDir("ivf_postings_strigc", dir,
+                nCentroids.toString, modN.toString)
+            graft.operators.Similarity.writeIvfPostings(
+              graft.operators.Similarity.readIvfPostingsDirs(ss, live),
+              compacted)
+            compacted
+          }
+        ran.add(folded)
+        // VACUUM between micro-batches: the GC under test
+        graft.operators.IndexManifest.retire(ss, mroot, keepLast = 2)
+          .foreach(deleted.add(_): Unit)
       }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    }, inBatches(feed, 3))(_.head.toDF("vec_id", "de"))
     import scala.jdk.CollectionConverters._
     (ran.asScala.toSeq, deleted.asScala.toSeq,
       graft.operators.Similarity.searchPostingsDirs(s, dir, cent,
@@ -2467,7 +2128,6 @@ object StreamingOps {
                                              nProbe: Int = 2, k: Int = 5)
       : (Seq[Boolean], Seq[String], String, DataFrame) = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val F = graft.operators.IndexManifest
     val fmts = Set(F.PqCodebookFormat, F.IvfPqPostingsFormat)
     val (cent, cb, base, incoming) = graft.operators.Similarity
@@ -2484,46 +2144,39 @@ object StreamingOps {
     val ran = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
     val deleted =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = stream.toDS().toDF("vec_id", "de")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ss = batch.sparkSession
-        val gen = s"$deltaRoot/b$id"
-        // the q319 retry guard: a gen committed ANYWHERE is immutable
-        if (!F.committedGens(ss, mroot).contains(gen)) {
-          val prior = F.resolveParts(ss, mroot, fmts)(F.IvfPqPostingsFormat)
-          // frozen-pair encode; batches are vec-disjoint so no
-          // anti-join (the q318/q339 delta shape)
-          graft.operators.Similarity.codedAssignBatch(ss, cent, cb,
-            batch, nSub, subDim, gen)
-          F.commitTagged(ss, mroot, (cb -> F.PqCodebookFormat) +:
-            (prior :+ gen).map(_ -> F.IvfPqPostingsFormat))
-          // OPTIMIZE only when the postings family exceeds the
-          // trigger; the codebook rolls forward UNCHANGED in the
-          // same switch commit (q334's orthogonality rule)
-          val (_, folded) = F.compactPartsIfNeeded(ss, mroot,
-            F.IvfPqPostingsFormat, fmts, maxGens = 2) { live =>
-            val compacted = graft.operators.ArtifactStore.invocationDir(
-              "ivfpq_sretc", dir, nCentroids.toString, modN.toString)
-            graft.operators.Similarity.writeIvfPqPostings(
-              live.map(graft.operators.Similarity
-                .readIvfPqPostings(ss, _)).reduce(_ unionAll _),
-              compacted)
-            compacted
-          }
-          ran.add(folded)
-          // VACUUM between micro-batches: the retention GC under test
-          // — the shared codebook is named by EVERY kept manifest, so
-          // the exclusivity rule must keep it alive every pass
-          F.retire(ss, mroot, keepLast = 2)
-            .foreach(deleted.add(_): Unit)
+    drive(s, EachBatch { (batch, id) =>
+      val ss = batch.sparkSession
+      val gen = s"$deltaRoot/b$id"
+      // the q319 retry guard: a gen committed ANYWHERE is immutable
+      if (!F.committedGens(ss, mroot).contains(gen)) {
+        val prior = F.resolveParts(ss, mroot, fmts)(F.IvfPqPostingsFormat)
+        // frozen-pair encode; batches are vec-disjoint so no
+        // anti-join (the q318/q339 delta shape)
+        graft.operators.Similarity.codedAssignBatch(ss, cent, cb,
+          batch, nSub, subDim, gen)
+        F.commitTagged(ss, mroot, (cb -> F.PqCodebookFormat) +:
+          (prior :+ gen).map(_ -> F.IvfPqPostingsFormat))
+        // OPTIMIZE only when the postings family exceeds the
+        // trigger; the codebook rolls forward UNCHANGED in the
+        // same switch commit (q334's orthogonality rule)
+        val (_, folded) = F.compactPartsIfNeeded(ss, mroot,
+          F.IvfPqPostingsFormat, fmts, maxGens = 2) { live =>
+          val compacted = graft.operators.ArtifactStore.invocationDir(
+            "ivfpq_sretc", dir, nCentroids.toString, modN.toString)
+          graft.operators.Similarity.writeIvfPqPostings(
+            live.map(graft.operators.Similarity
+              .readIvfPqPostings(ss, _)).reduce(_ unionAll _),
+            compacted)
+          compacted
         }
+        ran.add(folded)
+        // VACUUM between micro-batches: the retention GC under test
+        // — the shared codebook is named by EVERY kept manifest, so
+        // the exclusivity rule must keep it alive every pass
+        F.retire(ss, mroot, keepLast = 2)
+          .foreach(deleted.add(_): Unit)
       }
-      .outputMode(OutputMode.Update()).start()
-    try feedBatches(stream, q, feed, nBatches = 3)
-    finally q.stop()
+    }, inBatches(feed, 3))(_.head.toDF("vec_id", "de"))
     import scala.jdk.CollectionConverters._
     val parts = F.resolveParts(s, mroot, fmts)
     (ran.asScala.toSeq, deleted.asScala.toSeq, cb,
@@ -2604,34 +2257,18 @@ object StreamingOps {
     */
   def userProfileFixture(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val data = s.read.parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("event_type"),
         col("value").cast("decimal(18,4)"))
       .as[(Long, String, BigDecimal)].collect()
-    val stream =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, BigDecimal)]
-    val name = s"q197_stream_tws_${System.nanoTime()}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withFewStatePartitions(s) {
-        val q = userProfileStream(stream.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update()).start()
-        try {
-          feedBatches(stream, q, data, nBatches = 3)
-        } finally q.stop()
-      }
-    } finally prevProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
+    val updates = withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      drive(s, Memory("q197_stream_tws", OutputMode.Update()), inBatches(data, 3))(
+        in => userProfileStream(in.head))
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("version").desc)
-    s.table(name)
+    updates
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
       .select("user_id", "n_events", "total_value", "top_type")
   }

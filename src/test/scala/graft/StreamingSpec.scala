@@ -142,6 +142,28 @@ class StreamingSpec extends SparkSpec {
     assert(msg.contains("expected sample_idx 60, got 61"), msg)
   }
 
+  test("a channel whose first sample is not index 0 fails naming the channel") {
+    val rows = (0 until 1600).map(i =>
+      SignalRow("e", 4, i.toLong, i / 100.0, math.sin(i / 7.0)))
+    def failure(feeds: Seq[SignalRow]*): String = {
+      val stream = MemoryStream[SignalRow]
+      val q = StreamingOps.incrementalEnvelopes(stream.toDS())
+        .writeStream.format("noop").outputMode(OutputMode.Append()).start()
+      val e = intercept[Exception] {
+        try feeds.foreach { f => stream.addData(f); q.processAllAvailable() }
+        finally q.stop()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    // the channel's head (0..4) arrives one micro-batch late
+    val late = failure(rows.slice(5, 700), rows.take(5) ++ rows.drop(700))
+    assert(late.contains("experiment_id=e, channel=4"), late)
+    assert(late.contains("expected sample_idx 0, got 5"), late)
+    val negative = failure(rows.head.copy(sample_idx = -1L) +: rows)
+    assert(negative.contains("expected sample_idx 0, got -1"), negative)
+  }
+
   test("spine state holds keep + 25 doubles per channel after a long uneven stream") {
     val rng = new java.util.Random(5)
     val rows = (0 until 10000).map(i =>
@@ -255,9 +277,22 @@ class StreamingSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
-      val got = rows(StreamingOps.streamFunnelFixture(spark, dir))
+      val confs = Seq("spark.sql.shuffle.partitions",
+        "spark.sql.streaming.stateStore.providerClass")
+      val before = confs.map(spark.conf.getOption)
+      val funnel = StreamingOps.streamFunnelFixture(spark, dir)
+      val profile = StreamingOps.userProfileFixture(spark, dir)
+      // the driver drops each memory-sink view once the frame is resolved
+      val views = spark.catalog.listTables().collect().map(_.name)
+      assert(!views.exists(v => v.startsWith("q88_stream_funnel_") ||
+        v.startsWith("q197_stream_tws_")), views.mkString(", "))
+      assert(spark.streams.active.isEmpty)
+      assert(confs.map(spark.conf.getOption) === before)
+      val got = rows(funnel)
       val want = rows(graft.operators.Relational.funnel(spark, dir))
       assert(got === want && got.map(_._2).sum === 3L)
+      assert(funnel.count() === funnel.collect().length.toLong)
+      assert(profile.count() === 3L && profile.collect().length === 3)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
