@@ -23,7 +23,7 @@ object SparkEntry {
     * pure functions of the committed fixture bits, every signal/beat
     * query (q1–q10, q229–q276 — ~60 of the declared surface) rebuilds
     * the identical lineage, and the old lazy `.cache()` had two
-    * measured costs: (a) multi-branch consumers (q8's crossed⋈peaks,
+    * measured costs: (a) multi-branch consumers (q8's spine + peaks cogroup,
     * q240's four component joins) race the first materialization and
     * recompute the spine per branch; (b) nothing survives the bench's
     * between-query `clearCache()`, so all ~60 queries re-derived it.
@@ -55,10 +55,9 @@ object SparkEntry {
             .localCheckpoint())
     }
 
-  /** Detected peaks off the memoized spine — the typed flatMapGroups
-    * pass is the most expensive stage of the signal pipeline, and
-    * q7b/q8/q8b/q9 + the q229–q276 family all consume the identical
-    * lineage (see [[spineMemo]]).
+  /** Detected peaks off the memoized spine — the find_peaks kernel
+    * runs once per channel, and q7b/q8/q8b/q9 + the q229–q276 family
+    * all consume the identical lineage (see [[spineMemo]]).
     */
   private def detected(s: SparkSession): DataFrame =
     graft.operators.MemoKey.fingerprint(s, SignalFixture.signalPath) match {
@@ -69,8 +68,9 @@ object SparkEntry {
     }
 
   /** Per-beat metrics off the full detection pipeline. Markers only
-    * where consumed (q8b): the marker struct aggregates ride the same
-    * window pass, so the flag now only trims unused output columns.
+    * where consumed (q8b): the marker values come out of the same
+    * per-channel metrics kernel, so the flag only trims unused output
+    * columns.
     */
   private def beatMetrics(s: SparkSession, markers: Boolean = false): DataFrame =
     BeatMetrics.metrics(enriched(s), detected(s), markers = markers)

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.PeakConfig
 import Smoothing.keyCols
 
@@ -12,11 +14,13 @@ import Smoothing.keyCols
   * The reference walks away from each peak until the above/below-
   * diastolic *state flips* relative to the state at the peak
   * (`peak_analysis.py:81-107`; note TTP tests `>=`, TTR tests `<=`, and
-  * a NaN diastolic makes both comparisons False — exactly reproduced by
-  * `coalesce(cmp, false)`). The walk is an as-of lookup: the nearest
-  * index on that side whose state differs — computed as window
-  * aggregates over the enriched frame, then joined to the peaks. No
-  * per-peak scanning, no driver loops.
+  * a null diastolic or y_smooth makes both comparisons false, as
+  * `coalesce(cmp, false)` does). The walk is an as-of lookup: the
+  * nearest index on that side whose state differs. `metrics` is one
+  * kernel per channel of [[Channels]], which cogroups the channel's
+  * enriched rows with its peaks: previous-flip and next-flip index
+  * arrays in one O(n) pass each, then each peak's walk exits read off
+  * them. No per-peak scanning, no driver loops, no join.
   *
   * Exact parity rules (SURVEY §8 Q7/Q8):
   *  - edge guard: peak_idx == 0 or >= n−2 ⇒ ttp/ttr/duration null;
@@ -25,20 +29,21 @@ import Smoothing.keyCols
   *  - TTR is null when the walk reaches the last sample — even if the
   *    state flips exactly there;
   *  - duration = ttr + ttp only when both present;
-  *  - force = peak_value − baseline[peak] regardless of the guard.
+  *  - force = peak_value − baseline[peak] regardless of the guard;
+  *  - a peak whose key is null or whose index is not a sample of its
+  *    channel in `enriched` yields no row.
   */
 object BeatMetrics {
 
   private def keys: Seq[Column] = keyCols.map(col)
 
-  /** Joins per-peak metrics onto `peaks` (one row per detected peak).
-    * `enriched` must carry y_smooth/baseline/diastolic.
+  /** Per-beat metrics of every row of `peaks` (`experiment_id, channel,
+    * peak_idx, t, peak_value`). `enriched` must carry
+    * y_smooth/baseline/diastolic.
     *
-    * `markers = false` skips the TTP/TTR marker-point columns: their
-    * y_smooth lookups are two joins against the full spine, which a
-    * consumer that only aggregates the metrics (Q9-style summaries)
-    * should not pay for at scale — Catalyst cannot prune an unused
-    * join on its own (it can't prove the lookup is 1:1).
+    * `markers = false` skips the TTP/TTR marker-point columns
+    * (`peak_analysis.py:95,113`): the walk-exit times, derived from the
+    * PEAK's timestamp (t ∓ i/rate), and the y_smooth there.
     */
   def metrics(
       enriched: DataFrame,
@@ -46,113 +51,66 @@ object BeatMetrics {
       cfg: PeakConfig = PeakConfig(),
       markers: Boolean = true
   ): DataFrame = {
-    val wch = Window.partitionBy(keys: _*)
-    val wo = Window.partitionBy(keys: _*).orderBy("sample_idx")
-    val wPrev = wo.rowsBetween(Window.unboundedPreceding, -1)
-    // The "nearest following crossing" aggregates run over the DESC
-    // ordering as running [unboundedPreceding, -1] frames (round-17
-    // optimization): a `[1, unboundedFollowing]` frame is recomputed
-    // from scratch per row by Spark's UnboundedFollowing frame
-    // processor — O(n²) per channel — while the desc running frame is
-    // O(n). sample_idx is unique per channel, so the desc frame is
-    // exactly the asc following-frame's row set and the min/max values
-    // are identical.
-    val wNext = Window.partitionBy(keys: _*)
-      .orderBy(col("sample_idx").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-
-    // Aggregate struct(sample_idx, y_smooth) instead of the bare index:
-    // struct ordering is by leading field, so max/min-by-index also
-    // carries the y_smooth at the crossing — the marker VALUES come out
-    // of the same single window pass, with no join back to the spine.
-    val iy = struct(col("sample_idx"), col("y_smooth"))
-    val stateT = coalesce(col("y_smooth") >= col("diastolic"), lit(false))
-    val stateR = coalesce(col("y_smooth") <= col("diastolic"), lit(false))
-
-    val markerCols: Seq[Column] =
-      if (markers) Seq(col("_firstIy"), col("_lastTs"), col("_lastFs"),
-        col("_nextTs"), col("_nextFs"))
-      else Seq.empty
-
-    val crossed = enriched
-      .withColumn("_n", count(lit(1)).over(wch))
-      .withColumn("_st", stateT)
-      .withColumn("_sr", stateR)
-      .withColumn("_lastTs", max(when(col("_st"), iy)).over(wPrev))
-      .withColumn("_lastFs", max(when(!col("_st"), iy)).over(wPrev))
-      .withColumn("_nextTs", min(when(col("_sr"), iy)).over(wNext))
-      .withColumn("_nextFs", min(when(!col("_sr"), iy)).over(wNext))
-      .withColumn("_firstIy", min(iy).over(wch))
-      .withColumn("_lastT", col("_lastTs.sample_idx"))
-      .withColumn("_lastF", col("_lastFs.sample_idx"))
-      .withColumn("_nextT", col("_nextTs.sample_idx"))
-      .withColumn("_nextF", col("_nextFs.sample_idx"))
-      .select(keys :+ col("sample_idx") :+ col("baseline") :+ col("_n") :+
-        col("_st") :+ col("_sr") :+ col("_lastT") :+ col("_lastF") :+
-        col("_nextT") :+ col("_nextF") :++ markerCols: _*)
-
-    val joined = peaks.join(
-      crossed.withColumnRenamed("sample_idx", "peak_idx"),
-      keyCols :+ "peak_idx"
-    )
-
-    val edge = col("peak_idx") === 0 || col("peak_idx") >= col("_n") - 2
-    // TTP: nearest j < p with flipped state; no flip (or flip at 0) ⇒
-    // the walk exhausts at index 0 and still records p/rate.
-    val flipL = when(col("_st"), col("_lastF")).otherwise(col("_lastT"))
-    val ttpI = col("peak_idx") - coalesce(flipL, lit(0L))
-    // TTR: nearest j > p with flipped state, capped at the last sample;
-    // reaching (or flipping at) the last sample ⇒ null.
-    val flipR = when(col("_sr"), col("_nextF")).otherwise(col("_nextT"))
-    val exitIdx = least(coalesce(flipR, col("_n") - 1), col("_n") - 1)
-    val rate = lit(cfg.sampleRateHz)
-
-    val withMetrics = joined
-      .withColumn("force", col("peak_value") - col("baseline"))
-      .withColumn("time_to_peak",
-        when(edge, lit(null).cast("double"))
-          .otherwise(ttpI.cast("double") / rate))
-      .withColumn("time_to_relaxation",
-        when(edge || exitIdx === col("_n") - 1, lit(null).cast("double"))
-          .otherwise((exitIdx - col("peak_idx")).cast("double") / rate))
-      .withColumn("duration",
-        when(col("time_to_peak").isNotNull &&
-          col("time_to_relaxation").isNotNull,
-          col("time_to_relaxation") + col("time_to_peak")))
-    val base = keys :+ col("peak_idx") :+ col("t") :+ col("peak_value") :+
-      col("baseline").as("baseline_value") :+ col("force") :+
-      col("time_to_peak") :+ col("time_to_relaxation") :+ col("duration")
-
-    if (!markers) withMetrics.select(base: _*)
-    else {
-      // marker points (`peak_analysis.py:95,113`): the walk-exit index
-      // and the y_smooth there, both read off the window structs — an
-      // exhausted left walk (flipL null) exits at the channel's first
-      // sample. Marker times derive from the PEAK's timestamp
-      // (peak_timestamp ∓ i/rate), not the exit sample's own t.
-      val flipLs = when(col("_st"), col("_lastFs")).otherwise(col("_lastTs"))
-      val flipRs = when(col("_sr"), col("_nextFs")).otherwise(col("_nextTs"))
-      val ttpIdx = when(col("time_to_peak").isNotNull,
-        coalesce(flipL, lit(0L)))
-      val ttrIdx = when(col("time_to_relaxation").isNotNull, exitIdx)
-      withMetrics
-        .withColumn("ttp_t",
-          when(ttpIdx.isNotNull,
-            col("t") - (col("peak_idx") - ttpIdx).cast("double") / rate))
-        .withColumn("ttp_y",
-          when(ttpIdx.isNotNull,
-            coalesce(flipLs.getField("y_smooth"),
-              col("_firstIy.y_smooth"))))
-        .withColumn("ttr_t",
-          when(ttrIdx.isNotNull,
-            col("t") + (ttrIdx - col("peak_idx")).cast("double") / rate))
-        // ttr non-null ⇒ exitIdx = flipR < n−1, so the y is the flip
-        // struct's own value — no edge fallback needed on the right
-        .withColumn("ttr_y",
-          when(ttrIdx.isNotNull, flipRs.getField("y_smooth")))
-        .select((base :+ col("ttp_t") :+ col("ttp_y") :+
-          col("ttr_t") :+ col("ttr_y")): _*)
+    val in = enriched.select(keys ++ Seq("sample_idx", "y_smooth", "baseline",
+      "diastolic").map(col): _*)
+    // the keys take enriched's types, as the inner join's coercion did
+    val pk = peaks.select(keyCols.map(k => col(k).cast(in.schema(k).dataType).as(k)) ++
+      Seq("peak_idx", "t", "peak_value").map(col): _*)
+    val metricCols = Seq("baseline_value", "force", "time_to_peak",
+      "time_to_relaxation", "duration") ++
+      (if (markers) Seq("ttp_t", "ttp_y", "ttr_t", "ttr_y") else Nil)
+    val out = StructType(pk.schema.fields ++ metricCols.map(StructField(_, DoubleType)))
+    val rate = cfg.sampleRateHz
+    def num(r: Row, at: Int) = if (r.isNullAt(at)) None else Some(r.getAs[Number](at).doubleValue)
+    Channels.cogroup(in, pk, out) { (_, rows, peakRows) =>
+      val n = rows.length
+      def y(i: Int): Any = rows(i).get(3)
+      // coalesce(y_smooth >= diastolic, false) for sign 1, `<=` for −1
+      def state(sign: Int)(i: Int) = !rows(i).isNullAt(3) && !rows(i).isNullAt(5) &&
+        sign * compareDoubles(rows(i).getDouble(3), rows(i).getDouble(5)) >= 0
+      lazy val left = flips(n, state(1), forward = true)
+      lazy val right = flips(n, state(-1), forward = false)
+      peakRows.flatMap { pr =>
+        val p = if (pr.isNullAt(2)) -1L else pr.getAs[Number](2).longValue
+        Option.when(p >= 0 && p < n) {
+          val i = p.toInt
+          val edge = p == 0 || p >= n - 2
+          // TTP: no flip (or a flip at 0) ⇒ the walk exhausts at index 0
+          // and still records p/rate
+          val ttpIdx = math.max(left(i), 0)
+          val ttp = Option.when(!edge)((p - ttpIdx).toDouble / rate)
+          // TTR: reaching (or flipping at) the last sample ⇒ null
+          val exitIdx = if (right(i) < 0) n - 1 else right(i)
+          val ttr = Option.when(!edge && exitIdx != n - 1)((exitIdx - p).toDouble / rate)
+          val t = num(pr, 3)
+          val base = num(rows(i), 4)
+          val marks = if (!markers) Nil else Seq(
+            for (_ <- ttp; tt <- t) yield tt - (p - ttpIdx).toDouble / rate,
+            // an exhausted walk, or a null y_smooth at the flip, reads sample 0
+            ttp.map(_ => if (left(i) >= 0 && !rows(left(i)).isNullAt(3)) y(left(i)) else y(0)),
+            for (_ <- ttr; tt <- t) yield tt + (exitIdx - p).toDouble / rate,
+            ttr.map(_ => y(exitIdx)))
+          val force = for (v <- num(pr, 4); b <- base) yield v - b
+          val duration = for (r <- ttr; q <- ttp) yield r + q
+          Row.fromSeq(pr.toSeq ++ (Seq(base, force, ttp, ttr, duration) ++ marks).map(_.orNull))
+        }
+      }
     }
+  }
+
+  /** flips(i): the nearest j before i (`forward`) or after i whose state
+    * differs from i's, −1 for none. One pass in walk order.
+    */
+  private def flips(n: Int, state: Int => Boolean, forward: Boolean): Array[Int] = {
+    val out = new Array[Int](n)
+    val last = Array(-1, -1) // the last index seen in state false / true
+    for (k <- 0 until n) {
+      val i = if (forward) k else n - 1 - k
+      val s = if (state(i)) 1 else 0
+      out(i) = last(1 - s)
+      last(s) = i
+    }
+    out
   }
 
   /** O10 — channel summary: NaN-filtered means. Averages are computed

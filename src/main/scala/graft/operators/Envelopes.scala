@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -19,19 +19,17 @@ import Smoothing.{keyCols, dotChunk}
   *   diastolic  = baseline + 0.1·(ceiling − baseline)
   * ceiling mirrors with interior local maxima / max.
   *
-  * Computed as one kernel per channel: the frame is grouped by the
-  * channel key columns (so it rides the channel hash partitioning
-  * Smoothing already paid for — smooth + envelopes plan one Exchange),
-  * the channel is laid out in primitive arrays, and every input row is
-  * emitted with the three columns appended. O(n) per channel: the
-  * frame-interior extrema [i+1, i+W−2] come from a monotonic deque, the
-  * block-repeat pad and the `mode='nearest'` edge clamp are index
+  * Computed as one kernel per channel through the shared harness
+  * [[Channels.flatMap]]: it groups by the channel key columns (so it
+  * rides the channel hash partitioning Smoothing already paid for —
+  * smooth + envelopes plan one Exchange), lays the channel out by
+  * `sample_idx`, enforces the dense 0-based `sample_idx` precondition and
+  * the null-key rule. The kernel works over primitive arrays and emits
+  * every input row with the three columns appended. O(n) per channel:
+  * the frame-interior extrema [i+1, i+W−2] come from a monotonic deque,
+  * the block-repeat pad and the `mode='nearest'` edge clamp are index
   * arithmetic, and each SG output is one [[FirDotExpr.dotChunkedAt]]
   * fold (the association order the DuckDB oracle mirrors).
-  *
-  * Precondition: `sample_idx` is dense and 0-based per channel (each of
-  * 0..n−1 exactly once). A channel that breaks it fails the job with an
-  * error naming the channel.
   *
   * Ordering: marks and extrema compare with Spark's double ordering
   * (`SQLOrderingUtil.compareDoubles`): NaN is greater than every number
@@ -80,34 +78,21 @@ object Envelopes {
     val out = StructType(in.schema.fields ++
       Seq("baseline", "ceiling", "diastolic").map(StructField(_, DoubleType)))
 
-    in.groupBy(keyCols.map(col): _*)
-      .as[Row, Row](Encoders.row(StructType(keyCols.map(in.schema(_)))), Encoders.row(in.schema))
-      .flatMapGroups { (key: Row, rows: Iterator[Row]) =>
-        channel(key, rows.toArray, vi, bigW, pad, k, c, rel)
-      }(Encoders.row(out))
-      .toDF()
+    Channels.flatMap(in, out, r => Iterator(blank(r))) { (_, byIdx) =>
+      channel(byIdx, vi, bigW, pad, k, c, rel)
+    }
   }
 
-  private def channel(key: Row, rows: Array[Row], vi: Int, bigW: Int, pad: Int,
+  private def emit(r: Row, b: Any, ce: Any, d: Any) = Row.fromSeq(r.toSeq :+ b :+ ce :+ d)
+  private def blank(r: Row) = emit(r, null, null, null)
+
+  private def channel(byIdx: Array[Row], vi: Int, bigW: Int, pad: Int,
       k: Int, c: Array[Double], rel: Double): Iterator[Row] = {
-    val n = rows.length
-    def emit(r: Row, b: Any, ce: Any, d: Any) = Row.fromSeq(r.toSeq :+ b :+ ce :+ d)
-    if (key.anyNull) return rows.iterator.map(emit(_, null, null, null))
-
-    val byIdx = new Array[Row](n)
-    rows.foreach { r =>
-      val i = r.get(2) match { case x: Number => x.longValue; case _ => -1L }
-      if (i < 0 || i >= n || byIdx(i.toInt) != null)
-        throw new IllegalArgumentException(
-          s"envelopes need a dense 0-based sample_idx per channel: channel " +
-            s"(experiment_id=${key.get(0)}, channel=${key.get(1)}) has $n rows " +
-            s"but sample_idx ${r.get(2)} is ${if (i >= 0 && i < n) "repeated" else "out of range"}")
-      byIdx(i.toInt) = r
-    }
+    val n = byIdx.length
     val m = n - bigW
-    if (m < pad) return byIdx.iterator.map(emit(_, null, null, null))
+    if (m < pad) return byIdx.iterator.map(blank)
 
-    val v = byIdx.map(r => if (r.isNullAt(vi)) Double.NaN else r.getAs[Number](vi).doubleValue)
+    val v = Channels.doubles(byIdx, vi)
     // a mark needs the value and both neighbours non-null
     def sign(i: Int): Int =
       if (i == 0 || i == n - 1 || byIdx(i - 1).isNullAt(vi) || byIdx(i).isNullAt(vi) ||

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.PeakConfig
 import graft.functions.FindPeaks
 import Smoothing.keyCols
@@ -11,50 +12,34 @@ import Smoothing.keyCols
   *
   * Declarative parts (rule-1 candidates, amplitude gate) are window
   * expressions; the sequential parts of scipy's `find_peaks` (greedy
-  * distance, wlen-clipped prominence, interpolated width) run as a
-  * faithful typed port inside `groupByKey(channel).flatMapGroups` — a
-  * channel is one bounded recording, and 100 TB scale comes from
-  * millions of independent channels, which is exactly flatMapGroups'
-  * parallelism (no driver-side work, no broadcast of signal data).
+  * distance, wlen-clipped prominence, interpolated width) run as the
+  * [[graft.functions.FindPeaks]] port inside one kernel per channel of
+  * the shared harness [[Channels]] — a channel is one bounded recording,
+  * and 100 TB scale comes from millions of independent channels (no
+  * driver-side work, no broadcast of signal data). A null `y_smooth`
+  * reads as NaN, which scipy never takes for a peak and which stops the
+  * prominence and width scans.
   */
 object PeakDetect {
 
-  /** Input row of the typed per-channel pass. */
-  final case class ChannelRow(
-      experiment_id: String,
-      channel: Int,
-      sample_idx: Long,
-      t: Double,
-      y_smooth: Double,
-      baseline: Option[Double],
-      ceiling: Option[Double]
-  )
-
-  /** Detected peak (pre-metrics). */
-  final case class DetectedPeak(
-      experiment_id: String,
-      channel: Int,
-      peak_idx: Long,
-      t: Double,
-      peak_value: Double
-  )
-
   private def keys: Seq[Column] = keyCols.map(col)
+
+  /** `v` is above both neighbours within its channel (by sample_idx). */
+  private def strictMax(v: Column): Column = {
+    val wo = Window.partitionBy(keys: _*).orderBy("sample_idx")
+    v > lag(v, 1).over(wo) && v > lead(v, 1).over(wo)
+  }
 
   /** Rule-1 candidates as a declarative query: strict local maxima of
     * the smooth series (Q5). The exact plateau-midpoint rule lives in
     * [[graft.functions.FindPeaks.localMaxima]]; tied neighbours cannot
     * occur on continuous signals, where the two coincide.
     */
-  def candidates(smoothed: DataFrame): DataFrame = {
-    val wo = Window.partitionBy(keys: _*).orderBy("sample_idx")
-    val v = col("y_smooth")
+  def candidates(smoothed: DataFrame): DataFrame =
     smoothed
-      .withColumn("_isMax",
-        v > lag(v, 1).over(wo) && v > lead(v, 1).over(wo))
+      .withColumn("_isMax", strictMax(col("y_smooth")))
       .filter(col("_isMax"))
       .drop("_isMax")
-  }
 
   /** Amplitude gate (Q6): keep a candidate unless
     * `smooth < (ceiling − baseline)·threshold + baseline`
@@ -71,38 +56,26 @@ object PeakDetect {
     candidates(enriched).filter(gateCondition(cfg))
 
   /** Full O7: scipy-parity find_peaks + amplitude gate, one bounded
-    * channel at a time. Emits one row per detected peak.
+    * channel at a time. Emits one row per detected peak:
+    * `experiment_id, channel, peak_idx, t, peak_value`.
     */
   def detectPeaks(
       enriched: DataFrame,
       cfg: PeakConfig = PeakConfig()
-  ): Dataset[DetectedPeak] = {
-    val spark = enriched.sparkSession
-    import spark.implicits._
-    enriched
-      .select(col("experiment_id"), col("channel"), col("sample_idx"),
-        col("t"), col("y_smooth"), col("baseline"), col("ceiling"))
-      .as[ChannelRow]
-      .groupByKey(r => (r.experiment_id, r.channel))
-      .flatMapGroups { (_: (String, Int), it: Iterator[ChannelRow]) =>
-        val rows = it.toArray.sortBy(_.sample_idx)
-        val x = rows.map(_.y_smooth)
+  ): DataFrame = {
+    val in = enriched.select(keys ++ Seq("sample_idx", "t", "y_smooth", "baseline",
+      "ceiling").map(col): _*)
+    Channels.flatMap(in, peakSchema(in, in.schema("t"), StructField("peak_value", DoubleType))) {
+      (key, rows) =>
+        val Seq(x, b, c) = Seq(4, 5, 6).map(Channels.doubles(rows, _))
         FindPeaks
           .findPeaks(x, cfg.width, cfg.minDistance, cfg.relHeight,
             cfg.prominence, cfg.wlen)
           .iterator
-          .filter { p =>
-            // gate with Python NaN-comparison parity: null envelope keeps
-            (rows(p).baseline, rows(p).ceiling) match {
-              case (Some(b), Some(c)) => !(x(p) < (c - b) * cfg.threshold + b)
-              case _ => true
-            }
-          }
-          .map { p =>
-            DetectedPeak(rows(p).experiment_id, rows(p).channel,
-              rows(p).sample_idx, rows(p).t, x(p))
-          }
-      }
+          // gate with Python NaN-comparison parity: a null envelope keeps
+          .filter(p => !(x(p) < (c(p) - b(p)) * cfg.threshold + b(p)))
+          .map(p => Row(key.get(0), key.get(1), rows(p).get(2), rows(p).get(3), x(p)))
+    }
   }
 
   /** Q7a — prominence (wlen-clipped) of every rule-1 candidate, before
@@ -112,25 +85,20 @@ object PeakDetect {
       smoothed: DataFrame,
       cfg: PeakConfig = PeakConfig()
   ): DataFrame = {
-    val spark = smoothed.sparkSession
-    import spark.implicits._
-    smoothed
-      .select(col("experiment_id"), col("channel"), col("sample_idx"),
-        col("t"), col("y_smooth"), lit(null).cast("double").as("baseline"),
-        lit(null).cast("double").as("ceiling"))
-      .as[ChannelRow]
-      .groupByKey(r => (r.experiment_id, r.channel))
-      .flatMapGroups { (key: (String, Int), it: Iterator[ChannelRow]) =>
-        val rows = it.toArray.sortBy(_.sample_idx)
-        val x = rows.map(_.y_smooth)
-        val peaks = FindPeaks.localMaxima(x)
-        val proms = FindPeaks.peakProminences(x, peaks, cfg.wlen)
-        peaks.iterator.zip(proms.iterator).map { case (p, pr) =>
-          (key._1, key._2, rows(p).sample_idx, pr.value)
-        }
+    val in = smoothed.select(keys ++ Seq("sample_idx", "y_smooth").map(col): _*)
+    Channels.flatMap(in, peakSchema(in, StructField("prominence", DoubleType))) { (key, rows) =>
+      val x = Channels.doubles(rows, 3)
+      val peaks = FindPeaks.localMaxima(x)
+      val proms = FindPeaks.peakProminences(x, peaks, cfg.wlen)
+      peaks.iterator.zip(proms.iterator).map { case (p, pr) =>
+        Row(key.get(0), key.get(1), rows(p).get(2), pr.value)
       }
-      .toDF("experiment_id", "channel", "peak_idx", "prominence")
+    }
   }
+
+  /** The keys, `sample_idx` renamed `peak_idx`, then `more`. */
+  private def peakSchema(in: DataFrame, more: StructField*): StructType =
+    StructType(Seq(in.schema(0), in.schema(1), in.schema(2).copy(name = "peak_idx")) ++ more)
 
   /** O2 — stim rescale: per-channel scale to the signal's amplitude,
     * `stim.y · (max(sig.y) / max(stim.y))`
@@ -152,14 +120,10 @@ object PeakDetect {
     * only (`/root/reference/peak_detection.py:296`; the six accepted
     * params are dead code).
     */
-  def stimPeaks(rescaled: DataFrame): DataFrame = {
-    val wo = Window.partitionBy(keys: _*).orderBy("sample_idx")
-    val v = col("y_scaled")
+  def stimPeaks(rescaled: DataFrame): DataFrame =
     rescaled
-      .withColumn("_isMax",
-        v > lag(v, 1).over(wo) && v > lead(v, 1).over(wo))
+      .withColumn("_isMax", strictMax(col("y_scaled")))
       .filter(col("_isMax"))
       .select(col("experiment_id"), col("channel"), col("sample_idx"),
         col("y_scaled"))
-  }
 }

@@ -120,6 +120,21 @@ class BeatMetricsEdgeSpec extends SparkSpec {
       (leanSchema, 25, 2614252897616806314L)))
   }
 
+  test("channels shorter than the smoothing window: null y_smooth is never a peak") {
+    val long = sig(1500, 0, "s")
+    val in = long.union(sig(10, 1, "s")).union(sig(20, 2, "s"))
+    val smooth = Smoothing.withSmooth(in)
+    assert(smooth.filter($"channel" =!= 0 && $"y_smooth".isNull).count() > 0)
+    val peaks = PeakDetect.detectPeaks(Envelopes.withEnvelopes(smooth)).toDF()
+    val proms = PeakDetect.candidateProminences(smooth)
+    assert(peaks.filter(isnan($"peak_value")).count() === 0)
+    assert(proms.filter(isnan($"prominence")).count() === 0)
+    assert(print(peaks.filter($"channel" === 0)) ===
+      print(PeakDetect.detectPeaks(enrich(long)).toDF()))
+    assert(print(proms.filter($"channel" === 0)) ===
+      print(PeakDetect.candidateProminences(Smoothing.withSmooth(long))))
+  }
+
   private def sig(n: Int, ch: Int = 0, e: String = "e") = {
     val rng = new java.util.Random(1000L * ch + n)
     (0 until n).map { i =>
