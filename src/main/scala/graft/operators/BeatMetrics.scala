@@ -32,10 +32,83 @@ import Smoothing.keyCols
   *  - force = peak_value − baseline[peak] regardless of the guard;
   *  - a peak whose key is null or whose index is not a sample of its
   *    channel in `enriched` yields no row.
+  *
+  * The peak-train family (q229–q276: HRV, entropies, RQA, PRSA, TINN,
+  * HRT and the rest) reads one RR series, [[rrIntervals]], ordered by
+  * one window, `byPeak`; the shared formulas (RR moments with the
+  * entropy tolerance, the min/max level quantizer, the moment-form
+  * Pearson r) each exist once, in the expression shape the DuckDB
+  * oracle mirrors.
   */
 object BeatMetrics {
 
   private def keys: Seq[Column] = keyCols.map(col)
+
+  /** A channel's beats in peak order. */
+  private val byPeak = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
+
+  /** Each channel's peaks (keys, `peak_idx`) with `d`, the RR interval
+    * in samples back to the previous peak: null on the channel's first
+    * beat, which [[hrv]] and [[poincare]] count.
+    */
+  private def rrSeries(peaks: DataFrame): DataFrame =
+    peaks.select(keys :+ col("peak_idx"): _*)
+      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(byPeak))
+
+  /** The RR series the peak-train family (q229–q276) reads: one row
+    * per interval (keys, the later peak's `peak_idx`, `d`).
+    */
+  private def rrIntervals(peaks: DataFrame): DataFrame =
+    rrSeries(peaks).filter(col("d").isNotNull)
+
+  /** Per-channel RR moments of `rr` — `n`, `s1` = Σd, `s2` = Σd² and any
+    * `extra` aggregates — and the entropy tolerance `r_thresh` =
+    * rFrac·SD(RR), the population SD as √(n·Σd² − (Σd)²)/n.
+    */
+  private def rrMoments(rr: DataFrame, rFrac: Double,
+                        extra: Column*): (DataFrame, Column) = {
+    val st = rr.groupBy(keys: _*)
+      .agg(count(lit(1)).as("n"), Seq(sum(col("d")).as("s1"),
+        sum(col("d") * col("d")).as("s2")) ++ extra: _*)
+    val nD = col("n").cast("double")
+    val rThr = (lit(rFrac) *
+      (sqrt(greatest(nD * col("s2").cast("double") -
+        col("s1").cast("double") * col("s1").cast("double"),
+        lit(0.0))) / nD)).as("r_thresh")
+    (st, rThr)
+  }
+
+  /** `rr` with `s`, each interval's level among 6 equal-width integer
+    * bins over its channel's RR range: ((d − min)·6) div
+    * (max − min + 1), and 0 when max = min.
+    */
+  private def rrLevels(rr: DataFrame): DataFrame = {
+    val st = rr.groupBy(keys: _*)
+      .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
+    rr.join(broadcast(st), keyCols)
+      .withColumn("s", when(col("mx") === col("mn"), lit(0L))
+        .otherwise(expr("((d - mn) * 6) div (mx - mn + 1)")))
+  }
+
+  /** RR histogram bins are `binWidth` samples wide: a power of two keeps
+    * d / binWidth exact in floating point.
+    */
+  private def requireBinWidth(binWidth: Int): Unit =
+    require(binWidth > 0 && (binWidth & (binWidth - 1)) == 0,
+      s"binWidth must be a positive power of two, got $binWidth")
+
+  /** Pearson r off the moment-sum columns `n`, Σx, Σy, Σx², Σy², Σxy in
+    * the n·Σxy − Σx·Σy form; null when either variance is 0.
+    */
+  private def pearson(n: String, sx: String, sy: String, sxx: String,
+                      syy: String, sxy: String): Column = {
+    def d(c: String): Column = col(c).cast("double")
+    val nD = d(n)
+    val cov = nD * d(sxy) - d(sx) * d(sy)
+    val vx = nD * d(sxx) - d(sx) * d(sx)
+    val vy = nD * d(syy) - d(sy) * d(sy)
+    cov / nullif(sqrt(greatest(vx * vy, lit(0.0))), lit(0.0))
+  }
 
   /** Per-beat metrics of every row of `peaks` (`experiment_id, channel,
     * peak_idx, t, peak_value`). `enriched` must carry
@@ -193,13 +266,11 @@ object BeatMetrics {
     * window and one partial-combining aggregate.
     */
   def alternans(metricsDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("experiment_id"), col("channel"))
-      .orderBy(col("peak_idx"))
     val phased = metricsDf
       .select(col("experiment_id"), col("channel"), col("peak_idx"),
         col("force"))
       .filter(col("force").isNotNull)
-      .withColumn("phase", pmod(row_number().over(w).cast("long"), lit(2L)))
+      .withColumn("phase", pmod(row_number().over(byPeak).cast("long"), lit(2L)))
     val agg = phased.groupBy(col("experiment_id"), col("channel"))
       .agg(count(lit(1)).as("n_beats"),
         sum(when(col("phase") === 0L, 1L).otherwise(0L)).as("n_even"),
@@ -238,11 +309,9 @@ object BeatMetrics {
     */
   def restitution(metricsDf: DataFrame,
                   sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(col("experiment_id"), col("channel"))
-      .orderBy(col("peak_idx"))
     val rr = metricsDf.select(col("experiment_id"), col("channel"),
         col("peak_idx"), col("force"))
-      .withColumn("x", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
+      .withColumn("x", col("peak_idx") - lag(col("peak_idx"), 1).over(byPeak))
       .filter(col("x").isNotNull && col("force").isNotNull)
     val agg = rr.groupBy(col("experiment_id"), col("channel"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -349,11 +418,8 @@ object BeatMetrics {
     * a channel with < 3 beats yields nulls, never a fabricated 0.
     */
   def poincare(peaks: DataFrame, sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(col("experiment_id"), col("channel"))
-      .orderBy(col("peak_idx"))
-    val rr = peaks.select(col("experiment_id"), col("channel"), col("peak_idx"))
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .withColumn("sd", col("d") - lag(col("d"), 1).over(w))
+    val rr = rrSeries(peaks)
+      .withColumn("sd", col("d") - lag(col("d"), 1).over(byPeak))
     val agg = rr.groupBy(col("experiment_id"), col("channel"))
       .agg(sum(when(col("d").isNotNull, 1L).otherwise(0L)).as("n_rr"),
         sum(col("d")).as("s1"), sum(col("d") * col("d")).as("s2"),
@@ -561,24 +627,13 @@ object BeatMetrics {
         sum(col("m").cast("decimal(28,14)")).as("sm"),
         sum((col("m") * col("m")).cast("decimal(28,10)")).as("smm"),
         sum((col("y_smooth") * col("m")).cast("decimal(28,10)")).as("sxy"))
-    val nD = col("n").cast("double")
-    val cov = nD * col("sxy").cast("double") -
-      col("sx").cast("double") * col("sm").cast("double")
-    val vx = nD * col("sxx").cast("double") -
-      col("sx").cast("double") * col("sx").cast("double")
-    val vm = nD * col("smm").cast("double") -
-      col("sm").cast("double") * col("sm").cast("double")
     a.select(keys :+ col("peak_idx") :+ col("n") :+
-      (cov / nullif(sqrt(greatest(vx * vm, lit(0.0))), lit(0.0)))
-        .as("template_corr"): _*)
+      pearson("n", "sx", "sm", "sxx", "smm", "sxy").as("template_corr"): _*)
   }
 
   def hrv(peaks: DataFrame, sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(col("experiment_id"), col("channel"))
-      .orderBy(col("peak_idx"))
-    val rr = peaks.select(col("experiment_id"), col("channel"), col("peak_idx"))
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .withColumn("sd", col("d") - lag(col("d"), 1).over(w))
+    val rr = rrSeries(peaks)
+      .withColumn("sd", col("d") - lag(col("d"), 1).over(byPeak))
     val agg = rr.groupBy(col("experiment_id"), col("channel"))
       .agg(count(lit(1)).as("n_beats"),
         sum(when(col("d").isNotNull, 1L).otherwise(0L)).as("n_rr"),
@@ -815,16 +870,8 @@ object BeatMetrics {
         sum(col("xb").cast("decimal(28,14)")).as("sy"),
         sum((col("xb") * col("xb")).cast("decimal(28,10)")).as("syy"),
         sum((col("xa") * col("xb")).cast("decimal(28,10)")).as("sxy"))
-    val nD = col("n").cast("double")
-    val cov = nD * col("sxy").cast("double") -
-      col("sx").cast("double") * col("sy").cast("double")
-    val vx = nD * col("sxx").cast("double") -
-      col("sx").cast("double") * col("sx").cast("double")
-    val vy = nD * col("syy").cast("double") -
-      col("sy").cast("double") * col("sy").cast("double")
     agg.select(col("experiment_id"), col("ch_a"), col("ch_b"), col("n"),
-      (cov / nullif(sqrt(greatest(vx * vy, lit(0.0))), lit(0.0)))
-        .as("sync_corr"))
+      pearson("n", "sx", "sy", "sxx", "syy", "sxy").as("sync_corr"))
   }
 
   /** Q243 — stimulus entrainment (vector strength): each beat's
@@ -912,11 +959,10 @@ object BeatMetrics {
                   zThresh: Double = 3.0,
                   corrMin: Double = 0.95): DataFrame = {
     val rate = lit(cfg.sampleRateHz)
-    val wo = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
     val wc = Window.partitionBy(keys: _*)
     val base = metricsDf.select(keys :+ col("peak_idx") :+ col("force"): _*)
       .withColumn("rr_s",
-        (col("peak_idx") - lag(col("peak_idx"), 1).over(wo))
+        (col("peak_idx") - lag(col("peak_idx"), 1).over(byPeak))
           .cast("double") / rate)
     val st = base
       .withColumn("nf",
@@ -981,21 +1027,11 @@ object BeatMetrics {
     * which partition cleanly. No broadcast, map-side-combined counts.
     */
   def sampleEntropy(peaks: DataFrame, rFrac: Double = 0.2): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("k", row_number().over(w) - lit(1))
-      .withColumn("d1", lead(col("d"), 1).over(w))
-      .withColumn("d2", lead(col("d"), 2).over(w))
-    val st = rr.groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"),
-        sum(col("d") * col("d")).as("s2"))
-    val nD = col("n").cast("double")
-    val rThr = (lit(rFrac) *
-      (sqrt(greatest(nD * col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double"),
-        lit(0.0))) / nD)).as("r_thresh")
+    val rr = rrIntervals(peaks)
+      .withColumn("k", row_number().over(byPeak) - lit(1))
+      .withColumn("d1", lead(col("d"), 1).over(byPeak))
+      .withColumn("d2", lead(col("d"), 2).over(byPeak))
+    val (st, rThr) = rrMoments(rr, rFrac)
     val a = rr.select(keys :+ col("k").as("ka") :+ col("d").as("da") :+
       col("d1").as("da1") :+ col("d2").as("da2"): _*)
     val b = rr.select(keys :+ col("k").as("kb") :+ col("d").as("db") :+
@@ -1048,19 +1084,9 @@ object BeatMetrics {
     */
   def multiscaleEntropy(peaks: DataFrame, maxScale: Int = 3,
                         rFrac: Double = 0.2): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("k", row_number().over(w) - lit(1))
-    val st = rr.groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"),
-        sum(col("d") * col("d")).as("s2"))
-    val nD = col("n").cast("double")
-    val rThr = (lit(rFrac) *
-      (sqrt(greatest(nD * col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double"),
-        lit(0.0))) / nD)).as("r_thresh")
+    val rr = rrIntervals(peaks)
+      .withColumn("k", row_number().over(byPeak) - lit(1))
+    val (st, rThr) = rrMoments(rr, rFrac)
     val coarse = rr
       .withColumn("scale",
         explode(sequence(lit(1), lit(maxScale))))
@@ -1125,10 +1151,7 @@ object BeatMetrics {
     */
   def triangularIndex(peaks: DataFrame,
                       sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr = rrIntervals(peaks)
     val bin = floor((col("d") * lit(128L)).cast("double") /
       lit(sampleRateHz)).cast("long")
     val hist = rr.withColumn("bin", bin)
@@ -1145,10 +1168,9 @@ object BeatMetrics {
         .as("hti"): _*)
   }
 
-  /** Shared DFT band-power core over an RR-interval table: `rrRows`
-    * carries the grouping columns `g`, an ordering column `ord`
-    * (the interval's later peak index) and the interval `d`; each
-    * group is an independent demeaned beat-indexed series projected
+  /** Shared DFT band-power core over [[rrIntervals]] rows that also
+    * carry the grouping columns `g`; each group is an independent
+    * demeaned beat-indexed series, ordered by `peak_idx`, projected
     * onto its in-band Fourier bins. [[bandPower]] groups per channel;
     * [[windowedBandPower]] per (channel, tumbling window).
     */
@@ -1156,7 +1178,7 @@ object BeatMetrics {
                             sampleRateHz: Double, lfLo: Double,
                             lfHi: Double, hfHi: Double): DataFrame = {
     val gk = g.map(col)
-    val w = Window.partitionBy(gk: _*).orderBy(col("ord"))
+    val w = Window.partitionBy(gk: _*).orderBy(col("peak_idx"))
     val rr = rrRows.withColumn("k", row_number().over(w) - lit(1))
     val ch = rr.groupBy(gk: _*)
       .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"))
@@ -1214,17 +1236,6 @@ object BeatMetrics {
           .as("lf_hf_ratio"): _*)
   }
 
-  /** RR intervals from the detected train: one row per interval with
-    * the later peak's index as `ord`.
-    */
-  private def rrIntervals(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .select(keys :+ col("peak_idx").as("ord") :+ col("d"): _*)
-  }
-
   def bandPower(peaks: DataFrame, sampleRateHz: Double = 100.0,
                 lfLo: Double = 0.04, lfHi: Double = 0.15,
                 hfHi: Double = 0.4): DataFrame =
@@ -1250,7 +1261,7 @@ object BeatMetrics {
                         hfHi: Double = 0.4): DataFrame = {
     val rr = rrIntervals(peaks)
       .withColumn("win",
-        floor(col("ord").cast("double") / lit(windowSamples.toDouble))
+        floor(col("peak_idx").cast("double") / lit(windowSamples.toDouble))
           .cast("long"))
     bandPowerCore(rr, keyCols :+ "win", sampleRateHz, lfLo, lfHi, hfHi)
       .withColumn("win_start_s",
@@ -1498,20 +1509,17 @@ object BeatMetrics {
     * (recording-length bounded, the q246 discipline).
     */
   def fragmentation(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr = rrIntervals(peaks)
     val sgn = rr
-      .withColumn("delta", col("d") - lag(col("d"), 1).over(w))
+      .withColumn("delta", col("d") - lag(col("d"), 1).over(byPeak))
       .filter(col("delta").isNotNull)
       .withColumn("s", when(col("delta") > 0L, lit(1))
         .when(col("delta") < 0L, lit(-1)).otherwise(lit(0)))
-      .withColumn("chg", when(lag(col("s"), 1).over(w).isNull, lit(1L))
-        .when(col("s") =!= lag(col("s"), 1).over(w), lit(1L))
+      .withColumn("chg", when(lag(col("s"), 1).over(byPeak).isNull, lit(1L))
+        .when(col("s") =!= lag(col("s"), 1).over(byPeak), lit(1L))
         .otherwise(lit(0L)))
       .withColumn("run", sum(col("chg"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .over(byPeak.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val runs = sgn.groupBy(keys :+ col("run"): _*)
       .agg(count(lit(1)).as("len"))
     val agg = runs.groupBy(keys: _*)
@@ -1571,16 +1579,8 @@ object BeatMetrics {
         sum((col("va") * col("va")).cast("decimal(38,8)")).as("sxx"),
         sum((col("vb") * col("vb")).cast("decimal(38,8)")).as("syy"),
         sum((col("va") * col("vb")).cast("decimal(38,8)")).as("sxy"))
-    val nD = col("n").cast("double")
-    val cov = nD * col("sxy").cast("double") -
-      col("sx").cast("double") * col("sy").cast("double")
-    val vx = nD * col("sxx").cast("double") -
-      col("sx").cast("double") * col("sx").cast("double")
-    val vy = nD * col("syy").cast("double") -
-      col("sy").cast("double") * col("sy").cast("double")
     val perLag = mo.filter(col("n") > 1L)
-      .withColumn("r", cov /
-        nullif(sqrt(greatest(vx * vy, lit(0.0))), lit(0.0)))
+      .withColumn("r", pearson("n", "sx", "sy", "sxx", "syy", "sxy"))
     perLag.filter(col("r").isNotNull)
       .groupBy(col("experiment_id"), col("ca"), col("cb"))
       .agg(count(lit(1)).as("n_lags"),
@@ -1652,21 +1652,11 @@ object BeatMetrics {
     * corpus size.
     */
   def approximateEntropy(peaks: DataFrame, rFrac: Double = 0.2): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("k", row_number().over(w) - lit(1))
-      .withColumn("d1", lead(col("d"), 1).over(w))
-      .withColumn("d2", lead(col("d"), 2).over(w))
-    val st = rr.groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"),
-        sum(col("d") * col("d")).as("s2"))
-    val nD = col("n").cast("double")
-    val rThr = (lit(rFrac) *
-      (sqrt(greatest(nD * col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double"),
-        lit(0.0))) / nD)).as("r_thresh")
+    val rr = rrIntervals(peaks)
+      .withColumn("k", row_number().over(byPeak) - lit(1))
+      .withColumn("d1", lead(col("d"), 1).over(byPeak))
+      .withColumn("d2", lead(col("d"), 2).over(byPeak))
+    val (st, rThr) = rrMoments(rr, rFrac)
     val a = rr.select(keys :+ col("k").as("ka") :+ col("d").as("da") :+
       col("d1").as("da1") :+ col("d2").as("da2"): _*)
     val b = rr.select(keys :+ col("k").as("kb") :+ col("d").as("db") :+
@@ -1764,10 +1754,9 @@ object BeatMetrics {
     * fan-out, map-side-combinable (channel, lag) aggregates.
     */
   def forceAutocorr(metricsDf: DataFrame, maxLag: Int = 3): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
     val leads = (1 to maxLag).foldLeft(
       metricsDf.select(keys :+ col("peak_idx") :+ col("force"): _*)) {
-      case (df, l) => df.withColumn(s"f$l", lead(col("force"), l).over(w))
+      case (df, l) => df.withColumn(s"f$l", lead(col("force"), l).over(byPeak))
     }
     val lagged = leads.withColumn("l",
       explode(array((1 to maxLag).map(v => lit(v.toLong)): _*)))
@@ -1783,16 +1772,9 @@ object BeatMetrics {
         sum((col("force") * col("force")).cast("decimal(38,8)")).as("sxx"),
         sum((col("fb") * col("fb")).cast("decimal(38,8)")).as("syy"),
         sum((col("force") * col("fb")).cast("decimal(38,8)")).as("sxy"))
-    val nD = col("n_pairs").cast("double")
-    val cov = nD * col("sxy").cast("double") -
-      col("sx").cast("double") * col("sy").cast("double")
-    val vx = nD * col("sxx").cast("double") -
-      col("sx").cast("double") * col("sx").cast("double")
-    val vy = nD * col("syy").cast("double") -
-      col("sy").cast("double") * col("sy").cast("double")
     mo.select(keys :+ col("l").as("lag") :+ col("n_pairs") :+
-      when(col("n_pairs") > 1L, cov /
-        nullif(sqrt(greatest(vx * vy, lit(0.0))), lit(0.0))).as("acf"): _*)
+      when(col("n_pairs") > 1L, pearson("n_pairs", "sx", "sy", "sxx", "syy",
+        "sxy")).as("acf"): _*)
   }
 
   /** Q257 — turning-point randomness test of the RR series: T =
@@ -1810,13 +1792,10 @@ object BeatMetrics {
     * channel.
     */
   def turningPoints(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr = rrIntervals(peaks)
     val tagged = rr
-      .withColumn("pv", lag(col("d"), 1).over(w))
-      .withColumn("nv", lead(col("d"), 1).over(w))
+      .withColumn("pv", lag(col("d"), 1).over(byPeak))
+      .withColumn("nv", lead(col("d"), 1).over(byPeak))
       .withColumn("tp", when(col("pv").isNotNull && col("nv").isNotNull &&
         ((col("d") > col("pv") && col("d") > col("nv")) ||
           (col("d") < col("pv") && col("d") < col("nv"))), 1L)
@@ -2004,11 +1983,8 @@ object BeatMetrics {
     * RR range, not the corpus.
     */
   def rrEntropy(peaks: DataFrame, binWidth: Int = 8): DataFrame = {
-    require((binWidth & (binWidth - 1)) == 0, "binWidth must be 2^k")
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    requireBinWidth(binWidth)
+    val rr = rrIntervals(peaks)
     val binned = rr.withColumn("bin",
       floor(col("d") / lit(binWidth.toDouble)).cast("long"))
     val counts = binned.groupBy(keys :+ col("bin"): _*)
@@ -2044,17 +2020,10 @@ object BeatMetrics {
     * broadcast (min/max), one ordered window pass, one aggregate.
     */
   def symbolicDynamics(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-    val st = rr.groupBy(keys: _*)
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
-    val lvl = rr.join(broadcast(st), keyCols)
-      .withColumn("s", when(col("mx") === col("mn"), lit(0L))
-        .otherwise(expr("((d - mn) * 6) div (mx - mn + 1)")))
-      .withColumn("s1", lead(col("s"), 1).over(w))
-      .withColumn("s2", lead(col("s"), 2).over(w))
+    val rr = rrIntervals(peaks)
+    val lvl = rrLevels(rr)
+      .withColumn("s1", lead(col("s"), 1).over(byPeak))
+      .withColumn("s2", lead(col("s"), 2).over(byPeak))
       .filter(col("s1").isNotNull && col("s2").isNotNull)
     val c1 = col("s1") =!= col("s")
     val c2 = col("s2") =!= col("s1")
@@ -2094,14 +2063,11 @@ object BeatMetrics {
     * classes as conditional sums.
     */
   def prsa(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr = rrIntervals(peaks)
     val nb = rr
-      .withColumn("dm1", lag(col("d"), 1).over(w))
-      .withColumn("dm2", lag(col("d"), 2).over(w))
-      .withColumn("dp1", lead(col("d"), 1).over(w))
+      .withColumn("dm1", lag(col("d"), 1).over(byPeak))
+      .withColumn("dm2", lag(col("d"), 2).over(byPeak))
+      .withColumn("dp1", lead(col("d"), 1).over(byPeak))
       .filter(col("dm1").isNotNull && col("dm2").isNotNull &&
         col("dp1").isNotNull)
     val quad = col("d") + col("dp1") - col("dm1") - col("dm2")
@@ -2216,21 +2182,11 @@ object BeatMetrics {
     */
   def rqa(peaks: DataFrame, rFrac: Double = 0.2,
           lMin: Int = 2): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("k", row_number().over(w) - lit(1))
-      .withColumn("d1", lead(col("d"), 1).over(w))
-    val st = rr.groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"),
-        sum(col("d") * col("d")).as("s2"),
-        sum(when(col("d1").isNotNull, 1L).otherwise(0L)).as("n_vec"))
-    val nD = col("n").cast("double")
-    val rThr = (lit(rFrac) *
-      (sqrt(greatest(nD * col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double"),
-        lit(0.0))) / nD)).as("r_thresh")
+    val rr = rrIntervals(peaks)
+      .withColumn("k", row_number().over(byPeak) - lit(1))
+      .withColumn("d1", lead(col("d"), 1).over(byPeak))
+    val (st, rThr) = rrMoments(rr, rFrac,
+      sum(when(col("d1").isNotNull, 1L).otherwise(0L)).as("n_vec"))
     val emb = rr.filter(col("d1").isNotNull)
     val a = emb.select(keys :+ col("k").as("ka") :+ col("d").as("da") :+
       col("d1").as("da1"): _*)
@@ -2289,9 +2245,7 @@ object BeatMetrics {
     */
   def spectralEdge(peaks: DataFrame, sampleRateHz: Double = 100.0,
                    edgeFrac: Double = 0.95): DataFrame = {
-    val rr0 = rrIntervals(peaks)
-    val w = Window.partitionBy(keys: _*).orderBy(col("ord"))
-    val rr = rr0.withColumn("k", row_number().over(w) - lit(1))
+    val rr = rrIntervals(peaks).withColumn("k", row_number().over(byPeak) - lit(1))
     val ch = rr.groupBy(keys: _*)
       .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"))
     val rate = lit(sampleRateHz)
@@ -2353,11 +2307,8 @@ object BeatMetrics {
     */
   def tinn(peaks: DataFrame, binWidth: Int = 8,
            sampleRateHz: Double = 100.0): DataFrame = {
-    require((binWidth & (binWidth - 1)) == 0, "binWidth must be 2^k")
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    requireBinWidth(binWidth)
+    val rr = rrIntervals(peaks)
     val hist = rr.withColumn("b",
       floor(col("d") / lit(binWidth.toDouble)).cast("long"))
       .groupBy(keys :+ col("b"): _*)
@@ -2422,16 +2373,9 @@ object BeatMetrics {
     * sums over the TINY joint table (≤ 36 cells per channel).
     */
   def rrMutualInfo(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-    val st = rr.groupBy(keys: _*)
-      .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
-    val lvl = rr.join(broadcast(st), keyCols)
-      .withColumn("s", when(col("mx") === col("mn"), lit(0L))
-        .otherwise(expr("((d - mn) * 6) div (mx - mn + 1)")))
-      .withColumn("s1", lead(col("s"), 1).over(w))
+    val rr = rrIntervals(peaks)
+    val lvl = rrLevels(rr)
+      .withColumn("s1", lead(col("s"), 1).over(byPeak))
       .filter(col("s1").isNotNull)
     val joint = lvl.groupBy(keys :+ col("s") :+ col("s1"): _*)
       .agg(count(lit(1)).as("nxy"))
@@ -2489,11 +2433,8 @@ object BeatMetrics {
     */
   def rrStationaritySplit(peaks: DataFrame,
                           sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("i", row_number().over(w))
+    val rr = rrIntervals(peaks)
+      .withColumn("i", row_number().over(byPeak))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(keys: _*)))
     val arms = rr
       .withColumn("h", when(col("i") * 2 <= col("n"), 0).otherwise(1))
@@ -2568,9 +2509,8 @@ object BeatMetrics {
       .select(keys :+ col("peak_idx") :+ col("off") :+ col("y_smooth"): _*)
       .localCheckpoint()
     // init: the channel's first two complete beats, cid ∈ {0, 1}
-    val wch = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
     val firstTwo = winc.select(keys :+ col("peak_idx"): _*).distinct()
-      .withColumn("rk", row_number().over(wch))
+      .withColumn("rk", row_number().over(byPeak))
       .filter(col("rk") <= 2)
       .select(keys :+ col("peak_idx") :+ (col("rk") - 1).as("cid"): _*)
     val c0 = winc.join(firstTwo, keyCols :+ "peak_idx")
@@ -2640,11 +2580,8 @@ object BeatMetrics {
     * and one channel aggregate — no joins, no data-sized shuffle.
     */
   def poincareAsymmetry(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val pairs = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("d1", lead(col("d"), 1).over(w))
+    val pairs = rrIntervals(peaks)
+      .withColumn("d1", lead(col("d"), 1).over(byPeak))
       .filter(col("d1").isNotNull)
     val up = col("d1") > col("d")
     val dn = col("d1") < col("d")
@@ -2723,10 +2660,7 @@ object BeatMetrics {
     * Q249's shape.
     */
   def rrDfa(peaks: DataFrame, scales: Seq[Int] = Seq(4, 6, 8)): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr = rrIntervals(peaks)
       .select(keys :+ col("peak_idx").as("sample_idx") :+
         col("d").cast("double").as("y_smooth"): _*)
     dfa(rr, scales)
@@ -2764,13 +2698,10 @@ object BeatMetrics {
                           sampleRateHz: Double = 100.0): DataFrame = {
     // >= 7 ⇒ at least two slope windows (Spark's greatest needs 2 args)
     require(postBeats >= 7, "TS needs two 5-beat windows past dp2")
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr0 = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
+    val rr0 = rrIntervals(peaks)
     val rr = (Seq(-2, -1) ++ (1 to postBeats)).foldLeft(rr0) { (df, k) =>
       df.withColumn(s"d$k",
-        (if (k < 0) lag(col("d"), -k) else lead(col("d"), k)).over(w))
+        (if (k < 0) lag(col("d"), -k) else lead(col("d"), k)).over(byPeak))
     }
     def dk(k: Int): Column = col(s"d$k")
     val neighborhood = (Seq(-2, -1) ++ (1 to postBeats))
@@ -2814,11 +2745,8 @@ object BeatMetrics {
     * beats × channels², never corpus²; one aggregate per pair.
     */
   def rrCrossCorrelation(peaks: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("i", row_number().over(w))
+    val rr = rrIntervals(peaks)
+      .withColumn("i", row_number().over(byPeak))
     val a = rr.select(col("experiment_id"), col("channel").as("cha"),
       col("i"), col("d").as("da"))
     val b = rr.select(col("experiment_id"), col("channel").as("chb"),
@@ -2831,16 +2759,9 @@ object BeatMetrics {
         sum(col("da") * col("da")).as("saa"),
         sum(col("db") * col("db")).as("sbb"),
         sum(col("da") * col("db")).as("sab"))
-    val nD = col("n_common").cast("double")
-    val cov = nD * col("sab").cast("double") -
-      col("sa").cast("double") * col("sb").cast("double")
-    val va = nD * col("saa").cast("double") -
-      col("sa").cast("double") * col("sa").cast("double")
-    val vb = nD * col("sbb").cast("double") -
-      col("sb").cast("double") * col("sb").cast("double")
     agg.select(col("experiment_id"), col("cha"), col("chb"),
       col("n_common"),
-      (cov / nullif(sqrt(greatest(va * vb, lit(0.0))), lit(0.0))).as("rr_corr"))
+      pearson("n_common", "sa", "sb", "saa", "sbb", "sab").as("rr_corr"))
   }
 
   /** Q276 — segmental HRV (the SDANN/SDNNI pair, beat-count
@@ -2864,11 +2785,8 @@ object BeatMetrics {
     */
   def segmentalHrv(peaks: DataFrame, segLen: Int = 8,
                    sampleRateHz: Double = 100.0): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("peak_idx"))
-    val rr = peaks.select(keys :+ col("peak_idx"): _*)
-      .withColumn("d", col("peak_idx") - lag(col("peak_idx"), 1).over(w))
-      .filter(col("d").isNotNull)
-      .withColumn("g", floor((row_number().over(w) - 1).cast("double") /
+    val rr = rrIntervals(peaks)
+      .withColumn("g", floor((row_number().over(byPeak) - 1).cast("double") /
         lit(segLen.toDouble)).cast("long"))
     val seg = rr.groupBy(keys :+ col("g"): _*)
       .agg(count(lit(1)).as("sn"), sum(col("d")).as("s1"),

@@ -45,8 +45,9 @@ import graft.operators.Smoothing.dotChunk
   *    rows per batch ([[inBatches]], [[byDoc]]). Batch boundaries
   *    decide results (watermarks, state versions, q295's generations,
   *    the q339/q341 fold cadence), so each fixture fixes its own;
-  *  - each batch is added as 32 blocks, which changes only the scan
-  *    parallelism: MemoryStream plans one input partition per block;
+  *  - each batch is added in one `addData` call to a MemoryStream that
+  *    spreads it over 32 input partitions, so the scan runs on all cores
+  *    and the batch is one trigger;
   *  - a memory-sink query runs with 4 shuffle (= state) partitions,
   *    scoped by [[withConfs]]; a `foreachBatch` writer keeps the
   *    session's partitions;
@@ -68,12 +69,22 @@ object StreamingOps {
   private final case class Memory(prefix: String, mode: OutputMode) extends Sink
   private final case class EachBatch(write: (DataFrame, Long) => Unit) extends Sink
 
-  /** Runs `plan` over one MemoryStream per feed into `sink`: micro-batch
-    * i adds batch i of every feed that has one, each as 32 addData
-    * blocks, then runs `processAllAvailable` once. The query is stopped
-    * whatever happens. A batch fed as one block would be one input
-    * partition, a single-threaded scan (measured: the dominant cost of
-    * the sf0.1 streaming fixtures); 32 blocks scan on all cores.
+  /** Runs `plan` over one MemoryStream per feed into `sink`. Batch 0 of
+    * every feed is added before the query starts; then, for each i,
+    * batch i of every feed that has one is added (from i = 1, one
+    * `addData` call per feed) and `processAllAvailable` runs once. The
+    * query is stopped whatever happens.
+    *
+    * Each stream is `MemoryStream(32)`, which spreads every batch over
+    * 32 input partitions: a batch in one partition is a single-threaded
+    * scan (measured: the dominant cost of the sf0.1 streaming
+    * fixtures). Adding a batch in one call makes it one trigger for a
+    * single-feed fixture: a trigger that fired between several
+    * `addData` calls of one batch split it (seen as a varying trigger
+    * count on q88). With two feeds (q58), batches i >= 1 are still
+    * added one feed after the other while the query runs, so a trigger
+    * can land between them and see one feed's batch i alone; batch 0
+    * of both feeds arrives in the first trigger.
     *
     * A memory sink runs with `spark.sql.shuffle.partitions` = 4:
     * stateful operators commit one state-store delta per partition per
@@ -92,13 +103,15 @@ object StreamingOps {
   private def drive[A: Encoder](s: SparkSession, sink: Sink, feeds: Seq[Seq[A]]*)(
       plan: Seq[Dataset[A]] => Dataset[_]): DataFrame = {
     implicit val ctx: SQLContext = s.sqlContext
-    val streams = feeds.map(_ => MemoryStream[A])
+    val streams = feeds.map(_ => MemoryStream[A](32))
     val out = plan(streams.map(_.toDS())).toDF().writeStream
+    def feed(i: Int): Unit =
+      for ((st, f) <- streams.zip(feeds); b <- f.lift(i) if b.nonEmpty) st.addData(b)
     def run(writer: DataStreamWriter[Row]): Unit = {
+      feed(0)
       val q = writer.start()
       try (0 until feeds.map(_.length).max).foreach { i =>
-        for ((st, f) <- streams.zip(feeds); b <- f.lift(i))
-          b.grouped(b.length / 32 + 1).foreach(st.addData(_))
+        if (i > 0) feed(i)
         q.processAllAvailable()
       } finally q.stop()
     }

@@ -52,4 +52,19 @@ class ErrorPathSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] { new graft.functions.TopKByValue(0) }
   }
+
+  test("RR histograms reject a bin width that is not a positive power of two at call time") {
+    import spark.implicits._
+    import graft.operators.BeatMetrics
+    val peaks = Seq(("e", 0, 10L, 0.1, 1.0), ("e", 0, 80L, 0.8, 1.0))
+      .toDF("experiment_id", "channel", "peak_idx", "t", "peak_value")
+    // 0 & (0 - 1) == 0 and Int.MinValue & (Int.MinValue - 1) == 0, so a
+    // bare power-of-two bit test lets both through to the division
+    for (bw <- Seq(0, Int.MinValue, -8, 6)) {
+      val e1 = intercept[IllegalArgumentException](BeatMetrics.rrEntropy(peaks, bw))
+      val e2 = intercept[IllegalArgumentException](BeatMetrics.tinn(peaks, bw))
+      assert(Seq(e1, e2).forall(_.getMessage.contains("positive power of two")))
+    }
+    assert(BeatMetrics.rrEntropy(peaks, 1).count() === 1)
+  }
 }

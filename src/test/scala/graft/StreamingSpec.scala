@@ -298,6 +298,36 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("drive: each fed micro-batch of a single-feed fixture is one data trigger") {
+    import java.util.UUID
+    import java.util.concurrent.ConcurrentHashMap
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // query id -> data-bearing triggers, for the q88 fixture's queries
+    val triggers = new ConcurrentHashMap[UUID, Integer]()
+    val ended = ConcurrentHashMap.newKeySet[UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith("q88_stream_funnel_"))) triggers.put(e.id, 0)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) triggers.computeIfPresent(e.progress.id, (_, n) => n + 1)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.id)
+    }
+    val runs = 6
+    spark.streams.addListener(listener)
+    try {
+      // q88 feeds its events as 2 micro-batches
+      (1 to runs).foreach(_ =>
+        StreamingOps.streamFunnelFixture(spark, "/root/testdata/sf0.01").collect())
+      // progress events reach listeners asynchronously, before the
+      // query's terminated event
+      val deadline = System.nanoTime() + 30000000000L
+      while (!(triggers.size == runs && triggers.keySet.stream.allMatch(ended.contains(_))) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(triggers.values.toArray.toSeq === Seq.fill(runs)(2))
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("streamMoments exact-decimal state equals batch momentStats") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("streammom").toString
