@@ -19,7 +19,9 @@ object OracleSql {
     if (s.contains("E") || s.contains("e")) s.toLowerCase.replace("e", "e") else s
   }
 
-  /** FIR over a window named `w`, chunked exactly like Smoothing.sgDot:
+  /** FIR over a window named `w`, chunked exactly like
+    * `FirDotExpr.dotChunkedAt`, the fold of the smoothing and envelope
+    * kernels:
     * (0.0 + c₀·lag(v,k) + … ≤100 terms) + (0.0 + …) + … — same chunk
     * boundaries, same left-assoc order, bitwise-identical to the Spark
     * plan. (Also keeps each chain under DuckDB's 128-deep binder limit.)

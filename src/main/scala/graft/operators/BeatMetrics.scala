@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 import graft.PeakConfig
+import graft.plans.{ChannelPlan, PeaksKernel, Rows}
 import Smoothing.keyCols
 
 /** O9/O10 — per-beat metrics and channel summary
@@ -16,11 +18,13 @@ import Smoothing.keyCols
   * (`peak_analysis.py:81-107`; note TTP tests `>=`, TTR tests `<=`, and
   * a null diastolic or y_smooth makes both comparisons false, as
   * `coalesce(cmp, false)` does). The walk is an as-of lookup: the
-  * nearest index on that side whose state differs. `metrics` is one
-  * kernel per channel of [[Channels]], which cogroups the channel's
-  * enriched rows with its peaks: previous-flip and next-flip index
-  * arrays in one O(n) pass each, then each peak's walk exits read off
-  * them. No per-peak scanning, no driver loops, no join.
+  * nearest index on that side whose state differs. `metrics` is the
+  * binary kernel of the channel operator ([[graft.plans.ChannelPlan]]),
+  * which meets each channel's enriched rows with its peaks:
+  * previous-flip and next-flip index arrays in one O(n) pass each, then
+  * each peak's walk exits read off them. No per-peak scanning, no driver
+  * loops, no join. Its output keeps the peak side's channel
+  * partitioning, so [[summary]]'s aggregate plans no Exchange of its own.
   *
   * Exact parity rules (SURVEY §8 Q7/Q8):
   *  - edge guard: peak_idx == 0 or >= n−2 ⇒ ttp/ttr/duration null;
@@ -124,27 +128,29 @@ object BeatMetrics {
       cfg: PeakConfig = PeakConfig(),
       markers: Boolean = true
   ): DataFrame = {
-    val in = enriched.select(keys ++ Seq("sample_idx", "y_smooth", "baseline",
-      "diastolic").map(col): _*)
-    // the keys take enriched's types, as the inner join's coercion did
-    val pk = peaks.select(keyCols.map(k => col(k).cast(in.schema(k).dataType).as(k)) ++
-      Seq("peak_idx", "t", "peak_value").map(col): _*)
     val metricCols = Seq("baseline_value", "force", "time_to_peak",
       "time_to_relaxation", "duration") ++
       (if (markers) Seq("ttp_t", "ttp_y", "ttr_t", "ttr_y") else Nil)
-    val out = StructType(pk.schema.fields ++ metricCols.map(StructField(_, DoubleType)))
-    val rate = cfg.sampleRateHz
-    def num(r: Row, at: Int) = if (r.isNullAt(at)) None else Some(r.getAs[Number](at).doubleValue)
-    Channels.cogroup(in, pk, out) { (_, rows, peakRows) =>
-      val n = rows.length
-      def y(i: Int): Any = rows(i).get(3)
+    ChannelPlan.withPeaks(enriched, peaks, MetricsKernel(cfg.sampleRateHz, markers),
+      Seq("y_smooth", "baseline", "diastolic"), Seq("peak_idx", "t", "peak_value"),
+      metricCols.map(StructField(_, DoubleType)))
+  }
+
+  /** The `metrics` kernel: a channel's y_smooth, baseline and diastolic,
+    * and its peaks' `peak_idx`, `t` and `peak_value`.
+    */
+  private[graft] case class MetricsKernel(rate: Double, markers: Boolean) extends PeaksKernel {
+    def apply(ch: Rows, peaks: Rows): Iterator[(Int, InternalRow)] = {
+      val n = ch.n
+      def y(i: Int): Any = ch.get(i, 0)
+      def num(r: Rows, i: Int, j: Int) = Option.when(!r.isNull(i, j))(r.double(i, j))
       // coalesce(y_smooth >= diastolic, false) for sign 1, `<=` for −1
-      def state(sign: Int)(i: Int) = !rows(i).isNullAt(3) && !rows(i).isNullAt(5) &&
-        sign * compareDoubles(rows(i).getDouble(3), rows(i).getDouble(5)) >= 0
+      def state(sign: Int)(i: Int) = !ch.isNull(i, 0) && !ch.isNull(i, 2) &&
+        sign * compareDoubles(ch.double(i, 0), ch.double(i, 2)) >= 0
       lazy val left = flips(n, state(1), forward = true)
       lazy val right = flips(n, state(-1), forward = false)
-      peakRows.flatMap { pr =>
-        val p = if (pr.isNullAt(2)) -1L else pr.getAs[Number](2).longValue
+      Iterator.range(0, peaks.n).flatMap { k =>
+        val p = if (peaks.isNull(k, 0)) -1L else peaks.get(k, 0).asInstanceOf[Number].longValue
         Option.when(p >= 0 && p < n) {
           val i = p.toInt
           val edge = p == 0 || p >= n - 2
@@ -155,17 +161,17 @@ object BeatMetrics {
           // TTR: reaching (or flipping at) the last sample ⇒ null
           val exitIdx = if (right(i) < 0) n - 1 else right(i)
           val ttr = Option.when(!edge && exitIdx != n - 1)((exitIdx - p).toDouble / rate)
-          val t = num(pr, 3)
-          val base = num(rows(i), 4)
+          val t = num(peaks, k, 1)
+          val base = num(ch, i, 1)
           val marks = if (!markers) Nil else Seq(
             for (_ <- ttp; tt <- t) yield tt - (p - ttpIdx).toDouble / rate,
             // an exhausted walk, or a null y_smooth at the flip, reads sample 0
-            ttp.map(_ => if (left(i) >= 0 && !rows(left(i)).isNullAt(3)) y(left(i)) else y(0)),
+            ttp.map(_ => if (left(i) >= 0 && !ch.isNull(left(i), 0)) y(left(i)) else y(0)),
             for (_ <- ttr; tt <- t) yield tt + (exitIdx - p).toDouble / rate,
             ttr.map(_ => y(exitIdx)))
-          val force = for (v <- num(pr, 4); b <- base) yield v - b
+          val force = for (v <- num(peaks, k, 2); b <- base) yield v - b
           val duration = for (r <- ttr; q <- ttp) yield r + q
-          Row.fromSeq(pr.toSeq ++ (Seq(base, force, ttp, ttr, duration) ++ marks).map(_.orNull))
+          (k, Rows.of((Seq(base, force, ttp, ttr, duration) ++ marks).map(_.orNull): _*))
         }
       }
     }

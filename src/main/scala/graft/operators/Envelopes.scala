@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 import graft.PeakConfig
 import graft.functions.{FirDotExpr, SavitzkyGolay}
+import graft.plans.{ChannelKernel, ChannelPlan, Rows}
 import Smoothing.{keyCols, dotChunk}
 
 /** O4/O5/O6 — floor/ceiling envelopes + diastolic reference
@@ -19,13 +21,13 @@ import Smoothing.{keyCols, dotChunk}
   *   diastolic  = baseline + 0.1·(ceiling − baseline)
   * ceiling mirrors with interior local maxima / max.
   *
-  * Computed as one kernel per channel through the shared harness
-  * [[Channels.flatMap]]: it groups by the channel key columns (so it
-  * rides the channel hash partitioning Smoothing already paid for —
-  * smooth + envelopes plan one Exchange), lays the channel out by
-  * `sample_idx`, enforces the dense 0-based `sample_idx` precondition and
-  * the null-key rule. The kernel works over primitive arrays and emits
-  * every input row with the three columns appended. O(n) per channel:
+  * Computed as a per-sample kernel of the channel operator
+  * ([[graft.plans.ChannelPlan]]): it rides the channel hash partitioning
+  * and key order Smoothing already paid for — smooth + envelopes plan
+  * one Exchange and one Sort — lays the channel out by `sample_idx`,
+  * enforces the dense 0-based `sample_idx` precondition and the null-key
+  * rule. The kernel works over primitive arrays and emits every input
+  * row with the three columns appended. O(n) per channel:
   * the frame-interior extrema [i+1, i+W−2] come from a monotonic deque,
   * the block-repeat pad and the `mode='nearest'` edge clamp are index
   * arithmetic, and each SG output is one [[FirDotExpr.dotChunkedAt]]
@@ -65,58 +67,52 @@ object Envelopes {
       cfg: PeakConfig = PeakConfig(),
       targetCol: String = "y_smooth"
   ): DataFrame = {
-    val bigW = cfg.auxWindowSize // 350
-    val sw = cfg.auxSmoothingWindow // 301
-    val pad = math.max(bigW, sw) / 2 // 175
-    val k = sw / 2 // 150
-    val c = SavitzkyGolay.coeffs(sw, cfg.auxPolyorder)
-    val rel = cfg.relativeToBaseline
-
     val lead = keyCols :+ "sample_idx"
     val in = df.select((lead ++ df.columns.filterNot(lead.contains)).map(col): _*)
-    val vi = in.schema.fieldIndex(targetCol)
-    val out = StructType(in.schema.fields ++
+    ChannelPlan.perSample(in, EnvelopeKernel(cfg), Seq(targetCol),
       Seq("baseline", "ceiling", "diastolic").map(StructField(_, DoubleType)))
-
-    Channels.flatMap(in, out, r => Iterator(blank(r))) { (_, byIdx) =>
-      channel(byIdx, vi, bigW, pad, k, c, rel)
-    }
   }
 
-  private def emit(r: Row, b: Any, ce: Any, d: Any) = Row.fromSeq(r.toSeq :+ b :+ ce :+ d)
-  private def blank(r: Row) = emit(r, null, null, null)
+  /** The `withEnvelopes` kernel: one channel's target series in,
+    * baseline, ceiling and diastolic out.
+    */
+  private[graft] case class EnvelopeKernel(cfg: PeakConfig) extends ChannelKernel {
+    private val c = SavitzkyGolay.coeffs(cfg.auxSmoothingWindow, cfg.auxPolyorder)
 
-  private def channel(byIdx: Array[Row], vi: Int, bigW: Int, pad: Int,
-      k: Int, c: Array[Double], rel: Double): Iterator[Row] = {
-    val n = byIdx.length
-    val m = n - bigW
-    if (m < pad) return byIdx.iterator.map(blank)
+    def apply(ch: Rows): Iterator[InternalRow] = {
+      val bigW = cfg.auxWindowSize // 350
+      val pad = math.max(bigW, cfg.auxSmoothingWindow) / 2 // 175
+      val k = cfg.auxSmoothingWindow / 2 // 150
+      val n = ch.n
+      val m = n - bigW
+      if (m < pad) return Iterator.fill(n)(Rows.of(null, null, null))
 
-    val v = Channels.doubles(byIdx, vi)
-    // a mark needs the value and both neighbours non-null
-    def sign(i: Int): Int =
-      if (i == 0 || i == n - 1 || byIdx(i - 1).isNullAt(vi) || byIdx(i).isNullAt(vi) ||
-          byIdx(i + 1).isNullAt(vi)) 0
-      else mark(v, i)
-    val marks = Array.tabulate(n)(sign)
-    val plen = m + 2 * pad
-    // padded[j] = floor[src(j)] (block repeat); taps clamp to [0, plen)
-    def padded(fr: Array[Double]): Array[Double] = Array.tabulate(plen + 2 * k) { q =>
-      val j = math.min(math.max(q - k, 0), plen - 1)
-      fr(if (j < pad) j else if (j < m + pad) j - pad else j - 2 * pad)
-    }
-    val fb = padded(frameExtrema(v, marks, -1, m, bigW - 2))
-    val fc = padded(frameExtrema(v, marks, 1, m, bigW - 2))
-    def sg(p: Array[Double], s: Int): Any =
-      if (s >= plen) null
-      else {
-        val x = FirDotExpr.dotChunkedAt(p, s, c, dotChunk)
-        if (x.isNaN) null else x
+      val v = ch.doubles(0)
+      // a mark needs the value and both neighbours non-null
+      def sign(i: Int): Int =
+        if (i == 0 || i == n - 1 || ch.isNull(i - 1, 0) || ch.isNull(i, 0) ||
+            ch.isNull(i + 1, 0)) 0
+        else mark(v, i)
+      val marks = Array.tabulate(n)(sign)
+      val plen = m + 2 * pad
+      // padded[j] = floor[src(j)] (block repeat); taps clamp to [0, plen)
+      def padded(fr: Array[Double]): Array[Double] = Array.tabulate(plen + 2 * k) { q =>
+        val j = math.min(math.max(q - k, 0), plen - 1)
+        fr(if (j < pad) j else if (j < m + pad) j - pad else j - 2 * pad)
       }
-    Iterator.tabulate(n) { s =>
-      (sg(fb, s), sg(fc, s)) match {
-        case (b: Double, ce: Double) => emit(byIdx(s), b, ce, b + rel * (ce - b))
-        case (b, ce) => emit(byIdx(s), b, ce, null)
+      val fb = padded(frameExtrema(v, marks, -1, m, bigW - 2))
+      val fc = padded(frameExtrema(v, marks, 1, m, bigW - 2))
+      def sg(p: Array[Double], s: Int): Any =
+        if (s >= plen) null
+        else {
+          val x = FirDotExpr.dotChunkedAt(p, s, c, dotChunk)
+          if (x.isNaN) null else x
+        }
+      Iterator.tabulate(n) { s =>
+        (sg(fb, s), sg(fc, s)) match {
+          case (b: Double, ce: Double) => Rows.of(b, ce, b + cfg.relativeToBaseline * (ce - b))
+          case (b, ce) => Rows.of(b, ce, null)
+        }
       }
     }
   }

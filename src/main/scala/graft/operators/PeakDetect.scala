@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 import graft.PeakConfig
 import graft.functions.FindPeaks
+import graft.plans.{ChannelKernel, ChannelPlan, Rows}
 import Smoothing.keyCols
 
 /** O7/O8 — peak detection (SURVEY §2.5).
@@ -13,8 +15,11 @@ import Smoothing.keyCols
   * Declarative parts (rule-1 candidates, amplitude gate) are window
   * expressions; the sequential parts of scipy's `find_peaks` (greedy
   * distance, wlen-clipped prominence, interpolated width) run as the
-  * [[graft.functions.FindPeaks]] port inside one kernel per channel of
-  * the shared harness [[Channels]] — a channel is one bounded recording,
+  * [[graft.functions.FindPeaks]] port inside a per-channel kernel of the
+  * channel operator ([[graft.plans.ChannelPlan]]), which lays each
+  * channel out by `sample_idx` and drops null-key rows. Its output keeps
+  * the channel partitioning, so beat metrics over undisturbed peaks plan
+  * no second Exchange for them — a channel is one bounded recording,
   * and 100 TB scale comes from millions of independent channels (no
   * driver-side work, no broadcast of signal data). A null `y_smooth`
   * reads as NaN, which scipy never takes for a peak and which stops the
@@ -62,19 +67,22 @@ object PeakDetect {
   def detectPeaks(
       enriched: DataFrame,
       cfg: PeakConfig = PeakConfig()
-  ): DataFrame = {
-    val in = enriched.select(keys ++ Seq("sample_idx", "t", "y_smooth", "baseline",
-      "ceiling").map(col): _*)
-    Channels.flatMap(in, peakSchema(in, in.schema("t"), StructField("peak_value", DoubleType))) {
-      (key, rows) =>
-        val Seq(x, b, c) = Seq(4, 5, 6).map(Channels.doubles(rows, _))
-        FindPeaks
-          .findPeaks(x, cfg.width, cfg.minDistance, cfg.relHeight,
-            cfg.prominence, cfg.wlen)
-          .iterator
-          // gate with Python NaN-comparison parity: a null envelope keeps
-          .filter(p => !(x(p) < (c(p) - b(p)) * cfg.threshold + b(p)))
-          .map(p => Row(key.get(0), key.get(1), rows(p).get(2), rows(p).get(3), x(p)))
+  ): DataFrame =
+    ChannelPlan.perChannel(enriched, DetectKernel(cfg),
+      Seq("sample_idx", "t", "y_smooth", "baseline", "ceiling"),
+      Seq(peakIdx(enriched), enriched.schema("t"), StructField("peak_value", DoubleType)))
+
+  /** The `detectPeaks` kernel. */
+  private[graft] case class DetectKernel(cfg: PeakConfig) extends ChannelKernel {
+    def apply(ch: Rows): Iterator[InternalRow] = {
+      val Seq(x, b, c) = Seq(2, 3, 4).map(ch.doubles)
+      FindPeaks
+        .findPeaks(x, cfg.width, cfg.minDistance, cfg.relHeight,
+          cfg.prominence, cfg.wlen)
+        .iterator
+        // gate with Python NaN-comparison parity: a null envelope keeps
+        .filter(p => !(x(p) < (c(p) - b(p)) * cfg.threshold + b(p)))
+        .map(p => Rows.of(ch.get(p, 0), ch.get(p, 1), x(p)))
     }
   }
 
@@ -84,21 +92,22 @@ object PeakDetect {
   def candidateProminences(
       smoothed: DataFrame,
       cfg: PeakConfig = PeakConfig()
-  ): DataFrame = {
-    val in = smoothed.select(keys ++ Seq("sample_idx", "y_smooth").map(col): _*)
-    Channels.flatMap(in, peakSchema(in, StructField("prominence", DoubleType))) { (key, rows) =>
-      val x = Channels.doubles(rows, 3)
+  ): DataFrame =
+    ChannelPlan.perChannel(smoothed, ProminenceKernel(cfg), Seq("sample_idx", "y_smooth"),
+      Seq(peakIdx(smoothed), StructField("prominence", DoubleType)))
+
+  /** The `candidateProminences` kernel. */
+  private[graft] case class ProminenceKernel(cfg: PeakConfig) extends ChannelKernel {
+    def apply(ch: Rows): Iterator[InternalRow] = {
+      val x = ch.doubles(1)
       val peaks = FindPeaks.localMaxima(x)
       val proms = FindPeaks.peakProminences(x, peaks, cfg.wlen)
-      peaks.iterator.zip(proms.iterator).map { case (p, pr) =>
-        Row(key.get(0), key.get(1), rows(p).get(2), pr.value)
-      }
+      peaks.iterator.zip(proms.iterator).map { case (p, pr) => Rows.of(ch.get(p, 0), pr.value) }
     }
   }
 
-  /** The keys, `sample_idx` renamed `peak_idx`, then `more`. */
-  private def peakSchema(in: DataFrame, more: StructField*): StructType =
-    StructType(Seq(in.schema(0), in.schema(1), in.schema(2).copy(name = "peak_idx")) ++ more)
+  /** `sample_idx` renamed `peak_idx`. */
+  private def peakIdx(df: DataFrame): StructField = df.schema("sample_idx").copy(name = "peak_idx")
 
   /** O2 — stim rescale: per-channel scale to the signal's amplitude,
     * `stim.y · (max(sig.y) / max(stim.y))`

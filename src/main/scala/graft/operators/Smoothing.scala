@@ -1,19 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SavitzkyGolay
+import org.apache.spark.sql.types.{DoubleType, StructField}
+import graft.functions.{FirDotExpr, SavitzkyGolay}
+import graft.plans.{ChannelKernel, ChannelPlan, Rows}
 
 /** O3 — Savitzky-Golay smoothing with the reference's block-repeat edge
   * padding (`/root/reference/peak_detection.py:172-197`, SURVEY §2.3).
   *
-  * Spark-first design: the pad is one narrow explode (positions never
-  * collide), the 51-tap FIR is one window expression over
-  * `(experiment_id, channel) ORDER BY pos`. The per-channel count and
-  * the FIR window share one channel-hash Exchange, and Envelopes groups
-  * by the same key columns, so smooth + envelopes plan exactly one
-  * Exchange (pinned in EnvelopesEdgeSpec). No UDF, no RDD.
+  * `withSmooth` is a per-sample kernel of the channel operator
+  * ([[graft.plans.ChannelPlan]]): it rides the channel hash partitioning,
+  * lays each channel out by `sample_idx`, and folds every output over
+  * primitive arrays with one [[FirDotExpr.dotChunkedAt]] — the fold the
+  * envelope kernel, the streaming spine and the DuckDB oracle share.
+  * Smooth + envelopes plan one Exchange and no Window (pinned in
+  * EnvelopesEdgeSpec and PlanQualitySpec). No UDF, no RDD.
   */
 object Smoothing {
 
@@ -29,61 +33,55 @@ object Smoothing {
     */
   val dotChunk = 100
 
-  def sgDot(taps: Column, coeffs: Array[Double]): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.FirDotExpr(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(taps),
-        coeffs, dotChunk))
-
-  /** Block-repeat pad of a per-channel series ordered by `idxCol`
-    * (dense 0-based, per-channel length in `nCol`):
-    * concat(v[0:pad], v, v[m-pad:m]) laid out at positions
-    * [0,pad) ∪ [pad,m+pad) ∪ [m+pad,m+2·pad). NOT mirror, NOT
-    * edge-replicate — duplicated blocks keep original order
-    * (`/root/reference/peak_detection.py:188-189`).
-    *
-    * Built by exploding a per-row array of target positions — a single
-    * narrow Generate, no union: one scan, and the upstream hash
-    * partitioning by channel stays genuinely intact for the downstream
-    * window. (A union of co-partitioned branches is a trap: Spark 4.1
-    * plans the following window without a merging Exchange while the
-    * union concatenates branch partitions — silently wrong frames.)
-    */
-  def blockRepeatPad(df: DataFrame, idxCol: String, nCol: String, pad: Int): DataFrame = {
-    val i = col(idxCol)
-    val n = col(nCol)
-    val none = array().cast("array<bigint>")
-    val positions = concat(
-      when(i < pad, array(i.cast("bigint"))).otherwise(none),
-      array((i + pad).cast("bigint")),
-      when(i >= n - pad, array((i + 2 * pad).cast("bigint"))).otherwise(none)
-    )
-    df.withColumn("_pos", explode(positions))
-  }
-
   /** Adds `y_smooth` (SG window/polyorder over block-repeat-padded `y`,
     * pad stripped) to the signal frame. Output length = input length;
     * interior samples equal the plain SG convolution, edge samples see
     * the duplicated block — exact reference parity (SURVEY §2.3).
     *
-    * For the retained output range the padded-array windows never
-    * overrun (positions k..n+k-1 of an (n+2k)-long series), so scipy's
-    * `mode='nearest'` branch is unreachable here — no edge extension.
+    * The padded series is concat(y[0:a], y, y[n−a:n]) with a = min(n, k),
+    * k = window/2 — block repeat, NOT mirror, NOT edge-replicate
+    * (`/root/reference/peak_detection.py:188-189`). Sample i reads the
+    * window taps of the padded series centred on its own copy, and has a
+    * value only when they all exist:
+    *  - n ≥ k (25 for the default window): every sample;
+    *  - n < k: exactly the 3n − 2k samples k − n ≤ i ≤ 2n − k − 1, and
+    *    none when 3n ≤ 2k (n ≤ 16 for the default window); the rest are
+    *    null.
+    * The DuckDB oracle mirrors the same rule, and SmoothingEdgeSpec pins
+    * it at n = 1 … 52.
+    *
+    * A null `y` among a sample's taps gives a null `y_smooth`; a NaN
+    * propagates as NaN. Rows with a null key get a null `y_smooth`; a
+    * channel whose `sample_idx` is not dense and 0-based fails the job,
+    * naming the channel.
     */
-  def withSmooth(sig: DataFrame, window: Int = 51, polyorder: Int = 7): DataFrame = {
-    val k = window / 2
-    val c = SavitzkyGolay.coeffs(window, polyorder)
-    val wch = Window.partitionBy(keys: _*)
-    val wtap = Window.partitionBy(keys: _*).orderBy("_pos").rowsBetween(-k, k)
+  def withSmooth(sig: DataFrame, window: Int = 51, polyorder: Int = 7): DataFrame =
+    ChannelPlan.perSample(sig, SmoothKernel(window, polyorder), Seq("y"),
+      Seq(StructField("y_smooth", DoubleType)))
 
-    val wn = sig.withColumn("_n", count(lit(1)).over(wch))
-    val padded = blockRepeatPad(wn, "sample_idx", "_n", k)
-    padded
-      .withColumn("_taps", collect_list(col("y")).over(wtap))
-      .filter(col("_pos") >= k && col("_pos") < col("_n") + k)
-      .withColumn("y_smooth",
-        when(size(col("_taps")) === window, sgDot(col("_taps"), c)))
-      .drop("_taps", "_pos", "_n")
+  /** The `withSmooth` kernel: one channel's `y` in, `y_smooth` out. */
+  private[graft] case class SmoothKernel(window: Int, polyorder: Int) extends ChannelKernel {
+    private val c = SavitzkyGolay.coeffs(window, polyorder)
+
+    def apply(ch: Rows): Iterator[InternalRow] = {
+      val k = window / 2
+      val n = ch.n
+      val a = math.min(n, k)
+      val len = n + 2 * a
+      // padded position q holds sample src(q)
+      def src(q: Int): Int = if (q < a) q else if (q < a + n) q - a else q - 2 * a
+      val y = ch.doubles(0)
+      val p = Array.tabulate(len)(q => y(src(q)))
+      // nulls(q): how many of p(0 until q) are null
+      val nulls = new Array[Int](len + 1)
+      for (q <- 0 until len) nulls(q + 1) = nulls(q) + (if (ch.isNull(src(q), 0)) 1 else 0)
+      Iterator.tabulate(n) { i =>
+        val s = a + i - k
+        Rows.of(
+          if (s < 0 || s + window > len || nulls(s + window) > nulls(s)) null
+          else FirDotExpr.dotChunkedAt(p, s, c, dotChunk))
+      }
+    }
   }
 
   /** Q181 — half-life EWMA: exponentially-weighted moving average with

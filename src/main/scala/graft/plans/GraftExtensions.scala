@@ -11,14 +11,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * builders) or `.withExtensions(new GraftExtensions)`.
   *
   * Injects the [[EditDistancePrefilter]] optimizer rule (whole-plan
-  * rewrites per-expression helpers can't express) and the
-  * [[AsofJoinStrategy]] planner strategy for the native as-of join
-  * operator ([[AsofJoinNode]] → [[AsofJoinExec]]).
+  * rewrites per-expression helpers can't express) and two planner
+  * strategies: [[AsofJoinStrategy]] for the native as-of join operator
+  * ([[AsofJoinNode]] → [[AsofJoinExec]]) and [[ChannelStrategy]] for
+  * the channel operator of the signal spine ([[ChannelNode]] →
+  * [[ChannelExec]], [[ChannelPeaksNode]] → [[ChannelPeaksExec]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => EditDistancePrefilter)
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
+    e.injectPlannerStrategy(_ => ChannelStrategy)
   }
 }
 

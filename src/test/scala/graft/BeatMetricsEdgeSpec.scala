@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{BeatMetrics, Envelopes, PeakDetect, Smoothing}
+import Fingerprints.print
 
 /** Bit-level, order-insensitive fingerprints of `detectPeaks`,
   * `candidateProminences` and `metrics` (with and without markers) over
@@ -13,32 +14,6 @@ import graft.operators.{BeatMetrics, Envelopes, PeakDetect, Smoothing}
   */
 class BeatMetricsEdgeSpec extends SparkSpec {
   import spark.implicits._
-
-  private def fin(x: Long): Long = {
-    var z = x
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
-  /** Per-row mix of every column's bits (null has its own sentinel). */
-  private def rowHash(r: Row): Long =
-    (0 until r.length).map { i =>
-      r.get(i) match {
-        case null => 0x7ff8dead00000001L
-        case d: Double => java.lang.Double.doubleToLongBits(d)
-        case s: String => s.hashCode.toLong
-        case x: Number => x.longValue
-        case b: Boolean => if (b) 1L else 0L
-        case other => fail(s"unexpected value $other")
-      }
-    }.foldLeft(17L)((h, x) => fin(h + x))
-
-  /** (schema, row count, fingerprint summed over rows). */
-  private def print(df: DataFrame): (String, Int, Long) = {
-    val rows = df.collect()
-    (df.schema.simpleString, rows.length, rows.map(rowHash).sum)
-  }
 
   private def enrich(df: DataFrame): DataFrame =
     Envelopes.withEnvelopes(Smoothing.withSmooth(df))
@@ -133,6 +108,23 @@ class BeatMetricsEdgeSpec extends SparkSpec {
       print(PeakDetect.detectPeaks(enrich(long)).toDF()))
     assert(print(proms.filter($"channel" === 0)) ===
       print(PeakDetect.candidateProminences(Smoothing.withSmooth(long))))
+  }
+
+  test("a column subset downstream of each kernel equals those columns of the full frame") {
+    // the channel operator declares the columns its kernels read, so
+    // column pruning under a narrow select keeps them
+    val smooth = Smoothing.withSmooth(sig(900, 0, "p").union(sig(700, 1, "p")))
+    val env = Envelopes.withEnvelopes(smooth)
+    val peaks = PeakDetect.detectPeaks(env)
+    val m = BeatMetrics.metrics(env, peaks)
+    Seq(smooth -> Seq("channel", "y_smooth"),
+        env -> Seq("sample_idx", "diastolic"),
+        peaks -> Seq("channel", "peak_value"),
+        m -> Seq("peak_idx", "force", "ttr_y")).foreach { case (df, cols) =>
+      val full = df.localCheckpoint()
+      assert(full.filter(col(cols.last).isNotNull).count() > 0, cols)
+      assert(print(df.select(cols.map(col): _*)) === print(full.select(cols.map(col): _*)), cols)
+    }
   }
 
   private def sig(n: Int, ch: Int = 0, e: String = "e") = {

@@ -72,26 +72,12 @@ class EnvelopesEdgeSpec extends SparkSpec {
 
   private def sine(i: Int): java.lang.Double = 1000.0 + 300.0 * math.sin(i / 20.0)
 
-  private def fin(x: Long): Long = {
-    var z = x
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
-  /** Order-insensitive fingerprint: per-row mix of the key, sample index
-    * and the three envelope columns' bits (null has its own sentinel),
-    * summed over rows.
+  /** Order-insensitive fingerprint of the key, sample index and the
+    * three envelope columns.
     */
   private def envHash(df: org.apache.spark.sql.DataFrame): Long =
-    df.select("experiment_id", "channel", "sample_idx",
-        "baseline", "ceiling", "diastolic").collect().map { r =>
-      def bits(i: Int) =
-        if (r.isNullAt(i)) 0x7ff8dead00000001L
-        else java.lang.Double.doubleToLongBits(r.getDouble(i))
-      Seq(r.getString(0).hashCode.toLong, r.getInt(1).toLong, r.getLong(2),
-        bits(3), bits(4), bits(5)).foldLeft(17L)((h, x) => fin(h + x))
-    }.sum
+    Fingerprints.print(df.select("experiment_id", "channel", "sample_idx",
+      "baseline", "ceiling", "diastolic"))._3
 
   private def nulls(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     Seq("baseline", "ceiling", "diastolic").map(c => df.filter(col(c).isNull).count())

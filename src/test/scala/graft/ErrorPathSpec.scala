@@ -53,6 +53,24 @@ class ErrorPathSpec extends SparkSpec {
     intercept[IllegalArgumentException] { new graft.functions.TopKByValue(0) }
   }
 
+  test("withSmooth alone fails on a gap or a duplicated sample_idx, naming the channel") {
+    import spark.implicits._
+    def sig(n: Int, ch: Int, e: String) =
+      (0 until n).map(i => SignalRow(e, ch, i.toLong, i / 100.0, math.sin(i / 9.0))).toDS().toDF()
+    val gap = sig(200, 2, "x").filter($"sample_idx" =!= 80L)
+    val dup = sig(200, 3, "y").union(sig(200, 3, "y").filter($"sample_idx" === 7L))
+    Seq(gap -> "channel (experiment_id=x, channel=2)",
+        dup -> "channel (experiment_id=y, channel=3)").foreach { case (in, named) =>
+      val e = intercept[Exception] {
+        graft.operators.Smoothing.withSmooth(in.union(sig(200, 0, "ok"))).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("dense 0-based sample_idx") && m.contains(named)),
+        msgs.mkString("\n"))
+    }
+  }
+
   test("RR histograms reject a bin width that is not a positive power of two at call time") {
     import spark.implicits._
     import graft.operators.BeatMetrics

@@ -27,14 +27,44 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"))
   }
 
-  test("q1: one window pass, native FIR, pad via a single narrow Generate") {
+  test("q1: one Exchange into the channel operator; no Window, Generate, collect_list") {
     val p = plan("q1_smooth")
-    // two Window nodes (per-channel count, FIR taps) sharing one
-    // channel-hash exchange
-    assert("\\bWindow\\b".r.findAllIn(p).size === 2)
-    assert(p.contains("graft_fir_dot"), "native FIR expression missing")
-    // the block-repeat pad is ONE explode, not a 3-way union
-    assert("Generate explode".r.findAllIn(p).size === 1)
+    // the block-repeat pad and the 51-tap FIR are one per-channel kernel
+    // over primitive arrays, not row-materializing window frames
+    assert("\\bExchange\\b".r.findAllIn(p).size === 1, p)
+    assert(!"\\bWindow\\b".r.findFirstIn(p).isDefined, p)
+    assert(!p.contains("Generate") && !p.contains("collect_list"), p)
+    assert(p.contains("Channel SmoothKernel"), s"channel operator missing:\n$p")
+  }
+
+  test("metrics -> summary: no Exchange between the metrics operator and its aggregate") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.{BeatMetrics, Envelopes, PeakDetect, Smoothing}
+    import graft.plans.ChannelPeaksExec
+    import spark.implicits._
+    val sig = (0 until 3).flatMap { ch =>
+      (0 until 800).map(i => SignalRow("e", ch, i.toLong, i / 100.0,
+        1000.0 + 300.0 * math.sin(i / (15.0 + ch))))
+    }.toDS().toDF()
+    val enriched = Envelopes.withEnvelopes(Smoothing.withSmooth(sig))
+    val df = BeatMetrics.summary(enriched,
+      BeatMetrics.metrics(enriched, PeakDetect.detectPeaks(enriched), markers = false))
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    // the nodes from the root down to the metrics operator
+    def path(p: SparkPlan): Option[List[SparkPlan]] =
+      if (p.isInstanceOf[ChannelPeaksExec]) Some(List(p))
+      else p.children.view.flatMap(path).headOption.map(p :: _)
+    val up = path(root).getOrElse(fail(s"metrics operator missing:\n$root")).reverse.tail
+    // partial then final aggregate by channel, with no Exchange below the final
+    val aggs = up.zipWithIndex.collect { case (_: BaseAggregateExec, i) => i }
+    assert(aggs.size >= 2, root.toString)
+    assert(!up.take(aggs(1)).exists(_.isInstanceOf[Exchange]), root.toString)
   }
 
   test("q16c: centroid side is broadcast, not shuffled") {
@@ -325,8 +355,7 @@ class PlanQualitySpec extends SparkSpec {
     assert("windowspecdefinition\\(experiment_id#\\d+, channel#\\d+, peak_idx#".r
       .findFirstIn(p6).isDefined, s"gate must be a window:\n$p6")
     assert(!p6.contains("BroadcastNestedLoopJoin"), s"q236 BNLJ:\n$p6")
-    // the offset fan-out rides the (small) beat table (the other
-    // Generate nodes belong to the spine's pad construction)
+    // the offset fan-out rides the (small) beat table
     assert("Generate explode".r.findAllIn(p6).nonEmpty,
       s"offset explode missing:\n$p6")
   }

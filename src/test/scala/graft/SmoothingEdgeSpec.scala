@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import graft.functions.SavitzkyGolay
 import graft.operators.Smoothing
 import Fingerprints.print
@@ -97,6 +98,27 @@ class SmoothingEdgeSpec extends SparkSpec {
       else if (frame.exists(_.isNaN)) assert(v.exists(_.isNaN), s"at $i")
       else assert(v.exists(x => !x.isNaN), s"at $i")
     }
+  }
+
+  test("rows with a null key keep their rows and get a null y_smooth") {
+    val in = sig(300, 1).withColumn("experiment_id", lit(null).cast("string"))
+      .union(sig(300, 2, "k").withColumn("channel", lit(null).cast("int")))
+      .union(sig(300, 3))
+    val out = smooth(in)
+    val keyless = out.filter($"experiment_id".isNull || $"channel".isNull)
+    assert(keyless.count() === 600)
+    assert(keyless.filter($"y_smooth".isNotNull).count() === 0)
+    assert(print(out.filter($"experiment_id".isNotNull && $"channel".isNotNull)) ===
+      print(smooth(sig(300, 3))))
+  }
+
+  test("a channel whose sample_idx is not dense and 0-based fails, naming the channel") {
+    val oneBased = sig(100, 4, "x").withColumn("sample_idx", $"sample_idx" + 1L)
+    val e = intercept[Exception](smooth(oneBased.union(sig(100, 5))).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("dense 0-based sample_idx") &&
+      m.contains("channel (experiment_id=x, channel=4)")), msgs.mkString("\n"))
   }
 
   private def sig(n: Int, ch: Int = 0, e: String = "e") = {
