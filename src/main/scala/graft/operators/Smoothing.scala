@@ -12,12 +12,13 @@ import graft.plans.{ChannelKernel, ChannelPlan, Rows}
   * padding (`/root/reference/peak_detection.py:172-197`, SURVEY §2.3).
   *
   * `withSmooth` is a per-sample kernel of the channel operator
-  * ([[graft.plans.ChannelPlan]]): it rides the channel hash partitioning,
-  * lays each channel out by `sample_idx`, and folds every output over
+  * ([[graft.plans.ChannelPlan]]): the operator plans the one channel-hash
+  * Exchange that Envelopes and peak detection then ride, lays each
+  * channel out by `sample_idx`, and the kernel folds every output over
   * primitive arrays with one [[FirDotExpr.dotChunkedAt]] — the fold the
   * envelope kernel, the streaming spine and the DuckDB oracle share.
-  * Smooth + envelopes plan one Exchange and no Window (pinned in
-  * EnvelopesEdgeSpec and PlanQualitySpec). No UDF, no RDD.
+  * Smooth + envelopes plan one Exchange and no Window or Generate
+  * (pinned in EnvelopesEdgeSpec and PlanQualitySpec). No UDF, no RDD.
   */
 object Smoothing {
 
@@ -40,7 +41,7 @@ object Smoothing {
     *
     * The padded series is concat(y[0:a], y, y[n−a:n]) with a = min(n, k),
     * k = window/2 — block repeat, NOT mirror, NOT edge-replicate
-    * (`/root/reference/peak_detection.py:188-189`). Sample i reads the
+    * (the reference's `peak_detection.py:188-189`). Sample i reads the
     * window taps of the padded series centred on its own copy, and has a
     * value only when they all exist:
     *  - n ≥ k (25 for the default window): every sample;

@@ -60,6 +60,9 @@ class PlanQualitySpec extends SparkSpec {
     def path(p: SparkPlan): Option[List[SparkPlan]] =
       if (p.isInstanceOf[ChannelPeaksExec]) Some(List(p))
       else p.children.view.flatMap(path).headOption.map(p :: _)
+    // the whole spine runs on channel operators: no window frames, no pad explode
+    assert(!"\\bWindow\\b".r.findFirstIn(root.toString).isDefined &&
+      !root.toString.contains("Generate"), root.toString)
     val up = path(root).getOrElse(fail(s"metrics operator missing:\n$root")).reverse.tail
     // partial then final aggregate by channel, with no Exchange below the final
     val aggs = up.zipWithIndex.collect { case (_: BaseAggregateExec, i) => i }
