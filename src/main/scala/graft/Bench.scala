@@ -124,16 +124,17 @@ object Bench {
           // NON-memoized query's steady pass re-reads parquet, so its
           // cold/steady delta is codegen/JIT, not a hidden data cache.
           // MEASUREMENT RULE (round-17 ADVICE, adjudicated): the
-          // GraftMemo families (lpMemo since round 9, and round 17's
-          // edgeMemo/spineMemo) intentionally SURVIVE this clear —
-          // their checkpoint blocks are memo-owned, keyed on (session,
-          // fingerprint), and a pure function of the committed inputs.
-          // For those ~70 graph/signal queries the chunk's FIRST
-          // consumer pays the shared derivation in its cold pass and
-          // every later pass measures memo-hit cost: totals stay
-          // honest (each chunk is a fresh session), but round-over-
-          // round PER-QUERY comparisons must compare like-for-like
-          // (memo-warm vs memo-warm) — see OPTIMIZATION_r17.md/§C8.
+          // operators.Memo families (spine, graph edges and LP, BPE,
+          // coreset, artifacts) intentionally SURVIVE this clear —
+          // their values are memo-owned, keyed on (session, params,
+          // input-table fingerprint), and a pure function of the
+          // committed inputs. For those graph/signal/text/similarity
+          // queries the chunk's FIRST consumer pays the shared
+          // derivation in its cold pass and every later pass measures
+          // memo-hit cost: totals stay honest (each chunk is a fresh
+          // session), but round-over-round PER-QUERY comparisons must
+          // compare like-for-like (memo-warm vs memo-warm) — see
+          // OPTIMIZATION_r17.md/§C8.
           spark.catalog.clearCache()
           // streaming fixtures leave JVM-GLOBAL state-store
           // providers loaded (HDFSBackedStateStoreProvider keeps its

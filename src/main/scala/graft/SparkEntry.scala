@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AsofJoin, BeatMetrics, Dedup, Envelopes, Graph,
-  Multimodal, PeakDetect, Pipeline, Relational, Similarity, Sketches,
+  Memo, Multimodal, PeakDetect, Pipeline, Relational, Similarity, Sketches,
   Smoothing, TextAnalysis}
 import graft.sources.SignalFixture
 
@@ -18,54 +18,41 @@ object SparkEntry {
 
   private def sig(s: SparkSession): DataFrame = SignalFixture.signal(s)
 
-  /** Process-level memo of the signal spine (round-17 optimization,
-    * the Graph.lpMemo / edgeMemo discipline): enriched + detected are
-    * pure functions of the committed fixture bits, every signal/beat
-    * query (q1–q10, q229–q276 — ~60 of the declared surface) rebuilds
-    * the identical lineage, and the old lazy `.cache()` had two
-    * measured costs: (a) multi-branch consumers (q8's spine + peaks cogroup,
-    * q240's four component joins) race the first materialization and
-    * recompute the spine per branch; (b) nothing survives the bench's
-    * between-query `clearCache()`, so all ~60 queries re-derived it.
-    * The memoized value is an EAGER localCheckpoint keyed on (session,
-    * stage, fixture fingerprint); the memo owns the blocks, LRU-evicts
-    * with explicit release, and a fingerprint failure bypasses to the
-    * old cached-plan path (never memoize under an error-derived key).
+  /** The spine memo (round-17 optimization): enriched + detected are
+    * pure functions of the committed fixture bits, and every
+    * signal/beat query (q1–q10, q229–q276 — ~60 of the declared
+    * surface) rebuilds the identical lineage. The old lazy `.cache()`
+    * had two measured costs: (a) multi-branch consumers (q8's spine +
+    * peaks cogroup, q240's four component joins) race the first
+    * materialization and recompute the spine per branch; (b) nothing
+    * survives the bench's between-query `clearCache()`, so all ~60
+    * queries re-derived it. The memoized value is an EAGER
+    * localCheckpoint keyed on (session, stage, fixture fingerprint),
+    * whose blocks the memo owns ([[graft.operators.Memo]]).
     */
-  private val spineMemo =
-    new graft.operators.GraftMemo[(String, String, Long), DataFrame](
-      cap = 4, release = graft.operators.CheckpointBlocks.release,
-      dead = df => df.sparkSession.sparkContext.isStopped)
+  private[graft] val spineMemo =
+    new Memo[DataFrame]("spine", cap = 4, Some(_))
 
-  /** Test hook: drop memoized spine tables, releasing their blocks. */
-  private[graft] def clearSpineMemo(): Unit = spineMemo.clear()
+  private def spine(s: SparkSession, stage: String)(compute: => DataFrame)
+      : DataFrame = {
+    SignalFixture.ensure(s) // a fixture is generated before it is fingerprinted
+    spineMemo.get(s, Memo.table(s, SignalFixture.signalPath), stage)(
+      compute.localCheckpoint())
+  }
 
   /** Smooth + envelopes + diastolic, the shared spine of q1..q9 (the
     * compute-once EnrichedFrame of SURVEY §3.3 — the reference
-    * recomputes this 4× per analysis, §4.1), memoized per session +
-    * fixture fingerprint (see [[spineMemo]]).
+    * recomputes this 4× per analysis, §4.1).
     */
   private def enriched(s: SparkSession): DataFrame =
-    graft.operators.MemoKey.fingerprint(s, SignalFixture.signalPath) match {
-      case None =>
-        Envelopes.withEnvelopes(Smoothing.withSmooth(sig(s))).cache()
-      case Some(fp) =>
-        spineMemo.get((graft.operators.MemoKey.session(s), "enriched", fp))(
-          Envelopes.withEnvelopes(Smoothing.withSmooth(sig(s)))
-            .localCheckpoint())
-    }
+    spine(s, "enriched")(Envelopes.withEnvelopes(Smoothing.withSmooth(sig(s))))
 
   /** Detected peaks off the memoized spine — the find_peaks kernel
     * runs once per channel, and q7b/q8/q8b/q9 + the q229–q276 family
-    * all consume the identical lineage (see [[spineMemo]]).
+    * all consume the identical lineage.
     */
   private def detected(s: SparkSession): DataFrame =
-    graft.operators.MemoKey.fingerprint(s, SignalFixture.signalPath) match {
-      case None => PeakDetect.detectPeaks(enriched(s)).toDF().cache()
-      case Some(fp) =>
-        spineMemo.get((graft.operators.MemoKey.session(s), "detected", fp))(
-          PeakDetect.detectPeaks(enriched(s)).toDF().localCheckpoint())
-    }
+    spine(s, "detected")(PeakDetect.detectPeaks(enriched(s)).toDF())
 
   /** Per-beat metrics off the full detection pipeline. Markers only
     * where consumed (q8b): the marker values come out of the same
@@ -86,19 +73,29 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * CONSUME-ONCE CONTRACT (round-17 ADVICE, documented at the
-    * boundary): several queries return DataFrames riding ADOPTED
-    * localCheckpoint blocks ([[graft.operators.CheckpointOrphans]]) —
-    * the blocks are released after the FIRST successful action over
-    * the returned plan. The driver, Bench and Verify all run exactly
-    * one action per returned frame (a noop write or one dump), which
-    * is the contract these entries are built for; a library caller
-    * needing multiple actions (e.g. count() then collect()) over one
-    * returned frame must `.persist()` or checkpoint its own copy
-    * first. Affected today: the hits/LSH/ANN/clustering families and
-    * every eager-checkpoint conversion listed in OPTIMIZATION_r17/18.
+    * boundary): several queries return DataFrames riding
+    * localCheckpoint blocks that are released behind the caller's back:
+    *  - ADOPTED per-query checkpoints
+    *    ([[graft.operators.CheckpointOrphans]]) are released after the
+    *    FIRST successful action over the returned plan (the
+    *    hits/LSH/ANN/clustering families and every eager-checkpoint
+    *    conversion listed in OPTIMIZATION_r17/18);
+    *  - MEMO-OWNED tables ([[graft.operators.Memo]]: the spine, the
+    *    graph edge and LP tables, the BPE segmentations) are released
+    *    when their family evicts them, after `cap` other keyed calls.
+    * The driver, Bench and Verify all run exactly one action per
+    * returned frame (a noop write or one dump), which is the contract
+    * these entries are built for; a library caller needing multiple
+    * actions (e.g. count() then collect()) over one returned frame
+    * must `.persist()` or checkpoint its own copy first.
+    *
+    * A memoized query whose input table cannot be listed fails with
+    * [[graft.operators.MemoTableUnreadable]] naming the memo family
+    * and the table; there is no uncached fallback path. The signal
+    * fixture is generated before it is fingerprinted.
     *
     * SCALE-SAFETY NOTE (round-17 verdict #6): the memo/checkpoint
-    * layer (spineMemo here, Graph.lpMemo/edgeMemo, the adopted
+    * layer (every Memo family holding a DataFrame, and the adopted
     * orphans) uses `localCheckpoint` — non-replicated, lineage-
     * truncated executor blocks. That is the right trade in this
     * harness (local[N]: the "executor" is the driver process, blocks
@@ -106,8 +103,8 @@ object SparkEntry {
     * executor loss would make a consume-once checkpoint unrecoverable
     * mid-query; a production deployment should flip these to
     * reliable `checkpoint()` (HDFS/object-store backed) or
-    * `persist(MEMORY_AND_DISK_2)` behind the same GraftMemo key
-    * discipline — a storage-level knob, not a plan-shape change.
+    * `persist(MEMORY_AND_DISK_2)` inside the same Memo families — a
+    * storage-level knob, not a plan-shape change.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_smooth" -> ((s, _) =>

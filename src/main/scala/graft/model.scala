@@ -41,19 +41,6 @@ final case class Peak(
     ttr_y: Option[Double]
 )
 
-/** Per-channel aggregate (reference:
-  * `/root/reference/peak_analysis.py:124-136`).
-  */
-final case class ChannelSummary(
-    experiment_id: String,
-    channel: Int,
-    n_peaks: Long,
-    avg_ttp: Option[Double],
-    avg_ttr: Option[Double],
-    avg_duration: Option[Double],
-    avg_force: Option[Double]
-)
-
 /** All tunables of the reference pipeline with its defaults
   * (`/root/reference/peak_detection.py:12-18`), plus `sampleRateHz`
   * replacing the hardcoded 100 Hz of

@@ -71,50 +71,27 @@ private[graft] object ArtifactStore {
     root(family, digest(parts: _*))
       .resolve(s"gen_${gen.incrementAndGet()}").toString
 
+  /** The write-once artifact family: path values, so eviction needs no
+    * release. The cap sits well above the 36 `materialized` call sites
+    * and the keys their shared helpers fan out into, so one session's
+    * artifacts over one corpus stay resident together; an evicted entry
+    * is rewritten into a fresh generation on its next call, and its old
+    * directory stays valid on disk.
+    */
+  private[graft] val artifacts = new Memo[String]("artifacts", cap = 256)
+
   /** Write-once materialization: runs `write(dir)` at most once per
-    * (session, family, params digest, fingerprint) and returns the
-    * directory; concurrent same-key callers block on the first
-    * writer's completion, and the write runs OUTSIDE any map lock
-    * (the in-flight-future split the round-12 ADVICE asked for on the
-    * memo family). A `None` fingerprint bypasses the memo — the
-    * artifact is written to a fresh per-invocation dir and not
-    * cached (never memoize under an error-derived key). A failed
-    * write removes the reservation so a later call can retry.
+    * (session, family, params, fingerprint of `table`) and returns the
+    * directory; concurrent same-key callers wait for the first
+    * writer, and the write runs OUTSIDE any map lock ([[Memo]]). A
+    * failed write memoizes nothing, so a later call retries into a
+    * fresh generation.
     */
-  private val matMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long),
-    java.util.concurrent.CompletableFuture[String]]()
-
-  def materialized(s: SparkSession, family: String, fp: Option[Long],
+  def materialized(s: SparkSession, family: String, table: MemoTable,
                    parts: String*)(write: String => Unit): String =
-    fp match {
-      case None =>
-        val d = invocationDir(family, parts: _*)
-        write(d)
-        d
-      case Some(f) =>
-        val key = (MemoKey.session(s), family, digest(parts: _*), f)
-        val fut = new java.util.concurrent.CompletableFuture[String]()
-        val prev = matMemo.putIfAbsent(key, fut)
-        if (prev != null) prev.join()
-        else {
-          try {
-            val d = invocationDir(family, (parts :+ f.toString): _*)
-            write(d)
-            fut.complete(d)
-            d
-          } catch {
-            case t: Throwable =>
-              matMemo.remove(key, fut)
-              fut.completeExceptionally(t)
-              throw t
-          }
-        }
+    artifacts.get(s, table, family +: parts: _*) {
+      val d = invocationDir(family, parts: _*)
+      write(d)
+      d
     }
-
-  /** Test hook: drop all write-once reservations (completed dirs stay
-    * on disk — immutability is the contract — but the next call
-    * re-materializes into a fresh generation).
-    */
-  private[graft] def clearMaterialized(): Unit = matMemo.clear()
 }

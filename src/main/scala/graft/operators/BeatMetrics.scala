@@ -1174,39 +1174,36 @@ object BeatMetrics {
         .as("hti"): _*)
   }
 
-  /** Shared DFT band-power core over [[rrIntervals]] rows that also
-    * carry the grouping columns `g`; each group is an independent
-    * demeaned beat-indexed series, ordered by `peak_idx`, projected
-    * onto its in-band Fourier bins. [[bandPower]] groups per channel;
-    * [[windowedBandPower]] per (channel, tumbling window).
+  /** The DFT projection shared by q238/q244/q266 over [[rrIntervals]]
+    * rows that also carry the grouping columns `g`: each group is an
+    * independent demeaned beat-indexed series, ordered by `peak_idx`,
+    * projected onto the Fourier bins j ∈ [1, ⌊n/2⌋], at frequency
+    * f = j·rate/s1, that `keep` retains (it may add columns, which
+    * group with j). Returns the per-group (g, n, s1) table and one row
+    * per kept bin with `p`, its decimal-quantized one-sided power.
     */
-  private def bandPowerCore(rrRows: DataFrame, g: Seq[String],
-                            sampleRateHz: Double, lfLo: Double,
-                            lfHi: Double, hfHi: Double): DataFrame = {
+  private def binPowers(rrRows: DataFrame, g: Seq[String],
+                        sampleRateHz: Double)(keep: DataFrame => DataFrame)
+      : (DataFrame, DataFrame) = {
     val gk = g.map(col)
     val w = Window.partitionBy(gk: _*).orderBy(col("peak_idx"))
     val rr = rrRows.withColumn("k", row_number().over(w) - lit(1))
     val ch = rr.groupBy(gk: _*)
       .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"))
     val rate = lit(sampleRateHz)
-    val fj = col("j").cast("double") * rate / col("s1").cast("double")
-    val bins = ch.filter(col("n") >= 2L)
+    val bins = keep(ch.filter(col("n") >= 2L)
       .select(gk :+ col("n") :+ col("s1") :+
         explode(sequence(lit(1L),
           floor(col("n") / lit(2L)).cast("long"))).as("j"): _*)
-      .withColumn("f", fj)
-      .filter(col("f") >= lit(lfLo) && col("f") < lit(hfHi))
-      .withColumn("band", when(col("f") < lit(lfHi), lit("lf"))
-        .otherwise(lit("hf")))
-    val joined = rr.join(
-      bins.select(gk :+ col("j") :+ col("band") :+
-        col("n") :+ col("s1"): _*), g)
+      .withColumn("f",
+        col("j").cast("double") * rate / col("s1").cast("double")))
     val xv = (col("d").cast("double") -
       col("s1").cast("double") / col("n").cast("double")) / rate
     val theta = lit(2.0 * math.Pi) * col("j").cast("double") *
       col("k").cast("double") / col("n").cast("double")
-    val perBin = joined
-      .groupBy(gk :+ col("j") :+ col("band") :+ col("n"): _*)
+    val binCols = bins.columns.toSeq.map(col)
+    val perBin = rr.join(bins, g)
+      .groupBy(binCols: _*)
       .agg(sum((xv * cos(theta)).cast("decimal(28,14)")).as("a"),
         sum((xv * sin(theta)).cast("decimal(28,14)")).as("b"))
     // One-sided factor: 2 for interior bins, 1 for the self-conjugate
@@ -1221,7 +1218,22 @@ object BeatMetrics {
         col("b").cast("double") * col("b").cast("double")) /
       (col("n").cast("double") * col("n").cast("double")))
       .cast("decimal(28,14)")
-    val bandAgg = perBin.select(gk :+ col("band") :+ pnorm.as("p"): _*)
+    (ch, perBin.select(binCols :+ pnorm.as("p"): _*))
+  }
+
+  /** Band powers over [[binPowers]]: [[bandPower]] groups per channel;
+    * [[windowedBandPower]] per (channel, tumbling window).
+    */
+  private def bandPowerCore(rrRows: DataFrame, g: Seq[String],
+                            sampleRateHz: Double, lfLo: Double,
+                            lfHi: Double, hfHi: Double): DataFrame = {
+    val gk = g.map(col)
+    val rate = lit(sampleRateHz)
+    val (ch, perBin) = binPowers(rrRows, g, sampleRateHz)(
+      _.filter(col("f") >= lit(lfLo) && col("f") < lit(hfHi))
+        .withColumn("band", when(col("f") < lit(lfHi), lit("lf"))
+          .otherwise(lit("hf"))))
+    val bandAgg = perBin
       .groupBy(gk: _*)
       .agg(sum(when(col("band") === "lf", lit(1L)).otherwise(lit(0L)))
         .as("n_lf_bins"),
@@ -2251,46 +2263,20 @@ object BeatMetrics {
     */
   def spectralEdge(peaks: DataFrame, sampleRateHz: Double = 100.0,
                    edgeFrac: Double = 0.95): DataFrame = {
-    val rr = rrIntervals(peaks).withColumn("k", row_number().over(byPeak) - lit(1))
-    val ch = rr.groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("d")).as("s1"))
-    val rate = lit(sampleRateHz)
-    val bins = ch.filter(col("n") >= 2L)
-      .select(keys :+ col("n") :+ col("s1") :+
-        explode(sequence(lit(1L),
-          floor(col("n") / lit(2L)).cast("long"))).as("j"): _*)
-    val joined = rr.join(
-      bins.select(keys :+ col("j") :+ col("n") :+ col("s1"): _*), keyCols)
-    val xv = (col("d").cast("double") -
-      col("s1").cast("double") / col("n").cast("double")) / rate
-    val theta = lit(2.0 * math.Pi) * col("j").cast("double") *
-      col("k").cast("double") / col("n").cast("double")
-    val perBin = joined
-      .groupBy(keys :+ col("j") :+ col("n") :+ col("s1"): _*)
-      .agg(sum((xv * cos(theta)).cast("decimal(28,14)")).as("a"),
-        sum((xv * sin(theta)).cast("decimal(28,14)")).as("b"))
-    val oneSided = when(col("j") * lit(2L) === col("n"), lit(1.0))
-      .otherwise(lit(2.0))
-    val pnorm = (oneSided *
-      (col("a").cast("double") * col("a").cast("double") +
-        col("b").cast("double") * col("b").cast("double")) /
-      (col("n").cast("double") * col("n").cast("double")))
-      .cast("decimal(28,14)")
+    val (_, perBin) =
+      binPowers(rrIntervals(peaks), keyCols, sampleRateHz)(identity)
     val wj = Window.partitionBy(keys: _*).orderBy(col("j"))
     val wAll = Window.partitionBy(keys: _*)
     val withCum = perBin
-      .select(keys :+ col("j") :+ col("n") :+ col("s1") :+
-        pnorm.as("p"): _*)
       .withColumn("cum", sum(col("p")).over(wj))
       .withColumn("tot", sum(col("p")).over(wAll))
-    val f = col("j").cast("double") * rate / col("s1").cast("double")
     val cumD = col("cum").cast("double")
     val totD = col("tot").cast("double")
     withCum.groupBy(keys: _*)
       .agg(max(col("n")).as("n_rr"),
         max(col("tot")).cast("double").as("total_power_s2"),
-        min(when(cumD >= lit(0.5) * totD, f)).as("median_freq_hz"),
-        min(when(cumD >= lit(edgeFrac) * totD, f)).as("sef_hz"))
+        min(when(cumD >= lit(0.5) * totD, col("f"))).as("median_freq_hz"),
+        min(when(cumD >= lit(edgeFrac) * totD, col("f"))).as("sef_hz"))
   }
 
   /** Q267 — TINN (triangular interpolation of the NN histogram):

@@ -827,7 +827,8 @@ object Dedup {
     // cannot mask it (the round-12 distinct-tag rule targets the
     // tested artifact, not shared day-1 fixture state).
     val base = ArtifactStore.materialized(s, "lsh_sig_index",
-      docsFingerprint(s, dir), dir, modN.toString, nShards.toString)(out =>
+      Memo.table(s, s"$dir/documents.parquet"),
+      dir, modN.toString, nShards.toString)(out =>
       writeLshSigIndex(
         minhashSignatures(s, docs(s, dir).filter(!isInc)), out, nShards))
     val pre = sigShardCounts(s, Seq(base), "n_existing")
@@ -855,15 +856,15 @@ object Dedup {
       : (Seq[String], String) = {
     val isInc = memberDoc("inc:", modN)
     val half = memberDoc("sig2:", 2)
-    val fp = docsFingerprint(s, dir)
+    val docsT = Memo.table(s, s"$dir/documents.parquet")
     val params = Seq(minJaccard.toString, modN.toString, nShards.toString)
     def gen(tag: String, slice: DataFrame): String =
-      ArtifactStore.materialized(s, s"$fam$tag", fp,
+      ArtifactStore.materialized(s, s"$fam$tag", docsT,
         (dir +: params): _*)(out =>
         writeLshSigIndex(minhashSignatures(s, slice), out, nShards))
     val base = gen("base", docs(s, dir).filter(!isInc && half))
     val delta = gen("delta", docs(s, dir).filter(!isInc && !half))
-    val labDir = ArtifactStore.materialized(s, s"${fam}labels", fp,
+    val labDir = ArtifactStore.materialized(s, s"${fam}labels", docsT,
       (dir +: params): _*)(out =>
       writeCcLabels(
         day1LabelsOf(readLshSigIndexDirs(s, Seq(base, delta)), minJaccard),
@@ -939,7 +940,8 @@ object Dedup {
                   nShards: Int = 8): DataFrame = {
     val isPurged = memberDoc("purge:", modN)
     val base = ArtifactStore.materialized(s, "lsh_sig_allbase",
-      docsFingerprint(s, dir), dir, modN.toString, nShards.toString)(out =>
+      Memo.table(s, s"$dir/documents.parquet"),
+      dir, modN.toString, nShards.toString)(out =>
       writeLshSigIndex(minhashSignatures(s, docs(s, dir)), out, nShards))
     val purgedIds = docs(s, dir).filter(isPurged).select(col("doc_id"))
     val after = ArtifactStore.invocationDir("lsh_sig_purged",
@@ -1095,7 +1097,7 @@ object Dedup {
       out
     }
     val labDir = ArtifactStore.materialized(s, "lsh_sig_soaklabels",
-      docsFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/documents.parquet"), (dir +: params): _*)(out =>
       writeCcLabels(
         day1LabelsOf(minhashSignatures(s, existing), minJaccard),
         out, nShards))
@@ -1135,7 +1137,8 @@ object Dedup {
       : (DataFrame, String) = {
     val isInc = memberDoc("inc:", modN)
     val base = ArtifactStore.materialized(s, "lsh_sig_streambase",
-      docsFingerprint(s, dir), dir, modN.toString, nShards.toString)(out =>
+      Memo.table(s, s"$dir/documents.parquet"),
+      dir, modN.toString, nShards.toString)(out =>
       writeLshSigIndex(
         minhashSignatures(s, docs(s, dir).filter(!isInc)), out, nShards))
     (docs(s, dir).filter(isInc), base)
@@ -1221,12 +1224,12 @@ object Dedup {
                           minJaccard: Double = 0.5, modN: Int = 5,
                           nShards: Int = 8): DataFrame = {
     val isInc = memberDoc("inc:", modN)
-    val fp = docsFingerprint(s, dir)
-    val sigDir = ArtifactStore.materialized(s, "lsh_sig_index", fp,
+    val docsT = Memo.table(s, s"$dir/documents.parquet")
+    val sigDir = ArtifactStore.materialized(s, "lsh_sig_index", docsT,
       dir, modN.toString, nShards.toString)(out =>
       writeLshSigIndex(
         minhashSignatures(s, docs(s, dir).filter(!isInc)), out, nShards))
-    val labDir = ArtifactStore.materialized(s, "cc_labels_day1", fp,
+    val labDir = ArtifactStore.materialized(s, "cc_labels_day1", docsT,
       dir, minJaccard.toString, modN.toString, nShards.toString)(out =>
       writeCcLabels(day1LabelsOf(readLshSigIndex(s, sigDir), minJaccard),
         out, nShards))
@@ -1761,11 +1764,8 @@ object Dedup {
     * Naming note: every span-index family name starts with
     * "span_index", so artifact paths carry the "graft_span_index"
     * marker the q285 plan pin greps for.
-    */
-  private def docsFingerprint(s: SparkSession, dir: String): Option[Long] =
-    MemoKey.fingerprint(s, s"$dir/documents.parquet")
-
-  /** Write-once day-1 ("base") index materialization: the fixture
+    *
+    * Write-once day-1 ("base") index materialization: the fixture
     * state a refresh/scrub consumes, built AT MOST ONCE per (session,
     * corpus fingerprint, params) so the measured operator pays only
     * its own O(novel) work on warm invocations (round-12 verdict #5 —
@@ -1779,7 +1779,8 @@ object Dedup {
   private def baseIndexDir(s: SparkSession, dir: String, family: String,
                            w: Int, modN: Int, nShards: Int)
                           (index: => DataFrame): String =
-    ArtifactStore.materialized(s, family, docsFingerprint(s, dir),
+    ArtifactStore.materialized(s, family,
+      Memo.table(s, s"$dir/documents.parquet"),
       dir, w.toString, modN.toString, nShards.toString)(
       out => writeSpanIndex(index, out, nShards))
 
@@ -1925,7 +1926,7 @@ object Dedup {
     val base = baseIndexDir(s, dir, s"${fam}base", w, modN, nShards)(
       spanOccurrences(existing, w).select(col("h")).distinct())
     val delta = ArtifactStore.materialized(s, s"${fam}delta",
-      docsFingerprint(s, dir),
+      Memo.table(s, s"$dir/documents.parquet"),
       dir, w.toString, modN.toString, nShards.toString)(out =>
       writeSpanDelta(
         spanOccurrences(day1, w).select(col("h")).distinct()

@@ -269,50 +269,26 @@ object Graph {
       .filter(col("sup") >= minSupport)
       .select(col("a"), col("b"))
 
-  /** Process-level memo of the support-floored co-purchase edge table
-    * (the lpMemo discipline, extended round 17): every graph query
-    * over this graph — q113/q126/q130/q143/q159/q163/q179/q217/q223/
-    * q226 — derives the identical (a, b) edge set, and before this
-    * round each re-derived it independently; worse, a consumer fanning
-    * the derivation into several concurrent branches of ONE plan
-    * (q217's degree + orientation + marginals) raced the lazy
-    * `.cache()` materialization and paid the derivation up to 4× in
-    * one query (measured: q217 16–24 s task CPU for ~3 s of actual
+  /** The edge memo (the lpMemo discipline, extended round 17): every
+    * graph query over this graph — q113/q126/q130/q143/q159/q163/
+    * q179/q217/q223/q226 — derives the identical (a, b) edge set, and
+    * before this round each re-derived it independently; worse, a
+    * consumer fanning the derivation into several concurrent branches
+    * of ONE plan (q217's degree + orientation + marginals) raced the
+    * lazy `.cache()` materialization and paid the derivation up to 4×
+    * in one query (measured: q217 16–24 s task CPU for ~3 s of actual
     * work). The memoized value is an EAGER localCheckpoint of the
     * ~|E|-row support-floored table: materialized exactly once,
     * lineage-truncated, block-manager-resident, and a pure function of
-    * its (session, dir, minSupport, fingerprint) key. Same ownership
-    * contract as lpMemo: the memo owns the blocks, LRU-evicts with
-    * explicit release, purges dead-context entries on access; a
-    * fingerprint failure BYPASSES the memo with the raw plan (never
-    * memoize under an error-derived key — round-11 ADVICE).
+    * its (session, dir, minSupport, fingerprint) key.
     */
-  private val edgeMemo =
-    new GraftMemo[(String, String, Int, Long), DataFrame](
-      cap = 8, release = CheckpointBlocks.release,
-      dead = df => df.sparkSession.sparkContext.isStopped)
-
-  /** Test hook: drop memoized co-purchase edge tables, releasing
-    * their checkpoint blocks. */
-  private[graft] def clearEdgeMemo(): Unit = edgeMemo.clear()
+  private[graft] val edgeMemo =
+    new Memo[DataFrame]("graph_edges", cap = 8, Some(_))
 
   private def copurchaseEdges(s: SparkSession, dir: String,
                               minSupport: Int): DataFrame =
-    dataFingerprint(s, dir) match {
-      case None =>
-        // fingerprint unavailable: compute WITHOUT memoizing (never
-        // memoize under an error-derived key — round-11 ADVICE), but
-        // still checkpoint ONCE and adopt the ownerless blocks
-        // (round-17 ADVICE): the consumers' .cache() calls were
-        // removed when the memo landed, so a raw plan here would
-        // re-derive the edge table per concurrent branch — the exact
-        // 4× race the memo fixed, reintroduced on the error path.
-        CheckpointOrphans.adopt(
-          copurchaseEdgesRaw(s, dir, minSupport).localCheckpoint())
-      case Some(fp) =>
-        edgeMemo.get((MemoKey.session(s), dir, minSupport, fp))(
-          copurchaseEdgesRaw(s, dir, minSupport).localCheckpoint())
-    }
+    edgeMemo.get(s, Memo.table(s, s"$dir/lineitem.parquet"), dir, minSupport)(
+      copurchaseEdgesRaw(s, dir, minSupport).localCheckpoint())
 
   /** Q126 — label-propagation communities (Raghavan et al., 2007) on
     * the support-floored co-purchase graph, made DETERMINISTIC: fully
@@ -334,82 +310,28 @@ object Graph {
                     minSupport: Int = 2): DataFrame =
     lpLabels(s, dir, iters, minSupport)
 
-  /** Process-level memo of the LP fixpoint, keyed on (session, dir,
-    * iters, minSupport): Q126 and Q223 both need the identical label
-    * table, and before round 9 each derived it independently — the
-    * bench paid the 2-iteration fixpoint twice per run (round-8
-    * verdict, next-round #3). The memoized value is a
-    * localCheckpoint'd ~|V|-row table: lineage-truncated (so reuse
-    * carries no re-optimization cost), block-manager-resident (so
-    * `clearCache()` between bench queries doesn't evict it), and a
-    * pure function of its key (sync LP with mode/min-label
-    * tie-breaks is deterministic), so a memo hit is bitwise the same
-    * table a recompute would build.
+  /** The LP memo, keyed on (session, dir, iters, minSupport,
+    * fingerprint): Q126 and Q223 both need the identical label table,
+    * and before round 9 each derived it independently — the bench paid
+    * the 2-iteration fixpoint twice per run (round-8 verdict,
+    * next-round #3). The memoized value is a localCheckpoint'd
+    * ~|V|-row table: lineage-truncated (so reuse carries no
+    * re-optimization cost), block-manager-resident (so `clearCache()`
+    * between bench queries doesn't evict it), and a pure function of
+    * its key (sync LP with mode/min-label tie-breaks is deterministic),
+    * so a memo hit is bitwise the same table a recompute would build.
     */
-  private val lpMemo =
-    // GraftMemo since round 13 (round-12 ADVICE): values compute
-    // OUTSIDE the map lock, so one session's LP fixpoint no longer
-    // serializes unrelated keyed calls; LRU eviction still releases
-    // checkpoint blocks, dead-context entries purge on access. Keyed
-    // by the session's UUID STRING (MemoKey.session, round-11
-    // ADVICE) — a SparkSession reference in the key pinned stopped
-    // sessions from GC.
-    new GraftMemo[(String, String, Int, Int, Long), DataFrame](
-      cap = 8, release = CheckpointBlocks.release,
-      dead = df => df.sparkSession.sparkContext.isStopped)
-
-  /** Fingerprint of the lineitem parquet under `dir` from filesystem
-    * METADATA only (file names, lengths, mtimes — no scan): part of the
-    * memo key, so rewriting the data in-place within one session misses
-    * the memo instead of silently serving labels computed from the old
-    * files (round-9 ADVICE). A metadata failure returns None and the
-    * caller BYPASSES the memo — computing without caching — rather
-    * than memoizing under an error-derived key (round-11 ADVICE: two
-    * same-class failures straddling a rewrite collide).
-    */
-  private def dataFingerprint(s: SparkSession, dir: String): Option[Long] =
-    MemoKey.fingerprint(s, s"$dir/lineitem.parquet")
-
-  /** Test hook: drop memoized LP labels (e.g. to exercise both the
-    * miss and hit paths in one suite), releasing their checkpoint
-    * blocks on the way out. */
-  private[graft] def clearLpMemo(): Unit = lpMemo.clear()
-
-  /** The one LP compute path behind both lpLabels branches (memo miss
-    * and fingerprint-bypass): derive the co-purchase edges, run the
-    * byte-gated fixpoint, release the derivation cache once the
-    * result is checkpointed. */
-  private def runLp(s: SparkSession, dir: String, iters: Int,
-                    minSupport: Int): DataFrame = {
-    // edges ride the edgeMemo checkpoint (or the raw bypass plan) —
-    // no consumer-side cache needed; the memo owns the blocks
-    lpFrom(copurchaseEdges(s, dir, minSupport), iters,
-      tableBytes(s, dir, "lineitem") > PrePartitionEdgeBytes)
-  }
+  private[graft] val lpMemo =
+    new Memo[DataFrame]("graph_lp", cap = 8, Some(_))
 
   private def lpLabels(s: SparkSession, dir: String, iters: Int,
-                       minSupport: Int): DataFrame = dataFingerprint(s, dir) match {
-    case None =>
-      // fingerprint unavailable: compute WITHOUT caching (see
-      // dataFingerprint's scaladoc — never memoize under an
-      // error-derived key). The bypassed result's checkpoint blocks
-      // have no memo owner, so they are ADOPTED: released as soon as
-      // the first query materializing them completes (round-12
-      // ADVICE — they used to leak until session end).
-      CheckpointOrphans.adopt(runLp(s, dir, iters, minSupport))
-    case Some(fp) =>
-      // Bound the memo (checkpointed blocks are never GC'd while
-      // mapped): GraftMemo LRU-evicts ONE entry and unpersists its
-      // checkpoint blocks explicitly; dead-context entries purge on
-      // access (round-10/11 ADVICE history in GraftMemo's scaladoc).
-      // Ownership contract: the memo owns the checkpoint blocks; a
-      // label table is consumed within the query that requested it.
-      // A caller holding the DataFrame unexecuted across 8+ other
-      // keyed calls would find its lineage-truncated blocks released
-      // — such a caller must checkpoint its own copy.
-      lpMemo.get((MemoKey.session(s), dir, iters, minSupport, fp))(
-        runLp(s, dir, iters, minSupport))
-  }
+                       minSupport: Int): DataFrame =
+    lpMemo.get(s, Memo.table(s, s"$dir/lineitem.parquet"), dir, iters,
+        minSupport) {
+      // edges ride the edge memo's checkpoint — no consumer-side cache
+      lpFrom(copurchaseEdges(s, dir, minSupport), iters,
+        tableBytes(s, dir, "lineitem") > PrePartitionEdgeBytes)
+    }
 
   /** The synchronous LP loop over a canonical (a < b) edge set —
     * shared by Q126 and Q223 (which reuses the caller's cached edges

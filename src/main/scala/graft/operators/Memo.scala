@@ -1,13 +1,132 @@
 package graft.operators
 
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared cross-query memo (Graph.lpMemo, TextAnalysis.bpeMemo /
-  * frozenMemo, Similarity.coresetMemo): an access-ordered LRU map
-  * whose VALUES are computed OUTSIDE the map lock — the round-12
-  * ADVICE fix for the old pattern, which ran a full multi-job
-  * training loop inside one global `synchronized` block and
-  * serialized unrelated concurrent queries and sessions behind it.
+/** The one way an intermediate is shared across queries. Every
+  * cross-query memo is a `Memo` family that declares its name, its cap
+  * and, per call, its key parts and the table its compute reads:
+  *
+  * {{{
+  * family       owner          cap  key parts               table
+  * spine        SparkEntry       4  "enriched"|"detected"   fixtures/signal
+  * graph_edges  Graph            8  dir, minSupport         lineitem.parquet
+  * graph_lp     Graph            8  dir, iters, minSupport  lineitem.parquet
+  * bpe          TextAnalysis     6  dir, merges, shard      documents.parquet
+  * bpe_frozen   TextAnalysis     8  dir, merges, modN       documents.parquet
+  * coreset      Similarity       8  dir, variant            embeddings.parquet
+  * artifacts    ArtifactStore  256  family, params          documents.parquet
+  *                                                          or embeddings.parquet
+  * }}}
+  *
+  * [[get]] builds the key (session UUID, family, parts, table path,
+  * table fingerprint), computes a miss outside any map lock
+  * ([[GraftMemo]]) and, for a family whose values hold a checkpointed
+  * DataFrame (`frame`), owns that frame's blocks: they are released on
+  * eviction and on [[clear]], and an entry whose SparkContext stopped
+  * is purged on access.
+  *
+  * Failure rule: when the table's listing fails, [[get]] throws
+  * [[MemoTableUnreadable]] naming the family and the table, and
+  * memoizes nothing, so the next call lists the table again. There is
+  * no uncached fallback: the fingerprinted table is the table the
+  * compute scans, and `spark.read.parquet` lists the same directory,
+  * so a listing that fails here would fail the compute's scan as well;
+  * the error only comes earlier and names the family.
+  *
+  * Ownership contract: a DataFrame value is consumed within the query
+  * that requested it. A caller holding one unexecuted across `cap`
+  * other keyed calls of the family may find its blocks released; such
+  * a caller must checkpoint its own copy.
+  */
+private[graft] final class Memo[V](family: String, cap: Int,
+                                   frame: V => Option[DataFrame] = (_: V) => None) {
+
+  private val cells = new GraftMemo[(String, String, Seq[Any], String, Long), V](
+    cap,
+    release = v => frame(v).foreach(CheckpointBlocks.release),
+    dead = v => frame(v).exists(_.sparkSession.sparkContext.isStopped))
+
+  def get(s: SparkSession, table: MemoTable, parts: Any*)(compute: => V): V =
+    table.fingerprint match {
+      case Failure(e) => throw new MemoTableUnreadable(family, table.path, e)
+      case Success(fp) =>
+        cells.get((MemoKey.session(s), family, parts, table.path, fp))(compute)
+    }
+
+  /** Test hook: drop every entry, releasing the blocks of frame values. */
+  private[graft] def clear(): Unit = cells.clear()
+}
+
+private[graft] object Memo {
+
+  /** Fingerprints `path` now. Memo calls that must agree on one version
+    * of the table share the returned value: a rewrite between two calls
+    * of one query then cannot key a result derived from the first
+    * call's value under the second version's fingerprint.
+    */
+  def table(s: SparkSession, path: String): MemoTable =
+    MemoTable(path, Try(MemoKey.fingerprint(s, path)))
+}
+
+/** A table a memoized compute reads, with the outcome of its listing. */
+private[graft] final case class MemoTable(path: String, fingerprint: Try[Long])
+
+/** A memo family could not fingerprint the table its compute reads. */
+private[graft] final class MemoTableUnreadable(family: String, path: String,
+                                               cause: Throwable)
+  extends IllegalStateException(
+    s"memo '$family' cannot fingerprint its input table $path " +
+      s"(${cause.getClass.getSimpleName}: ${cause.getMessage}); " +
+      "nothing was memoized, the next call lists the table again", cause)
+
+/** Memo-key plumbing (two round-11 ADVICE items live here):
+  *
+  *  - keys carry the session's UUID STRING, not the `SparkSession`
+  *    reference — a reference key pins a stopped session (and, for
+  *    DataFrame-valued memos, its checkpointed blocks' owner) from GC
+  *    until LRU eviction happens to reach it;
+  *  - the fingerprint is read from the listing or not at all: a failed
+  *    listing throws, and [[Memo.get]] turns it into
+  *    [[MemoTableUnreadable]] instead of memoizing under an
+  *    error-derived key (two failures straddling an in-place rewrite
+  *    would share one key and serve stale results).
+  */
+private[graft] object MemoKey {
+
+  /** Stable string identity for a session. `sessionUUID` is on the
+    * classic implementation, not the `sql-api` abstract class every
+    * operator signature uses; any other implementation falls back to
+    * applicationId + reference identity (still never pins the
+    * session: the key holds no reference).
+    */
+  def session(s: SparkSession): String =
+    try org.apache.spark.sql.graftshim.ColumnBridge.sessionUUID(s)
+    catch {
+      case _: ClassCastException =>
+        s"${s.sparkContext.applicationId}#${System.identityHashCode(s)}"
+    }
+
+  /** Parquet-directory fingerprint from filesystem METADATA only
+    * (names, lengths, mtimes — no scan): part of every memo key, so
+    * an in-place data rewrite within one session misses the memo
+    * instead of serving results computed from the old files. Throws
+    * what the listing throws.
+    */
+  def fingerprint(s: SparkSession, table: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).map(st =>
+      (st.getPath.getName, st.getLen, st.getModificationTime).hashCode.toLong)
+      .sorted.foldLeft(17L)((a, h) => a * 31 + h)
+  }
+}
+
+/** The LRU mechanics behind [[Memo]]: an access-ordered map whose
+  * VALUES are computed OUTSIDE the map lock — the round-12 ADVICE fix
+  * for the old pattern, which ran a full multi-job training loop inside
+  * one global `synchronized` block and serialized unrelated concurrent
+  * queries and sessions behind it.
   *
   * Mechanics: the map holds lazily-evaluated cells; `get` reserves a
   * cell under the lock (evicting the LRU entry when at capacity) and
@@ -18,9 +137,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * next access — a transient failure never poisons the key.
   *
   * Eviction discipline (the round-9/10 adjudicated contract,
-  * unchanged): evict ONE LRU entry, releasing its checkpoint blocks
-  * via `release`; entries whose value reports `dead` (owning context
-  * stopped — blocks died with it) are purged on every access. Only
+  * unchanged): evict ONE LRU entry, releasing it via `release`;
+  * entries whose value reports `dead` are purged on every access. Only
   * COMPLETED entries are eviction candidates: evicting an in-flight
   * cell would orphan its result's blocks and let a same-key racer
   * start a duplicate compute — instead the map briefly exceeds `cap`
@@ -35,8 +153,8 @@ private[graft] final class GraftMemo[K, V](cap: Int,
     lazy val value: V = { val v = f(); done = true; v }
   }
 
-  private val m =
-    new java.util.LinkedHashMap[K, Cell](math.max(cap, 4), 0.75f, true)
+  // the map grows on demand: `cap` bounds it, it does not size it
+  private val m = new java.util.LinkedHashMap[K, Cell](16, 0.75f, true)
 
   private def releaseQuiet(c: Cell): Unit =
     if (c.done) { try release(c.value) catch { case _: Throwable => () } }
@@ -90,10 +208,10 @@ private[graft] final class GraftMemo[K, V](cap: Int,
 /** Releases the block-manager residue behind a localCheckpoint'd
   * DataFrame: it is a LogicalRDD over a persisted RDD, and dropping the
   * DataFrame reference alone leaves the checkpoint blocks to eventual
-  * GC + ContextCleaner (round-10 ADVICE). The memos pass it as their
-  * eviction `release`; the BPE and HITS loops call it on each
-  * superseded round. Best effort: a release failure degrades to the
-  * old GC path, never to an error on the query path.
+  * GC + ContextCleaner (round-10 ADVICE). [[Memo]] calls it on eviction;
+  * the BPE and HITS loops call it on each superseded round. Best effort:
+  * a release failure degrades to the old GC path, never to an error on
+  * the query path.
   */
 private[graft] object CheckpointBlocks {
   def release(df: DataFrame): Unit =
@@ -104,24 +222,21 @@ private[graft] object CheckpointBlocks {
     } catch { case _: Throwable => () }
 }
 
-/** Release-after-first-materialization for FINGERPRINT-BYPASS results
-  * (round-12 ADVICE): when a corpus fingerprint is unavailable, the
-  * memos compute without caching — but the computed result is a
-  * localCheckpoint'd DataFrame whose blocks the memo would normally
-  * own and release on eviction. A bypassed result had NO owner, so
-  * its checkpoint blocks leaked until session end.
+/** Release-after-first-materialization for a per-query checkpoint
+  * (round-12 ADVICE): a query that checkpoints an intermediate of its
+  * own (`adopt(x.localCheckpoint())`) hands out a DataFrame whose blocks
+  * no [[Memo]] owns, and they used to leak until session end.
   *
   * [[adopt]] records the result's checkpoint RDDs and registers (once
   * per session) a QueryExecutionListener that unpersists them as soon
   * as a query materializing the plan completes SUCCESSFULLY — the
-  * "consumed within the requesting query" ownership contract the
-  * memos already document, applied to the ownerless path. A failed
-  * action keeps the blocks so a retry of the same plan still works;
-  * a bypass caller that needs MULTIPLE successful actions over one
-  * result must checkpoint its own copy (same contract as holding a
-  * memo value across evictions). Best-effort throughout: a sweep
-  * failure degrades to the old leak-until-session-end, never to an
-  * error on the query path.
+  * "consumed within the requesting query" ownership contract of the
+  * memos, applied to the ownerless path. A failed action keeps the
+  * blocks so a retry of the same plan still works; a caller that needs
+  * MULTIPLE successful actions over one result must checkpoint its own
+  * copy (same contract as holding a memo value across evictions).
+  * Best-effort throughout: a sweep failure degrades to the old
+  * leak-until-session-end, never to an error on the query path.
   */
 private[graft] object CheckpointOrphans {
 

@@ -549,8 +549,8 @@ object Similarity {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("de"))
     val art = ArtifactStore.materialized(s, "ivf_centroids",
-      embFingerprint(s, dir), dir, nCentroids.toString)(out =>
-      writeIvfCentroids(e.filter(col("vec_id") < nCentroids)
+      Memo.table(s, s"$dir/embeddings.parquet"), dir, nCentroids.toString)(
+      out => writeIvfCentroids(e.filter(col("vec_id") < nCentroids)
         .select(col("vec_id").as("cid"), col("de").as("ce")), out))
     ivfSearch(e, readIvfCentroids(s, art), nProbe, k)
   }
@@ -651,8 +651,9 @@ object Similarity {
     * the artifact under test). */
   private def centArtifact(s: SparkSession, dir: String, family: String,
                            params: Seq[String])(src: => DataFrame): String =
-    ArtifactStore.materialized(s, family, embFingerprint(s, dir),
-      (dir +: params): _*)(out => writeIvfCentroids(src, out))
+    ArtifactStore.materialized(s, family,
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(
+      out => writeIvfCentroids(src, out))
 
   /** Q296 — IVF postings ROUND TRIP: q16c's inverted lists WRITTEN as
     * a list-partitioned parquet generation, read back, and the probe
@@ -714,7 +715,8 @@ object Similarity {
         Seq(nCentroids.toString, modN.toString))(
         sliceCentroids(e.filter(!inc), nCentroids)))
     val base = ArtifactStore.materialized(s, "ivf_postings_base",
-      embFingerprint(s, dir), dir, nCentroids.toString, modN.toString)(
+      Memo.table(s, s"$dir/embeddings.parquet"),
+      dir, nCentroids.toString, modN.toString)(
       out => writeIvfPostings(listsFor(e.filter(!inc), cent), out))
     val delta = ArtifactStore.invocationDir("ivf_postings_delta",
       dir, nCentroids.toString, modN.toString)
@@ -740,7 +742,7 @@ object Similarity {
         sliceCentroids(e.filter(!inc), nCentroids)))
     def gen(tag: String, slice: DataFrame): String =
       ArtifactStore.materialized(s, s"${fam}_$tag",
-        embFingerprint(s, dir), (dir +: params): _*)(
+        Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(
         out => writeIvfPostings(listsFor(slice, cent), out))
     (cent, Seq(gen("base", e.filter(!inc)), gen("delta", e.filter(inc))))
   }
@@ -827,7 +829,7 @@ object Similarity {
         e.filter(col("vec_id") < nCentroids)
           .select(col("vec_id").as("cid"), col("de").as("ce"))))
     val base = ArtifactStore.materialized(s, "ivf_postings_allbase",
-      embFingerprint(s, dir), dir, nCentroids.toString)(
+      Memo.table(s, s"$dir/embeddings.parquet"), dir, nCentroids.toString)(
       out => writeIvfPostings(listsFor(e, cent), out))
     val purgedIds = e.filter(memberVec("purge:", modN))
       .select(col("vec_id"))
@@ -860,7 +862,7 @@ object Similarity {
     val cent = centArtifact(s, dir, "ivf_postings_stream_cent", params)(
       sliceCentroids(e.filter(!inc), nCentroids))
     val base = ArtifactStore.materialized(s, "ivf_postings_stream_base",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPostings(listsFor(e.filter(!inc),
         readIvfCentroids(s, cent)), out))
     (cent, base, e.filter(inc))
@@ -956,8 +958,8 @@ object Similarity {
     val e = embDoubles(s, dir)
     val inc = incomingVec(modN)
     val art = ArtifactStore.materialized(s, "pq_frozen_cb",
-      embFingerprint(s, dir), dir, nSub.toString, subDim.toString,
-      codebookK.toString, modN.toString)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), dir, nSub.toString,
+      subDim.toString, codebookK.toString, modN.toString)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     pqEncodeAgainst(pqSubvectors(e.filter(inc), nSub, subDim),
@@ -1028,8 +1030,8 @@ object Similarity {
     val e = embDoubles(s, dir)
     val inc = incomingVec(modN)
     val art = ArtifactStore.materialized(s, "pq_drift_cb",
-      embFingerprint(s, dir), dir, nSub.toString, subDim.toString,
-      codebookK.toString, modN.toString)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), dir, nSub.toString,
+      subDim.toString, codebookK.toString, modN.toString)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     def meanOf(sumCol: Column, nCol: Column): Column =
@@ -1078,7 +1080,7 @@ object Similarity {
     val params = Seq(nSub.toString, subDim.toString, codebookK.toString,
       modN.toString)
     val cb1 = ArtifactStore.materialized(s, "pq_rs_cb1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val root = ArtifactStore.invocationDir("pq_manifest_rs",
@@ -1116,7 +1118,7 @@ object Similarity {
     val params = Seq(nSub.toString, subDim.toString, codebookK.toString,
       modN.toString)
     val cb1 = ArtifactStore.materialized(s, "pq_tt_cb1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val root = ArtifactStore.invocationDir("pq_manifest_tt",
@@ -1272,11 +1274,11 @@ object Similarity {
     // corpus coded under it — committed so the switch has a real
     // stale pair to NOT serve
     val cb1 = ArtifactStore.materialized(s, "ivfpq_cb1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val p1 = ArtifactStore.materialized(s, "ivfpq_posts1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPqPostings(codedListsFor(e, cent, readPqCodebook(s, cb1),
         nSub, subDim), out))
     val root = ArtifactStore.invocationDir("ivfpq_manifest",
@@ -1325,12 +1327,12 @@ object Similarity {
       centArtifact(s, dir, s"${fam}_cent", params)(
         sliceCentroids(e.filter(!inc), nCentroids)))
     val cb = ArtifactStore.materialized(s, s"${fam}_cb",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     def gen(tag: String, slice: DataFrame): String =
       ArtifactStore.materialized(s, s"${fam}_$tag",
-        embFingerprint(s, dir), (dir +: params): _*)(out =>
+        Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
         writeIvfPqPostings(codedListsFor(slice, cent,
           readPqCodebook(s, cb), nSub, subDim), out))
     (cent, cb,
@@ -1459,10 +1461,10 @@ object Similarity {
         e.filter(col("vec_id") < nCentroids)
           .select(col("vec_id").as("cid"), col("de").as("ce"))))
     val cb = ArtifactStore.materialized(s, "ivfpq_purge_cb",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e, nSub, subDim, codebookK), out))
     val base = ArtifactStore.materialized(s, "ivfpq_purge_base",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPqPostings(codedListsFor(e, cent, readPqCodebook(s, cb),
         nSub, subDim), out))
     val root = ArtifactStore.invocationDir("ivfpq_manifest_purge",
@@ -1506,11 +1508,11 @@ object Similarity {
     val cent = centArtifact(s, dir, "ivfpq_stream_cent", params)(
       sliceCentroids(e.filter(!inc), nCentroids))
     val cb = ArtifactStore.materialized(s, "ivfpq_stream_cb",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val base = ArtifactStore.materialized(s, "ivfpq_stream_base",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPqPostings(codedListsFor(e.filter(!inc),
         readIvfCentroids(s, cent), readPqCodebook(s, cb),
         nSub, subDim), out))
@@ -1722,11 +1724,11 @@ object Similarity {
       centArtifact(s, dir, "ivfpq_tt_cent", params)(
         sliceCentroids(e.filter(!inc), nCentroids)))
     val cb1 = ArtifactStore.materialized(s, "ivfpq_tt_cb1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val p1 = ArtifactStore.materialized(s, "ivfpq_tt_posts1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPqPostings(codedListsFor(e, cent, readPqCodebook(s, cb1),
         nSub, subDim), out))
     val root = ArtifactStore.invocationDir("ivfpq_manifest_tt",
@@ -1829,14 +1831,14 @@ object Similarity {
     // THREE-family manifest so the retrain has a real stale triple to
     // NOT serve
     val q1 = ArtifactStore.materialized(s, "ivfpq_rt_cent1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfCentroids(sliceCentroids(e.filter(!inc), nCentroids), out))
     val cb1 = ArtifactStore.materialized(s, "ivfpq_rt_cb1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writePqCodebook(pqTrainedCodebook(e.filter(!inc), nSub, subDim,
         codebookK), out))
     val p1 = ArtifactStore.materialized(s, "ivfpq_rt_posts1",
-      embFingerprint(s, dir), (dir +: params): _*)(out =>
+      Memo.table(s, s"$dir/embeddings.parquet"), (dir +: params): _*)(out =>
       writeIvfPqPostings(codedListsFor(e, readIvfCentroids(s, q1),
         readPqCodebook(s, cb1), nSub, subDim), out))
     val root = ArtifactStore.invocationDir("ivfpq_manifest_rtq",
@@ -2569,7 +2571,7 @@ object Similarity {
         transform(col("embedding"), x => x.cast("double")).as("de"))
     val subs = pqSubvectors(e, nSub, subDim)
     val art = ArtifactStore.materialized(s, "pq_codebook",
-      embFingerprint(s, dir),
+      Memo.table(s, s"$dir/embeddings.parquet"),
       dir, nSub.toString, subDim.toString, codebookK.toString)(out =>
       writePqCodebook(pqCodebookOf(subs, codebookK), out))
     pqSearch(e, subs, readPqCodebook(s, art), k)
@@ -2740,35 +2742,16 @@ object Similarity {
     * eviction needs no storage release and handed-out results can
     * never dangle.
     */
-  private val coresetMemo = new GraftMemo[
-    (String, String, String, Long),
-    (List[(Long, Seq[Double])], Seq[(Int, Long, Option[Double])])](cap = 8)
+  private[graft] val coresetMemo =
+    new Memo[(List[(Long, Seq[Double])], Seq[(Int, Long, Option[Double])])](
+      "coreset", cap = 8)
 
-  /** embeddings.parquet fingerprint from filesystem METADATA only
-    * (the Graph.dataFingerprint pattern). None on a listing failure →
-    * compute without caching (round-11 ADVICE). */
-  private def embFingerprint(s: SparkSession, dir: String): Option[Long] =
-    MemoKey.fingerprint(s, s"$dir/embeddings.parquet")
-
-  /** Test hook: drop memoized selections (pure data — nothing to
-    * release). */
-  private[graft] def clearCoresetMemo(): Unit = coresetMemo.clear()
-
+  /** The full-corpus q280/q281 selection; the q293 incremental chain
+    * keys its own variant (`coresetIncremental`). */
   private def selectCenters(s: SparkSession, dir: String, k: Int)
       : (List[(Long, Seq[Double])], Seq[(Int, Long, Option[Double])]) =
-    memoSelection(s, dir, s"all:$k")(runSelection(s, dir, k))
-
-  /** The coresetMemo wrapper: `variant` discriminates which selection
-    * the entry holds (full-corpus q280/q281 vs the q293 incremental
-    * chain). Fingerprint None bypasses (compute without caching). */
-  private def memoSelection(s: SparkSession, dir: String, variant: String)
-      (compute: => (List[(Long, Seq[Double])], Seq[(Int, Long, Option[Double])]))
-      : (List[(Long, Seq[Double])], Seq[(Int, Long, Option[Double])]) =
-    embFingerprint(s, dir) match {
-      case None => compute // no fingerprint: bypass memo (pure data)
-      case Some(fp) =>
-        coresetMemo.get((MemoKey.session(s), dir, variant, fp))(compute)
-    }
+    coresetMemo.get(s, Memo.table(s, s"$dir/embeddings.parquet"), dir,
+      s"all:$k")(runSelection(s, dir, k))
 
   /** The shared Q280/Q281 greedy selection loop: returns the selected
     * (vec_id, vector) centers in pick order plus the per-round
@@ -2940,13 +2923,14 @@ object Similarity {
     import s.implicits._
     val incoming = Relational.scrambleMod(graft.functions.TextHash.polyHash(
       concat(lit("inc:"), col("vec_id").cast("string")))) % modN === 0L
-    val art = ArtifactStore.materialized(s, "coreset_day1",
-      embFingerprint(s, dir), dir, k1.toString, modN.toString)(out => {
+    val emb = Memo.table(s, s"$dir/embeddings.parquet")
+    val art = ArtifactStore.materialized(s, "coreset_day1", emb,
+      dir, k1.toString, modN.toString)(out => {
       val (sel, audit) =
         greedySelect(embDoubles(s, dir).filter(!incoming), k1, Nil, Nil)
       writeCoreset(s, sel, audit, out)
     })
-    val (_, rows) = memoSelection(s, dir, s"incr:$k1:$k2:$modN") {
+    val (_, rows) = coresetMemo.get(s, emb, dir, s"incr:$k1:$k2:$modN") {
       val day1 = readCoreset(s, art).orderBy(col("sel_round")).collect()
       if (day1.isEmpty) (Nil, Nil) // empty existing stratum: the
       // oracle's seed CTE is empty and every later argmax degrades to

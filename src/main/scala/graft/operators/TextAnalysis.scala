@@ -856,72 +856,23 @@ object TextAnalysis {
     * IDENTICAL training loop ("all"), Q283 adds the existing-shard
     * training ("existing") and the incoming replay ("incoming"), and
     * Bench's interleaved passes re-invoke each query — the memo pays
-    * each loop once per session instead of per invocation. Same
-    * discipline as Graph.lpMemo (round-9/10 adjudicated):
-    * access-ordered LRU bounded at 6 entries with explicit checkpoint
-    * release on eviction; the metadata-only fingerprint makes an
-    * in-place corpus rewrite miss the memo instead of serving stale
-    * blocks; training is deterministic, so a hit is bitwise the table
-    * a recompute would build. Ownership contract (as lpMemo): the
-    * memo owns the segmentation's checkpoint blocks — plans built on
-    * a training are consumed within the requesting query; a caller
-    * holding one unexecuted across 4+ other keyed trainings must
-    * checkpoint its own copy.
+    * each loop once per session instead of per invocation. The memo
+    * owns the segmentation's checkpoint blocks ([[Memo]]); training is
+    * deterministic, so a hit is bitwise the table a recompute would
+    * build.
     */
-  private val bpeMemo = new GraftMemo[
-    (String, String, Int, String, Long),
-    (DataFrame, Seq[(Int, String, String, String, Long)])](
-    // bound raised 4 → 6 in round 12: one corpus dir owns up to THREE
-    // entries (shards "all"/"existing"/"incoming"), and the bound must
-    // hold a full dir's working set plus one spec temp-dir without
-    // thrashing the bench's hot entries
-    cap = 6, release = v => CheckpointBlocks.release(v._1),
-    dead = v => v._1.sparkSession.sparkContext.isStopped)
-
-  /** documents.parquet fingerprint from filesystem METADATA only —
-    * the Graph.dataFingerprint pattern pointed at the corpus table.
-    * None on a listing failure → compute without caching (round-11
-    * ADVICE: never memoize under an error-derived key).
-    */
-  private def docsFingerprint(s: SparkSession, dir: String): Option[Long] =
-    MemoKey.fingerprint(s, s"$dir/documents.parquet")
-
-  /** Test hook: drop memoized trainings, releasing their checkpoint
-    * blocks (mirrors Graph.clearLpMemo). */
-  private[graft] def clearBpeMemo(): Unit = {
-    bpeMemo.clear()
-    clearFrozenMemo() // keep "cold" cold for the q283 plan pins
-  }
-
-  /** Memo wrapper shared by the full-corpus training (q277/q279), the
-    * existing-shard training and the incoming-shard replay (q283):
-    * `shard` discriminates which segmentation the entry holds. The
-    * value's DataFrame is the memo-owned checkpointed segmentation;
-    * the Seq is the merge table that produced it.
-    */
-  private def memoSeg(s: SparkSession, dir: String, merges: Int, shard: String,
-                      fingerprint: Option[Long])
-      (compute: => (DataFrame, Seq[(Int, String, String, String, Long)]))
-      : (DataFrame, Seq[(Int, String, String, String, Long)]) =
-    fingerprint match {
-      case None =>
-        // no fingerprint: bypass memo — and ADOPT the ownerless
-        // checkpointed segmentation so its blocks release once the
-        // requesting query materializes (round-12 ADVICE: the bypass
-        // path leaked them until session end)
-        val v = compute
-        (CheckpointOrphans.adopt(v._1), v._2)
-      case Some(fp) =>
-        // training runs OUTSIDE the map lock (GraftMemo) — the
-        // round-12 ADVICE fix: the old synchronized-block compute
-        // serialized unrelated concurrent queries behind one loop
-        bpeMemo.get((MemoKey.session(s), dir, merges, shard, fp))(compute)
-    }
+  private[graft] val bpeMemo =
+    new Memo[(DataFrame, Seq[(Int, String, String, String, Long)])](
+      // bound raised 4 → 6 in round 12: one corpus dir owns up to THREE
+      // entries (shards "all"/"existing"/"incoming"), and the bound must
+      // hold a full dir's working set plus one spec temp-dir without
+      // thrashing the bench's hot entries
+      "bpe", cap = 6, v => Some(v._1))
 
   private def trainedSeg(s: SparkSession, dir: String, merges: Int)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) =
-    memoSeg(s, dir, merges, "all", docsFingerprint(s, dir))(
-      trainSeg(docs(s, dir), merges))
+    bpeMemo.get(s, Memo.table(s, s"$dir/documents.parquet"), dir, merges,
+      "all")(trainSeg(docs(s, dir), merges))
 
   /** Frozen merge tables are PURE DRIVER DATA (≤ merges rows), so
     * they get their own memo: the existing-shard training's
@@ -933,27 +884,17 @@ object TextAnalysis {
     * because it changes the existing/incoming split); eviction needs
     * no release.
     */
-  private val frozenMemo = new GraftMemo[
-    (String, String, Int, Int, Long),
-    Seq[(Int, String, String, String, Long)]](cap = 8)
+  private[graft] val frozenMemo =
+    new Memo[Seq[(Int, String, String, String, Long)]]("bpe_frozen", cap = 8)
 
-  private[graft] def clearFrozenMemo(): Unit = frozenMemo.clear()
-
-  private def frozenMerges(s: SparkSession, dir: String, merges: Int,
-                           modN: Int, fingerprint: Option[Long],
-                           existing: => DataFrame)
-      : Seq[(Int, String, String, String, Long)] = {
-    def compute = {
+  private def frozenMerges(s: SparkSession, docsT: MemoTable, dir: String,
+                           merges: Int, modN: Int, existing: => DataFrame)
+      : Seq[(Int, String, String, String, Long)] =
+    frozenMemo.get(s, docsT, dir, merges, modN) {
       val (seg, rows) = trainSeg(existing, merges)
       CheckpointBlocks.release(seg) // only the merge LIST is frozen and shipped
       rows
     }
-    fingerprint match {
-      case None => compute
-      case Some(fp) =>
-        frozenMemo.get((MemoKey.session(s), dir, merges, modN, fp))(compute)
-    }
-  }
 
   /** Word-frequency vocabulary of a documents slice — the single
     * corpus pass every BPE variant starts from. */
@@ -1153,9 +1094,9 @@ object TextAnalysis {
     // per-lookup would let an in-place corpus rewrite between the two
     // land frozen merges from the OLD corpus in an entry keyed by the
     // NEW fingerprint — a permanently stale mix (review finding)
-    val fp = docsFingerprint(s, dir)
-    val frozen = frozenMerges(s, dir, merges, modN, fp, existing)
-    val (seg, _) = memoSeg(s, dir, merges, s"incoming:$modN", fp)(
+    val docsT = Memo.table(s, s"$dir/documents.parquet")
+    val frozen = frozenMerges(s, docsT, dir, merges, modN, existing)
+    val (seg, _) = bpeMemo.get(s, docsT, dir, merges, s"incoming:$modN")(
       (replaySeg(incoming, frozen.map(m => (m._2, m._3))), frozen))
     fertilityOf(incoming, seg)
   }
@@ -1284,19 +1225,20 @@ object TextAnalysis {
     val d = docs(s, dir).withColumn("incoming", isInc)
     val existing = d.filter(!col("incoming")).drop("incoming")
     val incoming = d.filter(col("incoming")).drop("incoming")
-    val fp = docsFingerprint(s, dir)
+    val docsT = Memo.table(s, s"$dir/documents.parquet")
     // ArtifactStore since round 13 (review finding): the old local
     // scratch key was the 32-bit Tuple.hashCode — collidable across
     // corpus dirs — and overwrote one directory per invocation
-    val out = ArtifactStore.materialized(s, "bpe_merges", fp,
-      dir, merges.toString, modN.toString)(o =>
-      writeMergeTable(s, frozenMerges(s, dir, merges, modN, fp, existing), o))
+    val out = ArtifactStore.materialized(s, "bpe_merges", docsT,
+      dir, merges.toString, modN.toString)(o => writeMergeTable(s,
+        frozenMerges(s, docsT, dir, merges, modN, existing), o))
     val shipped = readMergeTable(s, out)
     // a DISTINCT memo tag from q283: sharing "incoming:modN" would
     // memo-hit q283's replay and silently bypass the shipped artifact
     // — exactly the coverage this query exists to provide
-    val (seg, _) = memoSeg(s, dir, merges, s"incoming-artifact:$modN", fp)(
-      (replaySeg(incoming, shipped.map(m => (m._2, m._3))), shipped))
+    val (seg, _) =
+      bpeMemo.get(s, docsT, dir, merges, s"incoming-artifact:$modN")(
+        (replaySeg(incoming, shipped.map(m => (m._2, m._3))), shipped))
     fertilityOf(incoming, seg)
   }
 

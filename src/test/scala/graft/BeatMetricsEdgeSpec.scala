@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{BeatMetrics, Envelopes, PeakDetect, Smoothing}
 import Fingerprints.print
+import TestSignals.{recording, sig}
 
 /** Bit-level, order-insensitive fingerprints of `detectPeaks`,
   * `candidateProminences` and `metrics` (with and without markers) over
@@ -125,24 +126,5 @@ class BeatMetricsEdgeSpec extends SparkSpec {
       assert(full.filter(col(cols.last).isNotNull).count() > 0, cols)
       assert(print(df.select(cols.map(col): _*)) === print(full.select(cols.map(col): _*)), cols)
     }
-  }
-
-  private def sig(n: Int, ch: Int = 0, e: String = "e") = {
-    val rng = new java.util.Random(1000L * ch + n)
-    (0 until n).map { i =>
-      SignalRow(e, ch, i.toLong, i / 100.0,
-        1000.0 + 300.0 * math.sin(i / (15.0 + ch)) + rng.nextGaussian() * 5)
-    }.toDS().toDF()
-  }
-
-  private def recording(seed: Long) = {
-    val rng = new java.util.Random(seed)
-    (0 until 9).flatMap { ch =>
-      (0 until 3000).map { i =>
-        val beat = 400.0 * math.exp(-math.pow((i + 37 * ch) % 700 - 350.0, 2) / 500.0)
-        SignalRow("rec", ch, i.toLong, i / 100.0,
-          1000.0 + beat + rng.nextGaussian() * 10)
-      }
-    }.toDS().toDF()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Envelopes, Smoothing}
+import TestSignals.{recording, sig}
 
 class EnvelopesSpec extends SparkSpec {
   import spark.implicits._
@@ -185,24 +186,5 @@ class EnvelopesEdgeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString()
     assert("\\bExchange\\b".r.findAllIn(p).size === 1, p)
     assert(!p.contains("Join") && !p.contains("AppendColumns"), p)
-  }
-
-  private def sig(n: Int, ch: Int = 0, e: String = "e") = {
-    val rng = new java.util.Random(1000L * ch + n)
-    (0 until n).map { i =>
-      SignalRow(e, ch, i.toLong, i / 100.0,
-        1000.0 + 300.0 * math.sin(i / (15.0 + ch)) + rng.nextGaussian() * 5)
-    }.toDS().toDF()
-  }
-
-  private def recording(seed: Long) = {
-    val rng = new java.util.Random(seed)
-    (0 until 9).flatMap { ch =>
-      (0 until 3000).map { i =>
-        val beat = 400.0 * math.exp(-math.pow((i + 37 * ch) % 700 - 350.0, 2) / 500.0)
-        SignalRow("rec", ch, i.toLong, i / 100.0,
-          1000.0 + beat + rng.nextGaussian() * 10)
-      }
-    }.toDS().toDF()
   }
 }

@@ -35,3 +35,31 @@ object Fingerprints {
     (df.schema.simpleString, rows.length, rows.map(rowHash).sum)
   }
 }
+
+/** The seeded inputs the fingerprint specs are pinned on. */
+object TestSignals {
+  import TestSpark.spark.implicits._
+
+  /** One channel of `n` samples: a sine of period 2π(15 + ch) around
+    * 1000 plus Gaussian noise seeded by (ch, n). */
+  def sig(n: Int, ch: Int = 0, e: String = "e"): DataFrame = {
+    val rng = new java.util.Random(1000L * ch + n)
+    (0 until n).map { i =>
+      SignalRow(e, ch, i.toLong, i / 100.0,
+        1000.0 + 300.0 * math.sin(i / (15.0 + ch)) + rng.nextGaussian() * 5)
+    }.toDS().toDF()
+  }
+
+  /** A 9 × 3,000-sample recording with one beat every 700 samples per
+    * channel (offset 37 samples per channel) and seeded noise. */
+  def recording(seed: Long): DataFrame = {
+    val rng = new java.util.Random(seed)
+    (0 until 9).flatMap { ch =>
+      (0 until 3000).map { i =>
+        val beat = 400.0 * math.exp(-math.pow((i + 37 * ch) % 700 - 350.0, 2) / 500.0)
+        SignalRow("rec", ch, i.toLong, i / 100.0,
+          1000.0 + beat + rng.nextGaussian() * 10)
+      }
+    }.toDS().toDF()
+  }
+}

@@ -311,7 +311,7 @@ class GraphSpec extends SparkSpec {
       // identical to a fresh-fixpoint run. First call above populated
       // the memo; compare a memo-hit (after an explicit q126 run,
       // the bench ordering) and a cold memo-miss against it.
-      Graph.clearLpMemo()
+      Graph.lpMemo.clear()
       Graph.lpCommunities(spark, dir).collect() // q126 first, as in Bench
       val hit = Graph.modularity(spark, dir).collect()
         .map(r => r.getAs[Long]("community") ->
@@ -319,7 +319,7 @@ class GraphSpec extends SparkSpec {
             r.getAs[Long]("deg_c"), r.getAs[Double]("modularity")))).toMap
       assert(hit === out)
     } finally {
-      Graph.clearLpMemo()
+      Graph.lpMemo.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -1,11 +1,13 @@
 package graft
 
-import graft.operators.{CheckpointOrphans, GraftMemo, Graph}
+import graft.operators.{ArtifactStore, CheckpointOrphans, GraftMemo, Graph,
+  Memo, MemoTableUnreadable}
 
-/** Unit pins for the round-13 memo rework (round-12 ADVICE):
-  * compute-outside-lock, LRU release discipline, and the
-  * release-after-materialization path for fingerprint-bypass
-  * checkpoints.
+/** Unit pins for the memo layer: compute-outside-lock and the LRU
+  * release discipline (round-12 ADVICE), the release-after-
+  * materialization path for per-query checkpoints, and the one
+  * [[Memo]] entry point — its clear hook, its failure rule and the
+  * write-once artifact family on it.
   */
 class MemoSpec extends SparkSpec {
 
@@ -121,17 +123,17 @@ class MemoSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  test("clearSpineMemo, clearEdgeMemo and clearLpMemo release every block they hold") {
+  test("Memo.clear releases every block the spine, edge and LP memos hold") {
     import spark.implicits._
     val sc = spark.sparkContext
-    SparkEntry.clearSpineMemo(); Graph.clearEdgeMemo(); Graph.clearLpMemo()
+    SparkEntry.spineMemo.clear(); Graph.edgeMemo.clear(); Graph.lpMemo.clear()
     val before = sc.getPersistentRDDs.keySet.toSet
     def added: Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
     // q7b memoizes the enriched and the detected spine tables
     SparkEntry.queries("q7b_peaks")(spark, "").collect()
     assert(added.size === 2, "the spine memo must hold both tables")
-    SparkEntry.clearSpineMemo()
-    assert(added.isEmpty, "clearSpineMemo must release every spine block")
+    SparkEntry.spineMemo.clear()
+    assert(added.isEmpty, "clearing the spine memo must release every spine block")
     val dir = java.nio.file.Files.createTempDirectory("memoclear").toString
     try {
       // parts 1 and 2 share two orders: one edge at the support floor
@@ -140,12 +142,75 @@ class MemoSpec extends SparkSpec {
       // LP memoizes its labels and the edge table it was derived from
       Graph.lpCommunities(spark, dir).collect()
       assert(added.size === 2, "the edge and LP memos must hold one table each")
-      Graph.clearEdgeMemo()
-      assert(added.size === 1, "clearEdgeMemo must release the edge table")
-      Graph.clearLpMemo()
-      assert(added.isEmpty, "clearLpMemo must release the label table")
+      Graph.edgeMemo.clear()
+      assert(added.size === 1, "clearing the edge memo must release the edge table")
+      Graph.lpMemo.clear()
+      assert(added.isEmpty, "clearing the LP memo must release the label table")
     } finally {
-      Graph.clearEdgeMemo(); Graph.clearLpMemo()
+      Graph.edgeMemo.clear(); Graph.lpMemo.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("Memo: a missing input table fails with the named error; once written, the call memoizes") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("memomissing").toString
+    Graph.edgeMemo.clear(); Graph.lpMemo.clear()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def added: Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    try {
+      val e = intercept[MemoTableUnreadable](Graph.lpCommunities(spark, dir))
+      assert(e.getMessage.contains("'graph_lp'") &&
+        e.getMessage.contains(s"$dir/lineitem.parquet"), e.getMessage)
+      assert(added.isEmpty, "a failed fingerprint must memoize nothing")
+      Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L)).toDF("l_orderkey", "l_partkey")
+        .write.parquet(s"$dir/lineitem.parquet")
+      val first = Graph.lpCommunities(spark, dir)
+      assert(first.collect().length === 2, "one label row per node")
+      assert(added.size === 2, "the edge and LP memos must hold one table each")
+      assert(Graph.lpCommunities(spark, dir) eq first, "the retry must memoize")
+      assert(added.size === 2)
+    } finally {
+      Graph.edgeMemo.clear(); Graph.lpMemo.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("ArtifactStore.materialized: one write per key, concurrent callers included; a rewrite writes again") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memoartifact").toString
+    def corpus(texts: String*): Unit = texts.toDF("text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writing = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    def call(): String = ArtifactStore.materialized(spark, "memospec",
+        Memo.table(spark, s"$dir/documents.parquet"), dir, "p") { _ =>
+      writes.incrementAndGet()
+      writing.countDown()
+      assert(release.await(10, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      corpus("a b")
+      val fa = pool.submit(() => call())
+      assert(writing.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      val fb = pool.submit(() => call()) // same key while the write runs
+      Thread.sleep(200)
+      release.countDown()
+      val d = fa.get(15, java.util.concurrent.TimeUnit.SECONDS)
+      assert(fb.get(15, java.util.concurrent.TimeUnit.SECONDS) === d)
+      assert(call() === d)
+      assert(writes.get() === 1, "same-key calls must share one write")
+      corpus("c d") // in-place rewrite: new files, new fingerprint
+      val d2 = call()
+      assert(d2 !== d)
+      assert(writes.get() === 2, "a rewritten table must be written again")
+      assert(call() === d2)
+      assert(writes.get() === 2)
+    } finally {
+      pool.shutdownNow()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

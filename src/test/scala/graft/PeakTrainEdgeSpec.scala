@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{BeatMetrics, Envelopes, PeakDetect, Smoothing}
+import TestSignals.recording
 
 /** Bit-level, order-insensitive fingerprints ([[Fingerprints]]) of the
   * BeatMetrics functions that read the RR series (the q229–q276
@@ -193,15 +194,4 @@ class PeakTrainEdgeSpec extends SparkSpec {
 
   private def flat(e: String, ch: Int, n: Int) =
     (0 until n).map(i => SignalRow(e, ch, i.toLong, i / 100.0, 1000.0)).toDS().toDF()
-
-  private def recording(seed: Long) = {
-    val rng = new java.util.Random(seed)
-    (0 until 9).flatMap { ch =>
-      (0 until 3000).map { i =>
-        val beat = 400.0 * math.exp(-math.pow((i + 37 * ch) % 700 - 350.0, 2) / 500.0)
-        SignalRow("rec", ch, i.toLong, i / 100.0,
-          1000.0 + beat + rng.nextGaussian() * 10)
-      }
-    }.toDS().toDF()
-  }
 }

@@ -616,8 +616,8 @@ class PlanQualitySpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
-    graft.operators.Similarity.clearCoresetMemo()
-    graft.operators.ArtifactStore.clearMaterialized()
+    graft.operators.Similarity.coresetMemo.clear()
+    graft.operators.ArtifactStore.artifacts.clear()
     try {
       val (k1, k2) = (8, 12)
       // COLD: day-1 selection over the existing stratum (seed + k1-1
@@ -631,7 +631,7 @@ class PlanQualitySpec extends SparkSpec {
       // WARM artifact (selection memo cleared): day-1 must NOT re-run —
       // only the k2-k1 extension rounds scan the corpus, seeded from
       // the persisted centers
-      graft.operators.Similarity.clearCoresetMemo()
+      graft.operators.Similarity.coresetMemo.clear()
       SparkEntry.queries("q293_coreset_incr")(spark, sfDir)
       org.apache.spark.graftshim.TaskCpuMeter.drain(spark.sparkContext)
       val warm = seen.asScala.count(_.contains("embeddings.parquet"))
@@ -1266,7 +1266,7 @@ class PlanQualitySpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
-    graft.operators.Similarity.clearCoresetMemo() // count a COLD selection
+    graft.operators.Similarity.coresetMemo.clear() // count a COLD selection
     try {
       val k = 8
       val df = SparkEntry.queries("q280_coreset")(spark, sfDir)
@@ -1319,7 +1319,7 @@ class PlanQualitySpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
-    graft.operators.TextAnalysis.clearBpeMemo() // count a COLD training
+    graft.operators.TextAnalysis.bpeMemo.clear() // count a COLD training
     try {
       val df = SparkEntry.queries("q277_bpe_train")(spark, sfDir)
       // the execution-listener bus is async — drain before counting
@@ -1352,7 +1352,7 @@ class PlanQualitySpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
-    graft.operators.TextAnalysis.clearBpeMemo() // count a COLD training
+    graft.operators.TextAnalysis.bpeMemo.clear() // count a COLD training
     try {
       val df = SparkEntry.queries("q279_bpe_encode")(spark, sfDir)
       org.apache.spark.graftshim.TaskCpuMeter.drain(spark.sparkContext)
@@ -1383,7 +1383,8 @@ class PlanQualitySpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
-    graft.operators.TextAnalysis.clearBpeMemo() // count a COLD run
+    graft.operators.TextAnalysis.bpeMemo.clear() // count a COLD run
+    graft.operators.TextAnalysis.frozenMemo.clear()
     try {
       val df = SparkEntry.queries("q283_bpe_frozen")(spark, sfDir)
       org.apache.spark.graftshim.TaskCpuMeter.drain(spark.sparkContext)

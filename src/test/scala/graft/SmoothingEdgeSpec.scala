@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.lit
 import graft.functions.SavitzkyGolay
 import graft.operators.Smoothing
 import Fingerprints.print
+import TestSignals.{recording, sig}
 
 /** Bit-level fingerprints of `Smoothing.withSmooth` over its whole
   * output frame. They were recorded from the window formulation of the
@@ -119,24 +120,5 @@ class SmoothingEdgeSpec extends SparkSpec {
       .map(t => String.valueOf(t.getMessage)).toSeq
     assert(msgs.exists(m => m.contains("dense 0-based sample_idx") &&
       m.contains("channel (experiment_id=x, channel=4)")), msgs.mkString("\n"))
-  }
-
-  private def sig(n: Int, ch: Int = 0, e: String = "e") = {
-    val rng = new java.util.Random(1000L * ch + n)
-    (0 until n).map { i =>
-      SignalRow(e, ch, i.toLong, i / 100.0,
-        1000.0 + 300.0 * math.sin(i / (15.0 + ch)) + rng.nextGaussian() * 5)
-    }.toDS().toDF()
-  }
-
-  private def recording(seed: Long) = {
-    val rng = new java.util.Random(seed)
-    (0 until 9).flatMap { ch =>
-      (0 until 3000).map { i =>
-        val beat = 400.0 * math.exp(-math.pow((i + 37 * ch) % 700 - 350.0, 2) / 500.0)
-        SignalRow("rec", ch, i.toLong, i / 100.0,
-          1000.0 + beat + rng.nextGaussian() * 10)
-      }
-    }.toDS().toDF()
   }
 }

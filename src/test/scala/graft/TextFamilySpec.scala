@@ -682,8 +682,8 @@ class TextFamilySpec extends SparkSpec {
     }
   }
 
-  test("bpe memo: train and encode share one training; clearBpeMemo releases it") {
-    graft.operators.TextAnalysis.clearBpeMemo()
+  test("bpe memo: train and encode share one training; clearing it releases it") {
+    graft.operators.TextAnalysis.bpeMemo.clear()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     withDocsDir(Seq("low lower low")) { dir =>
       graft.operators.TextAnalysis.bpeTrain(spark, dir, merges = 2).collect()
@@ -696,14 +696,14 @@ class TextFamilySpec extends SparkSpec {
       assert(leaked.size <= 1,
         s"expected only the memoized segmentation: ${leaked.values.map(_.name)}")
     }
-    graft.operators.TextAnalysis.clearBpeMemo()
+    graft.operators.TextAnalysis.bpeMemo.clear()
     val after = spark.sparkContext.getPersistentRDDs -- before
     assert(after.isEmpty,
-      s"clearBpeMemo must release every block: ${after.values.map(_.name)}")
+      s"clearing the bpe memo must release every block: ${after.values.map(_.name)}")
   }
 
   test("bpe memo: an in-place corpus rewrite misses the memo (no stale merges)") {
-    graft.operators.TextAnalysis.clearBpeMemo()
+    graft.operators.TextAnalysis.bpeMemo.clear()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bpememo").toString
     def write(texts: Seq[String]): Unit = texts.zipWithIndex
@@ -724,7 +724,7 @@ class TextFamilySpec extends SparkSpec {
         "rewriting the corpus in place must retrain, not serve stale merges")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      graft.operators.TextAnalysis.clearBpeMemo()
+      graft.operators.TextAnalysis.bpeMemo.clear()
     }
   }
 }
